@@ -2,19 +2,19 @@
 the sf tables.
 
 Deterministic corpus (hash-derived vectors, no RNG): n vectors, dim 64.
-Measures the two assignment forms at their intended operating points:
+Times the two cell-assignment kernels side by side over the full corpus,
+at k=64 and k=256, best-of-3 interleaved:
 
-- `ivf_assign` (declarative broadcast join + max_by): the ORACLE-exact
-  form. Its dot products are Catalyst higher-order functions — interpreted
-  per element, so it is the right tool at small k (oracle parity, plan
-  shape), not the 100 TB kernel.
-- `ivf_assign_vectorized` (Arrow + numpy matmul): the PRODUCTION kernel —
-  zero shuffle, one BLAS matmul per batch; timed at k=64 and k=256 over
-  the full corpus, plus agreement vs the declarative form on a slice.
-- `train_ivf_centroids`: one Lloyd round at k=64 (broadcast assign +
-  64 avg aggregates).
+- `ivf_assign` (Arrow mapInPandas, fold-exact cosine): the ORACLE-exact
+  kernel every query path uses — the left-fold accumulation is bit-
+  identical to the JVM/DuckDB fold, one numpy pass per dimension.
+- `ivf_assign_vectorized` (Arrow pandas UDF, one BLAS matmul per batch):
+  the k-means TRAINING kernel.
 
-Run:  taskset -c 0-31 python -m bench.ann_probe [n_vectors]
+plus their argmax agreement at each k, and one Lloyd round of
+`train_ivf_centroids` at k=64 (BLAS assign + 64 avg aggregates).
+
+Run:  SPARK_GRAFT_DRIVER_MEM=4g python -m bench.ann_probe [n_vectors]
 Prints one PROBE_RESULT json line; numbers live in BENCH/NOTES.md.
 """
 
@@ -49,31 +49,31 @@ def main() -> None:
     emb = synth_vectors(spark, n).repartition(64).localCheckpoint(eager=True)
     out: dict = {"n_vectors": n, "dim": 64}
 
+    kernels = (("fold_exact", similarity.ivf_assign), ("blas", similarity.ivf_assign_vectorized))
     for k in (64, 256):
         cents = similarity.head_centroids(emb, k).localCheckpoint(eager=True)
-        t0 = time.time()
-        assigned = similarity.ivf_assign_vectorized(emb, cents)
-        counts = assigned.groupBy("cell").count()
-        n_cells = counts.count()
-        out[f"vectorized_assign_k{k}_s"] = round(time.time() - t0, 2)
-        out[f"nonempty_cells_k{k}"] = n_cells
+        runs: dict[str, list[float]] = {name: [] for name, _ in kernels}
+        for _ in range(3):
+            for name, assign in kernels:
+                t0 = time.time()
+                assign(emb, cents).groupBy("cell").count().count()
+                runs[name].append(round(time.time() - t0, 2))
+        for name, r in runs.items():
+            out[f"{name}_assign_k{k}_runs_s"] = r
+            out[f"{name}_assign_k{k}_s"] = min(r)
+        a = similarity.ivf_assign(emb, cents).select("vec_id", "cell")
+        b = similarity.ivf_assign_vectorized(emb, cents).select(
+            "vec_id", F.col("cell").alias("cell_b")
+        )
+        agree = a.join(b, "vec_id").agg(F.avg((F.col("cell") == F.col("cell_b")).cast("double")))
+        out[f"fold_exact_vs_blas_agreement_k{k}"] = round(agree.first()[0], 6)
         if k == 64:
-            row = counts.agg(F.max("count").alias("mx"), F.min("count").alias("mn")).collect()[0]
+            counts = b.groupBy("cell_b").count()
+            row = counts.agg(
+                F.count(F.lit(1)).alias("n"), F.max("count").alias("mx"), F.min("count").alias("mn")
+            ).first()
+            out["nonempty_cells_k64"] = row["n"]
             out["cell_balance_max_over_min_k64"] = round(row["mx"] / max(row["mn"], 1), 1)
-
-    # declarative (oracle-exact) form at its operating point: small k
-    slice_df = emb.filter(F.col("vec_id") < 20_000).localCheckpoint(eager=True)
-    cents16 = similarity.head_centroids(slice_df, 16).localCheckpoint(eager=True)
-    t0 = time.time()
-    a = similarity.ivf_assign(slice_df, cents16)
-    a_rows = {r["vec_id"]: r["cell"] for r in a.collect()}
-    out["declarative_assign_20k_k16_s"] = round(time.time() - t0, 2)
-    b_rows = {
-        r["vec_id"]: r["cell"]
-        for r in similarity.ivf_assign_vectorized(slice_df, cents16).collect()
-    }
-    agree = sum(1 for i, c in a_rows.items() if b_rows[i] == c)
-    out["declarative_vs_vectorized_agreement"] = round(agree / len(a_rows), 6)
 
     t0 = time.time()
     similarity.train_ivf_centroids(emb, 64, n_iter=1).count()

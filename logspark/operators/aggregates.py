@@ -24,10 +24,6 @@ def sink_counts(routed: DataFrame, bucket: str = "hour") -> DataFrame:
     )
 
 
-def sink_totals(routed: DataFrame) -> DataFrame:
-    return routed.groupBy("sink").agg(F.count(F.lit(1)).alias("n"))
-
-
 def sessionize(
     df: DataFrame,
     gap_minutes: int = 30,

@@ -267,7 +267,6 @@ def lsh_candidates(
     n_hashes: int = 16,
     bands: int = 4,
     max_bucket: int | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Band the signature, bucket-join: pairs (a, b), a < b, that agree on
     at least one full band. Never materializes the n^2 pair space.
@@ -275,21 +274,11 @@ def lsh_candidates(
     this MUST be set (see cap_buckets); unset preserves exact recall for
     small corpora and the uncapped oracle.
 
-    `materialize` note (r6, measured): the self-join's broadcast build
-    side re-plans the whole signature lineage, so the MinHash kernel
-    appears TWICE in the plan. Materializing the banded set once
-    (localCheckpoint) to fix that was tried and REJECTED by an
-    interleaved best-of-3 A/B at 500k docs: 4.04 s (recompute, default)
-    vs 6.16 s (materialize) — serializing n_docs x bands rows and
-    re-exchanging them costs more than re-running the narrow Arrow
-    kernel, at every scale measured (sf0.1 and 500k). Recomputing
-    narrow per-row work beats moving materialized bytes (guide §1.2);
-    the flag stays as the escape hatch for callers whose upstream is
-    genuinely expensive and non-columnar."""
+    Both join sides recompute the MinHash kernel on purpose: checkpointing
+    the banded set once lost an interleaved A/B at 500k docs (4.04 s
+    recompute vs 6.16 s materialized)."""
     banded = band_signatures(sigs, id_col, n_hashes, bands)
     banded = cap_buckets(banded, max_bucket)
-    if materialize:
-        banded = banded.localCheckpoint(eager=True)
     left = banded.alias("l")
     right = banded.alias("r")
     pairs = (
@@ -731,7 +720,6 @@ def winnow_candidates(
     id_col: str = "doc_id",
     min_shared: int = 2,
     max_bucket: int | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Candidate pairs from winnowing fingerprints: (a, b, n_shared) for
     docs sharing ≥ `min_shared` fingerprints — the MOSS match step, with
@@ -743,14 +731,6 @@ def winnow_candidates(
     boilerplate-ubiquitous hash that would pin one reducer), and the
     pair aggregation is one groupBy with map-side partials."""
     fps = cap_buckets(fps, max_bucket, keys=("fingerprint",))
-    if materialize:
-        # REJECTED as the default (r6, measured): one-kernel-pass via
-        # localCheckpoint of the capped fingerprint set lost the
-        # interleaved A/B at 500k docs 10.16 s vs 4.95 s (recompute) —
-        # the fingerprint set is ~17 rows/doc, and serializing +
-        # re-exchanging it costs far more than the second narrow kernel
-        # pass the broadcast build side plans. See lsh_candidates.
-        fps = fps.localCheckpoint(eager=True)
     l, r = fps.alias("l"), fps.alias("r")
     return (
         l.join(r, "fingerprint")
@@ -766,7 +746,6 @@ def simhash_bands(
     id_col: str = "doc_id",
     n_bands: int = 4,
     max_bucket: int | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Candidate pairs whose 60-bit simhash agrees on ≥1 of n_bands 15-bit
     chunks (Hamming distance ≤ n_bands-1 guaranteed found). Input must carry
@@ -783,10 +762,6 @@ def simhash_bands(
         id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
     banded = cap_buckets(banded, max_bucket)
-    if materialize:
-        # rejected-as-default self-join materialization — see
-        # lsh_candidates' docstring for the measured A/B
-        banded = banded.localCheckpoint(eager=True)
     l, r = banded.alias("l"), banded.alias("r")
     return (
         l.join(r, ["band", "key"])

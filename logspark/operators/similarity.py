@@ -4,16 +4,16 @@ Two paths:
 - **Brute-force cosine top-k** — exact baseline: broadcast the query
   vector(s), dot products via native `zip_with`/`aggregate` (JVM, codegen),
   one narrow pass + a top-k sort. Right answer for small k / few queries.
-- **LSH-bucketed ANN** — scale path: sign-bit sketches over a shared set of
-  anchor vectors bucket the corpus; search touches only the query's bucket.
-  Anchors are ROWS OF THE TABLE ITSELF (deterministic, engine-agnostic), so
-  the DuckDB oracle can reproduce bucketing exactly — no RNG to sync.
+- **IVF ANN** — scale path: every vector lives in its nearest centroid
+  cell(s); search and near-dup pairing touch only the probed cells. Default
+  centroids are ROWS OF THE TABLE ITSELF (the lowest ids — deterministic,
+  engine-agnostic), so the DuckDB oracle reproduces cell assignment exactly
+  — no RNG to sync; `train_ivf_centroids` refines them with k-means.
 
-At 100 TB: the corpus side stays partitioned; queries/anchors are broadcast;
-bucketing adds one narrow projection and turns the scan into a semi-join
-prune (bucket id is a groupable/bucketable key for storage layout too).
-An IVF variant would k-means the anchors first — same plumbing, better
-recall/bucket balance; sign-LSH keeps the oracle exactly reproducible.
+At 100 TB: the corpus side stays partitioned; queries/centroids are
+broadcast; assignment is one narrow Arrow pass, and the cell id is a
+partition key for storage layout too (`write_ivf_index`), so a probe
+becomes a static partition filter.
 """
 
 from __future__ import annotations
@@ -279,67 +279,6 @@ def cosine_topk_batch(
     )
 
 
-def signbit_bucket(
-    df: DataFrame,
-    anchors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    anchor_id_col: str = "vec_id",
-) -> DataFrame:
-    """Adds `bucket`: the sign-bit sketch of the vector against each anchor
-    (bit i = 1 iff dot(vec, anchor_i) > 0), as a compact bigint.
-
-    The anchor vectors are inlined as literal arrays — bounded BY
-    CONSTRUCTION: the bucket is a 64-bit bitmask, so n_anchors ≤ 63
-    always, and the expression tree stays small and the plan narrow
-    (zero shuffle). This is unlike IVF centroid counts (unbounded →
-    broadcast-join form, see ivf_assign); at 63+ hyperplanes you want
-    IVF cells anyway."""
-    a = anchors.select(
-        F.col(anchor_id_col).alias("_aid"), F.col(vec_col).cast("array<double>").alias("_avec")
-    )
-    rows = a.orderBy("_aid").collect()  # few anchors — driver-side is fine
-    if len(rows) > 63:
-        # 2**i overflows the long bitmask at i >= 63, silently corrupting
-        # buckets (VERDICT r5 #5) — fail loudly at the documented bound
-        raise ValueError(
-            f"signbit_bucket: {len(rows)} anchors exceed the 63-bit bigint "
-            "bucket mask — use IVF cells (ivf_assign) past 63 hyperplanes"
-        )
-    dv = F.col(vec_col).cast("array<double>")
-    bucket = F.lit(0).cast("long")
-    for i, r in enumerate(rows):
-        avec = F.array(*[F.lit(float(x)) for x in r["_avec"]])
-        bit = F.when(_dot(dv, avec) > 0, F.lit(2**i).cast("long")).otherwise(F.lit(0).cast("long"))
-        bucket = bucket + bit
-    return df.withColumn("bucket", bucket)
-
-
-def ann_topk(
-    df: DataFrame,
-    query_id: int,
-    n_anchors: int = 6,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """LSH-bucketed approximate top-k: exact cosine, but only within the
-    query's sign-bit bucket. Anchors = the n lowest-id rows of the corpus."""
-    anchors = df.orderBy(id_col).limit(n_anchors)
-    bucketed = signbit_bucket(df, anchors, id_col, vec_col)
-    qb = bucketed.filter(F.col(id_col) == query_id).select(
-        F.col("bucket").alias("qbucket"), F.col(vec_col).alias("qvec")
-    )
-    dv = F.col(vec_col).cast("array<double>")
-    qv = F.col("qvec").cast("array<double>")
-    scored = (
-        bucketed.crossJoin(F.broadcast(qb))
-        .filter((F.col("bucket") == F.col("qbucket")) & (F.col(id_col) != query_id))
-        .select(id_col, F.round(_dot(dv, qv) / (_norm(dv) * _norm(qv)), 6).alias("sim"))
-    )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
-
-
 def head_centroids(
     df: DataFrame, n: int, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
@@ -367,21 +306,16 @@ def _assign_cells(
 ) -> DataFrame:
     """Shared top-`nprobe` nearest-centroid assignment kernel behind
     ivf_assign (nprobe=1) and ivf_assign_multi: the centroid matrix is
-    driver-collected once (tiny — the ivf_assign_vectorized broadcast
-    shape) and ships in a mapInPandas closure; each Arrow batch scores
-    every (vector, centroid) cosine with the fold-exact accumulation
-    (inlined fold-exact accumulation — bit-identical to the JVM/DuckDB left fold,
+    driver-collected once (tiny) and ships in a mapInPandas closure; each
+    Arrow batch scores every (vector, centroid) cosine with the inlined
+    fold-exact accumulation (bit-identical to the JVM/DuckDB left fold,
     unlike BLAS) and picks cells by repeated first-argmax, which equals
-    the declarative `max_by(cell, struct(sim, -cell))` / descending
-    (s, -cell) struct sort tie-break: highest sim, ties → LOWEST cell
-    (centroid rows are scored in ascending-cell order).
+    the oracle's `ORDER BY sim DESC, cell` tie-break: highest sim, ties →
+    LOWEST cell (centroid rows are scored in ascending-cell order).
 
-    ZERO shuffle and zero Python-boundary fan-out: the r5 form was a
-    broadcast join producing k rows per vector whose sim expression was
-    an interpreted per-element fold, plus a groupBy(id) exchange to fold
-    them back; this is one narrow Arrow pass. Rows with NULL vectors are
-    dropped (they could never score). Returns (id, vec, cell), one row
-    per (vector, probed cell)."""
+    One narrow Arrow pass: zero shuffle, no per-centroid row fan-out.
+    Rows with NULL vectors are dropped (they could never score). Returns
+    (id, vec, cell), one row per (vector, probed cell)."""
     rows = centroids.select("cell", "cvec").orderBy("cell").collect()
     id_t = df.schema[id_col].dataType.simpleString()
     vec_t = df.schema[vec_col].dataType.simpleString()
@@ -467,16 +401,18 @@ def ivf_assign_vectorized(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Production assignment kernel: ZERO shuffle, Arrow-batched numpy.
+    """Training assignment kernel (`train_ivf_centroids`): ZERO shuffle,
+    Arrow-batched numpy.
 
     The centroid matrix (k x d, driver-collected once — 4k x 768 doubles
     is 25 MB, trivially broadcastable) ships in the UDF closure; each
     Arrow batch computes all cosines in ONE BLAS matmul and argmaxes
     row-wise (numpy argmax = lowest index on ties, matching ivf_assign).
-    Use this at real corpus scale; `ivf_assign` is the declarative,
-    oracle-bit-exact form (BLAS accumulation order can differ from the
-    left fold in the last ulp, which only matters under exact-tie
-    hash comparison, not for recall)."""
+    `ivf_assign` is the fold-exact, oracle-bit-exact Arrow kernel that
+    query paths use; BLAS accumulation order can differ from its left
+    fold in the last ulp, which only matters under exact-tie hash
+    comparison, not for a Lloyd round. The matmul is what keeps training
+    affordable: see the ann_probe kernel A/B in BENCH/NOTES.md."""
     rows = centroids.orderBy("cell").collect()
     if not rows:
         # an empty centroid table would make the numpy kernel die with an
@@ -511,7 +447,6 @@ def train_ivf_centroids(
     n_iter: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
 ) -> DataFrame:
     """Deterministic Lloyd k-means over cosine (spherical k-means shape):
     seed = the k lowest-id rows, then `n_iter` rounds of assignment +
@@ -519,12 +454,9 @@ def train_ivf_centroids(
     the classic Spark k-means update). No RNG; empty cells keep their
     previous centroid. Returns (cell, cvec).
 
-    `vectorized=True` assigns with the numpy-matmul kernel — at the 500k
-    x k=64 probe one Lloyd round drops 32.7 s → ~4 s (the declarative
-    join's higher-order dot products are interpreted per element).
-    Reproducible per machine/BLAS; pass False for the left-fold
-    bit-exact-everywhere form (oracle queries don't gate training, so
-    the default favors the production kernel)."""
+    Rounds assign with the BLAS kernel `ivf_assign_vectorized`, so the
+    result is reproducible per machine/BLAS rather than bit-exact
+    everywhere (oracle queries don't gate training)."""
     first = df.select(vec_col).first()
     if first is None or first[0] is None:
         # .first() on an empty corpus returns None, and a NULL embedding
@@ -537,9 +469,8 @@ def train_ivf_centroids(
     dim = len(first[0])
     centroids = head_centroids(df, k, id_col, vec_col).localCheckpoint(eager=True)
     dv = F.col(vec_col).cast("array<double>")
-    assign = ivf_assign_vectorized if vectorized else ivf_assign
     for _ in range(n_iter):
-        assigned = assign(df, centroids, id_col, vec_col)
+        assigned = ivf_assign_vectorized(df, centroids, id_col, vec_col)
         means = assigned.groupBy("cell").agg(
             F.array(*[F.avg(dv[i]) for i in range(dim)]).alias("cvec")
         )
@@ -777,9 +708,7 @@ def ivf_near_dups(
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a, b, sim ≥ threshold) via
-    IVF-cell self-join — the DEFAULT embedding dedup path (the gated
-    `ann_recall` eval measured sign-LSH at recall@10 = 0.0 vs IVF 1.0 on
-    isotropic embeddings, so sign-bit bucketing is demoted to an opt-in).
+    IVF cells — the embedding dedup path.
 
     Multi-probe assignment (nprobe nearest cells per vector) recovers
     boundary pairs; a pair co-occurring in two cells is deduplicated by a
@@ -803,39 +732,3 @@ def ivf_near_dups(
     m = cap_buckets(m, max_bucket, keys=("cell",))
     return _pair_scores_grouped(m, ("cell",), threshold, id_col, vec_col).distinct()
 
-
-def embedding_near_dups(
-    df: DataFrame,
-    threshold: float = 0.95,
-    n_anchors: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket: int | None = None,
-    method: str = "ivf",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (a, b, sim ≥ threshold) via
-    bucket self-join — the ANN analogue of LSH dedup. `max_bucket` drops
-    degenerate buckets before the quadratic self-join (see
-    dedup.cap_buckets) — mandatory at scale, optional for exact recall on
-    small corpora.
-
-    `method='ivf'` (default, per the gated `ann_recall` measurement) =
-    multi-probe IVF cells; `method='signbit'` = the sign-bit LSH sketch,
-    kept for corpora with strong directional structure where hyperplane
-    buckets are meaningful."""
-    if method == "ivf":
-        return ivf_near_dups(
-            df, threshold, n_cells=n_anchors, nprobe=2,
-            id_col=id_col, vec_col=vec_col, max_bucket=max_bucket,
-        )
-    if method != "signbit":
-        raise ValueError(f"unknown embedding_near_dups method {method!r}")
-    from logspark.operators.dedup import cap_buckets
-
-    anchors = df.orderBy(id_col).limit(n_anchors)
-    b = signbit_bucket(df, anchors, id_col, vec_col)
-    b = cap_buckets(b, max_bucket, keys=("bucket",))
-    # r6: per-bucket applyInPandas scoring kernel (fold-exact sims), same
-    # rewrite as ivf_near_dups; each pair lives in exactly one bucket so
-    # no distinct is needed (unchanged from the join form)
-    return _pair_scores_grouped(b, ("bucket",), threshold, id_col, vec_col)

@@ -699,30 +699,10 @@ TOY_BPE_MERGES: list[tuple[str, str]] = [
 _SYM_L, _SYM_R = "\x02", "\x03"
 
 
-def _bpe_word_token_count(t, merges: list[tuple[str, str]] | None = None):
-    """Symbol count of one alphabetic pre-token after applying the merge
-    table in rank order (native Columns, zero Python).
-
-    Sequential exhaustive application in rank order equals the classic
-    min-rank-first encoder for any VALID merge table: a merge's output
-    symbol can only feed later-ranked merges (validity, pytest-pinned),
-    and replacing [x][y] with [xy] never creates a new [x][y] occurrence,
-    so one replace() pass per merge is exhaustive."""
-    s = F.regexp_replace(t, "(.)", f"{_SYM_L}$1{_SYM_R}")
-    for x, y in TOY_BPE_MERGES if merges is None else merges:
-        s = F.replace(
-            s,
-            F.lit(f"{_SYM_L}{x}{_SYM_R}{_SYM_L}{y}{_SYM_R}"),
-            F.lit(f"{_SYM_L}{x}{y}{_SYM_R}"),
-        )
-    return F.size(F.split(s, _SYM_L)) - 1
-
-
 def bpe_encode(word: str, ranks: dict) -> list[str]:
     """Classic min-rank-first BPE encoder (the subword-nmt/GPT-2 shape):
     repeatedly merge the lowest-ranked adjacent symbol pair present.
-    Plain Python — the kernel of the pandas-UDF large-vocab path, and the
-    reference the native replace-chain is property-tested against."""
+    Plain Python — the kernel of `with_bpe_token_count`'s Arrow UDF."""
     syms = list(word)
     while len(syms) > 1:
         best, best_rank = None, None
@@ -767,18 +747,6 @@ def bpe_tokenize(col, merges: list[tuple[str, str]] | None = None):
     return F.transform(pieces, lambda p: F.replace(p, F.lit(_SYM_R), F.lit("")))
 
 
-# Above this many merges the native replace-chain (one Column expression
-# per merge) is not even EXPRESSIBLE sensibly: the expression tree grows
-# linearly, codegen methods split, and analysis time dominates. Below it
-# the chain works but still loses: each replace() pass re-scans every
-# word string per merge, where the classic encoder pays one dict-cached
-# encode per DISTINCT word (Zipf: hot words dominate). Measured at sf1.0
-# (50k docs, the 49-merge toy table): native 8.0 s vs pandas 1.4 s — so
-# r6 routes engine='auto' to pandas at EVERY table size; the limit now
-# only guards explicit engine='native' requests in with_bpe_token_count
-# callers that want the SQL-shaped reference plan.
-NATIVE_MERGE_LIMIT = 128
-
 # Per-merge-table word→token-count memos for the pandas BPE engine
 # (ADVICE r5: the cache used to be rebuilt per Arrow batch, so the
 # documented Zipf amortization never actually happened). Keyed by a
@@ -793,7 +761,6 @@ def with_bpe_token_count(
     df: DataFrame,
     text_col: str = "text",
     merges: list[tuple[str, str]] | None = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """Merge-table-driven BPE token count. Pre-tokenize with the GPT-2-ish
     regex, then BPE-merge each alphabetic word against the merge table
@@ -803,54 +770,16 @@ def with_bpe_token_count(
     Emits both `n_pretokens` (split only) and `n_tokens_bpe` (after
     merges).
 
-    Two engines, same result (property-tested equal on valid cascades):
-
-    - ``native`` — one replace() Column per merge, JVM-side, zero Python;
-      the DuckDB oracle builds the identical replace() chain. The right
-      plan for small tables (the gated configuration), but each merge adds
-      an expression node, so a production-sized table (10k-100k merges)
-      would blow up analysis/codegen.
-    - ``pandas`` — Arrow-batched classic min-rank-first encoder
-      (`bpe_encode`) with the merge-rank dict shipped once per executor in
-      the UDF closure (the broadcast shape) and a per-WORKER word cache
-      (Zipf: the hot words dominate, so amortized cost per token is a dict
-      hit — r6 hoisted the cache out of the batch loop per ADVICE r5).
-      Values are identical to native (property-tested on valid cascades),
-      so it passes the same hash-compared oracle. The kernel calls
-      `bpe_encode` by module reference: executors need the logspark
-      package on their Python path (`spark-submit --py-files`, or
-      queries.ensure_workers in the sandbox).
-
-    ``engine='auto'`` picks pandas (r6: measured 8.0 s native vs 1.4 s
-    pandas at sf1.0 even on the 49-merge toy table — each native
-    replace() pass re-scans the word, the encoder is cached per distinct
-    word); ``native`` remains the SQL-shaped reference plan and raises
-    past NATIVE_MERGE_LIMIT-style trees only by its own cost."""
+    One Arrow-batched classic min-rank-first encoder (`bpe_encode`) with
+    the merge-rank dict shipped once per executor in the UDF closure (the
+    broadcast shape) and a per-WORKER word cache (Zipf: the hot words
+    dominate, so amortized cost per token is a dict hit). It beat the
+    one-replace()-per-merge Column chain 1.4 s vs 8.0 s at sf1.0 on the
+    49-merge toy table, and its plan size does not grow with the merge
+    table. The kernel calls `bpe_encode` by module reference: executors
+    need the logspark package on their Python path (`spark-submit
+    --py-files`, or queries.ensure_workers in the sandbox)."""
     m = TOY_BPE_MERGES if merges is None else merges
-    if engine == "auto":
-        engine = "pandas"
-    if engine == "native":
-        # _bt named column: the pre-tokenize regex runs ONCE per row even
-        # with two consumers (see the Catalyst-CSE NOTE atop this file)
-        per = F.transform(
-            F.col("_bt"),
-            lambda t: F.when(
-                t.rlike("^[A-Za-z]+$"), _bpe_word_token_count(t, m)
-            ).otherwise(F.lit(1)),
-        )
-        return (
-            df.withColumn(
-                "_bt", F.regexp_extract_all(F.col(text_col), F.lit(BPE_TOKEN_RE), 0)
-            )
-            .withColumn("n_pretokens", F.size("_bt").cast("long"))
-            .withColumn(
-                "n_tokens_bpe",
-                F.aggregate(per, F.lit(0).cast("long"), lambda a, v: a + v.cast("long")),
-            )
-            .drop("_bt")
-        )
-    if engine != "pandas":
-        raise ValueError(f"with_bpe_token_count: unknown engine {engine!r}")
 
     from pyspark.sql.functions import pandas_udf
 
@@ -919,7 +848,7 @@ def train_bpe_merges(
 
     Output merges are a valid cascade BY CONSTRUCTION (each merge's
     components are single chars or earlier outputs), so the result feeds
-    either `with_bpe_token_count` engine."""
+    `with_bpe_token_count` and `bpe_tokenize` alike."""
     rows = (
         df.select(
             F.explode(

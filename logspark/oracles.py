@@ -632,30 +632,6 @@ FROM s CROSS JOIN q
 ORDER BY sim DESC, vec_id LIMIT 10
 """
 
-_BUCKETS_CTE = f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-a AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS bit, v AS av
-      FROM v ORDER BY vec_id LIMIT 6),
-dots AS (SELECT v.vec_id, a.bit, {_DOT.format(a='v.v', b='a.av')} AS d
-         FROM v CROSS JOIN a),
-b AS (SELECT vec_id,
-             CAST(SUM(CASE WHEN d > 0 THEN (CAST(1 AS BIGINT) << CAST(bit AS INT)) ELSE 0 END) AS BIGINT) AS bucket
-      FROM dots GROUP BY 1)
-"""
-
-EMBED_ANN_LSH = (
-    _BUCKETS_CTE
-    + f""",
-qb AS (SELECT bucket AS qbucket FROM b WHERE vec_id = 0),
-q AS (SELECT v AS qv FROM v WHERE vec_id = 0),
-s AS (SELECT b.vec_id, v.v FROM b JOIN v USING (vec_id)
-      CROSS JOIN qb WHERE b.bucket = qb.qbucket AND b.vec_id <> 0)
-SELECT vec_id, {_cos('v', 'qv')} AS sim
-FROM s CROSS JOIN q
-ORDER BY sim DESC, vec_id LIMIT 10
-"""
-)
-
 # IVF ANN: cell = argmax cosine to 6 deterministic centroids (lowest-index
 # tie-break == ORDER BY d DESC, bit); probe the query's nprobe=2 nearest
 # cells; exact cosine inside. Assignment uses UNROUNDED cosines — both
@@ -751,23 +727,16 @@ TRAINING_CORPUS = (
 WHERE doc_id NOT IN (SELECT node FROM cc WHERE node <> cluster_id)"""
 )
 
-# ANN recall@10 vs exact cosine top-10, per method — the full approx
-# queries nest as subqueries (DuckDB allows WITH inside a derived table)
-# is_default marks the config embedding_near_dups-style workflows run
-# (IVF, n=6, nprobe=2); meets_floor gates its recall against the 0.8
-# floor (logspark.queries.ANN_RECALL_FLOOR) under the value hash
+# IVF ANN recall@10 vs exact cosine top-10 — the full approx queries
+# nest as subqueries (DuckDB allows WITH inside a derived table);
+# is_default marks the config ivf_near_dups-style workflows run (n=6,
+# nprobe=2); meets_floor gates its recall against the 0.8 floor
+# (logspark.queries.ANN_RECALL_FLOOR) under the value hash
 ANN_RECALL = f"""
-SELECT 'lsh' AS method,
+SELECT 'ivf' AS method,
        round(COUNT(*) / 10.0, 6) AS recall_at_10,
-       FALSE AS is_default,
+       TRUE AS is_default,
        round(COUNT(*) / 10.0, 6) >= 0.8 AS meets_floor
-FROM (SELECT vec_id FROM ({EMBED_ANN_LSH}) ) a
-JOIN (SELECT vec_id FROM ({EMBED_COSINE_TOPK}) ) e USING (vec_id)
-UNION ALL
-SELECT 'ivf',
-       round(COUNT(*) / 10.0, 6),
-       TRUE,
-       round(COUNT(*) / 10.0, 6) >= 0.8
 FROM (SELECT vec_id FROM ({EMBED_IVF_TOPK}) ) a
 JOIN (SELECT vec_id FROM ({EMBED_COSINE_TOPK}) ) e USING (vec_id)
 """

@@ -253,6 +253,36 @@ def embed_dedup_tick(
         }
 
 
+def _watch(
+    tick,
+    store_dir: str,
+    spark: SparkSession,
+    io: ParquetIO,
+    table: str,
+    sink_root: str,
+    interval_s: float,
+    max_iterations: int | None,
+    compact_every: int | None,
+    tick_kwargs: dict,
+) -> list[dict]:
+    """The shared agent loop: tick → compact the store under the
+    WriterLock once it holds `compact_every` runs → sleep."""
+    import time
+
+    results: list[dict] = []
+    i = 0
+    while max_iterations is None or i < max_iterations:
+        results.append(tick(spark, io, table, sink_root, **tick_kwargs))
+        store = SignatureStore(os.path.join(sink_root, store_dir))
+        if compact_every is not None and len(store.committed_runs()) >= compact_every:
+            with WriterLock(sink_root):
+                store.compact(spark)
+        i += 1
+        if max_iterations is None or i < max_iterations:
+            time.sleep(interval_s)
+    return results
+
+
 def watch_dedup(
     spark: SparkSession,
     io: ParquetIO,
@@ -275,20 +305,10 @@ def watch_dedup(
     per-file ingestion provenance the crash-replay key depends on, and
     runs under the same WriterLock as ticks so it cannot race a commit.
     None disables."""
-    import time
-
-    results: list[dict] = []
-    i = 0
-    while max_iterations is None or i < max_iterations:
-        results.append(dedup_tick(spark, io, table, sink_root, **tick_kwargs))
-        store = SignatureStore(os.path.join(sink_root, "sigstore"))
-        if compact_every is not None and len(store.committed_runs()) >= compact_every:
-            with WriterLock(sink_root):
-                store.compact(spark)
-        i += 1
-        if max_iterations is None or i < max_iterations:
-            time.sleep(interval_s)
-    return results
+    return _watch(
+        dedup_tick, "sigstore", spark, io, table, sink_root,
+        interval_s, max_iterations, compact_every, tick_kwargs,
+    )
 
 
 def watch_embed_dedup(
@@ -305,20 +325,10 @@ def watch_embed_dedup(
     `watch_dedup`, over the cell-partitioned vector store. Compaction
     preserves the partitioned layout (store index carries partition_by)
     and the per-file provenance, both under the writer lock."""
-    import time
-
-    results: list[dict] = []
-    i = 0
-    while max_iterations is None or i < max_iterations:
-        results.append(embed_dedup_tick(spark, io, table, sink_root, **tick_kwargs))
-        store = SignatureStore(os.path.join(sink_root, "vstore"))
-        if compact_every is not None and len(store.committed_runs()) >= compact_every:
-            with WriterLock(sink_root):
-                store.compact(spark)
-        i += 1
-        if max_iterations is None or i < max_iterations:
-            time.sleep(interval_s)
-    return results
+    return _watch(
+        embed_dedup_tick, "vstore", spark, io, table, sink_root,
+        interval_s, max_iterations, compact_every, tick_kwargs,
+    )
 
 
 def all_pairs(spark: SparkSession, sink_root: str) -> DataFrame:

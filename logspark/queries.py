@@ -343,9 +343,9 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-table-driven BPE count (r4: real merges, not just the
     pre-tokenizer split — TOY_BPE_MERGES applied per alphabetic word).
-    r6: engine=auto now runs the Arrow-batched classic encoder (8.0 s →
-    1.4 s at sf1.0, values identical); its kernel calls bpe_encode by
-    module reference, so workers need the package (ensure_workers)."""
+    Counted by the Arrow-batched classic encoder, whose kernel calls
+    bpe_encode by module reference, so workers need the package
+    (ensure_workers)."""
     ensure_workers(spark)
     docs = _t(spark, sf_dir, "documents")
     return textops.with_bpe_token_count(docs).select(
@@ -429,9 +429,8 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_conversation_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transcripts → SFT (context, target) rows (r4; replaced the
-    demoted `embed_ann_lsh` entry — sign-LSH top-k stays value-checked
-    inside ann_recall's lsh row). Context = last 3 prior turns."""
+    """Transcripts → SFT (context, target) rows. Context = last 3 prior
+    turns."""
     from logspark.operators.aggregates import conversation_examples
 
     t = transcripts_from_events(spark, sf_dir)
@@ -558,55 +557,47 @@ def q_embed_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_embed_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DEFAULT embedding-dedup path: multi-probe IVF cells (sign-LSH
-    measured recall@10 = 0.0 vs IVF 1.0 in the gated ann_recall eval, so
-    r4 demoted sign-bit bucketing to method='signbit' opt-in).
+    """The embedding-dedup path: `ivf_near_dups` over multi-probe IVF
+    cells (nprobe=2, head-seeded centroids).
 
     threshold=0.35, not a production 0.9+: the synthetic embeddings are
     near-isotropic (max within-bucket cosine ≈ 0.47 at sf0.01), so a high
     threshold made this oracle vacuously green at 0 rows (VERDICT r2 #1);
     0.35 yields a real, hash-checked pair set at every test SF (108 pairs
-    at sf0.01 — 5x the sign-bit path's 21, same threshold). n_anchors=32
-    cells keeps the within-cell quadratic join comparable to the old
-    64-bucket sign-bit sketch (6 cells measured 19.8 s at sf0.1 vs 3.7 s
-    at 32 — bucket size, not method, is the cost driver). No max_bucket:
-    head-seeded cells are balanced on isotropic data; production uses
-    train_ivf_centroids at larger k, where capping is meaningful."""
+    at sf0.01). n_cells=32 keeps the within-cell quadratic scoring cheap
+    (6 cells measured 19.8 s at sf0.1 vs 3.7 s at 32 — cell size is the
+    cost driver). No max_bucket: head-seeded cells are balanced on
+    isotropic data; production uses train_ivf_centroids at larger k,
+    where capping is meaningful."""
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.embedding_near_dups(emb, threshold=0.35, n_anchors=32)
+    return similarity.ivf_near_dups(emb, threshold=0.35, n_cells=32)
 
 
 ANN_RECALL_FLOOR = 0.8
 
 
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Evaluation surface: recall@10 of both ANN paths against the exact
-    cosine top-10 — the number a user tunes nprobe/anchors against. One
-    row per method, fully declarative (no driver-side compare). The row
-    with is_default=true is the configuration embedding_near_dups-style
-    workflows actually run (IVF, n=6, nprobe=2); meets_floor gates it
-    against ANN_RECALL_FLOOR under the hash-checked oracle — a config
-    regression that drops default recall below the floor flips a gated
+    """Evaluation surface: recall@10 of the IVF ANN path (n=6, nprobe=2 —
+    the configuration `ivf_near_dups`-style workflows run) against the
+    exact cosine top-10 — the number a user tunes nprobe/cells against.
+    One row, fully declarative (no driver-side compare); meets_floor
+    gates it against ANN_RECALL_FLOOR under the hash-checked oracle — a
+    config regression that drops recall below the floor flips a gated
     boolean, not just a number someone has to eyeball."""
     emb = _t(spark, sf_dir, "embeddings")
     exact = similarity.cosine_topk(emb, query_id=0, k=10).select("vec_id")
-    rows = []
-    for method, is_default, approx in (
-        ("lsh", False, similarity.ann_topk(emb, query_id=0, n_anchors=6, k=10)),
-        ("ivf", True, similarity.ivf_topk(emb, query_id=0, n_anchors=6, nprobe=2, k=10)),
-    ):
-        recall = F.round(F.count(F.lit(1)) / 10.0, 6)
-        rows.append(
-            approx.select("vec_id")
-            .join(exact, "vec_id")
-            .agg(
-                F.lit(method).alias("method"),
-                recall.alias("recall_at_10"),
-                F.lit(is_default).alias("is_default"),
-                (recall >= ANN_RECALL_FLOOR).alias("meets_floor"),
-            )
+    approx = similarity.ivf_topk(emb, query_id=0, n_anchors=6, nprobe=2, k=10)
+    recall = F.round(F.count(F.lit(1)) / 10.0, 6)
+    return (
+        approx.select("vec_id")
+        .join(exact, "vec_id")
+        .agg(
+            F.lit("ivf").alias("method"),
+            recall.alias("recall_at_10"),
+            F.lit(True).alias("is_default"),
+            (recall >= ANN_RECALL_FLOOR).alias("meets_floor"),
         )
-    return rows[0].unionByName(rows[1])
+    )
 
 
 def q_embed_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -615,7 +606,7 @@ def q_embed_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     the surviving vector ids after cosine-near-dup collapse. Pairs come
     from the r4 default path (multi-probe IVF, see q_embed_near_dups)."""
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = similarity.embedding_near_dups(emb, threshold=0.35, n_anchors=32)
+    pairs = similarity.ivf_near_dups(emb, threshold=0.35, n_cells=32)
     return dedup.dedup_apply(emb, pairs, id_col="vec_id").select("vec_id")
 
 

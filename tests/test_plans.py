@@ -226,8 +226,8 @@ def test_ivf_multi_probe_plan_shape(spark):
 
 
 def test_ivf_vectorized_kernel_matches_declarative(spark):
-    """The zero-shuffle numpy assignment kernel (production path) agrees
-    with the declarative broadcast-join argmax on every row."""
+    """The zero-shuffle BLAS assignment kernel (k-means training) agrees
+    with the fold-exact `ivf_assign` argmax on every row."""
     import numpy as np
 
     from logspark.operators import similarity
@@ -306,31 +306,20 @@ def test_dedup_apply_anti_join_broadcasts(spark):
     assert not any("SortMergeJoin" in ln for ln in anti), anti
 
 
-def test_candidate_self_join_materialize_option(spark):
-    """`materialize=True` removes the duplicated kernel subtree from the
-    candidate self-joins (zero Python-eval nodes above the checkpoint);
-    the DEFAULT is False because an interleaved best-of-3 A/B at 500k
-    docs measured recompute FASTER than materialize (lsh 4.04 vs 6.16 s,
-    winnow 4.95 vs 10.16 s) — serializing and re-exchanging the banded
-    rows costs more than re-running the narrow Arrow kernel. Both plan
-    shapes are pinned here so a regression in either is visible."""
+def test_candidate_self_joins_recompute_kernel_per_side(spark):
+    """The candidate self-joins plan the signature kernel once per join
+    side (two ArrowEvalPython nodes): an interleaved best-of-3 A/B at
+    500k docs measured this recompute shape FASTER than checkpointing
+    the banded rows once (lsh 4.04 vs 6.16 s, winnow 4.95 vs 10.16 s).
+    The plan shape is pinned so a change to it is visible."""
     from logspark.operators import dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
     fps = dedup.winnow_fingerprints(docs, k=5, w=4)
-    plan = _plan(
-        dedup.winnow_candidates(fps, min_shared=2, max_bucket=50, materialize=True)
-    )
-    assert "ArrowEvalPython" not in plan, plan
-    assert "Scan ExistingRDD" in plan, plan
-    # default: recompute — the kernel subtree is planned per join side
     plan = _plan(dedup.winnow_candidates(fps, min_shared=2, max_bucket=50))
     assert plan.count("ArrowEvalPython") == 2, plan
 
     sigs = dedup.minhash_signatures(docs, n_hashes=16)
-    plan = _plan(
-        dedup.lsh_candidates(sigs, n_hashes=16, bands=4, max_bucket=20, materialize=True)
-    )
-    assert "ArrowEvalPython" not in plan, plan
-    assert "Scan ExistingRDD" in plan, plan
+    plan = _plan(dedup.lsh_candidates(sigs, n_hashes=16, bands=4, max_bucket=20))
+    assert plan.count("ArrowEvalPython") == 2, plan

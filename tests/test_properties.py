@@ -311,7 +311,8 @@ def test_mixture_two_phase_equals_naive_window(spark, rows, b0, b1, nb):
 
 
 # ---------------------------------------------------------------------------
-# BPE: native replace()-chain ≡ classic min-rank-first encoder, random words
+# BPE: Arrow encoder count + bpe_tokenize replace()-chain pieces ≡ classic
+# min-rank-first reference encoder, random words
 # ---------------------------------------------------------------------------
 
 # biased toward the merge-table letters so merges (incl. cascades) fire often
@@ -325,10 +326,14 @@ _bpe_words = st.lists(
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(_bpe_words)
 def test_bpe_chain_equals_classic_encoder_on_random_words(spark, words):
-    """For ANY alphabetic word, the rank-ordered sentinel replace() chain
-    must count exactly what the classic min-rank-first BPE encoder
-    produces — the sequential≡classic equivalence holds for the whole
-    input space, not just the curated word list."""
+    """For ANY alphabetic words, `with_bpe_token_count` (the Arrow-batched
+    encoder) must count exactly what the reference min-rank-first BPE
+    encoder produces, and `bpe_tokenize` (the rank-ordered sentinel
+    replace() chain) must yield exactly its pieces — the
+    sequential≡classic equivalence holds for the whole input space, not
+    just the curated word list."""
+    import pyspark.sql.functions as F
+
     from logspark.operators import textops
     from tests.test_training_ops import _reference_bpe_encode
 
@@ -338,3 +343,6 @@ def test_bpe_chain_equals_classic_encoder_on_random_words(spark, words):
     row = textops.with_bpe_token_count(df).first()
     expect = sum(len(_reference_bpe_encode(w)) for w in words)
     assert row["n_tokens_bpe"] == expect, (text, row["n_tokens_bpe"], expect)
+    wdf = spark.createDataFrame([(w,) for w in words], "w string")
+    for r in wdf.select("w", textops.bpe_tokenize(F.col("w")).alias("pieces")).collect():
+        assert r["pieces"] == _reference_bpe_encode(r["w"]), r["w"]

@@ -183,9 +183,15 @@ def test_push_source_rate_stream(spark, tmp_path, dims):
         spark, canonical_config(), None, sink_root, str(tmp_path / "ckpt"),
         dims=dims, available_now=False, source=src,
     )
+    # processAllAvailable() never returns here: the rate source always has
+    # new offsets, and one micro-batch can take longer than a second. Poll
+    # the progress log until one batch that carried rows has committed.
+    deadline = time.monotonic() + 120
     try:
-        time.sleep(4)
-        q.processAllAvailable()
+        while not any(p["numInputRows"] > 0 for p in q.recentProgress):
+            assert q.exception() is None, q.exception()
+            assert time.monotonic() < deadline, "no non-empty micro-batch within 120 s"
+            time.sleep(0.5)
     finally:
         q.stop()
     routed = spark.read.parquet(f"{sink_root}/routed")

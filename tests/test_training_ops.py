@@ -114,13 +114,11 @@ def test_bpe_token_count_matches_reference_encoder(spark):
         assert got[w] == _reference_bpe_encode(w), w
 
 
-def test_bpe_pandas_engine_matches_native_and_scales_vocab(spark):
-    """VERDICT r4 #3: the pandas-UDF classic encoder path. (a) native ≡
-    pandas on the TOY table and on a small TRAINED table (valid cascades
-    — the property that makes them interchangeable); (b) a ~1k-merge
-    trained table — far past what the native replace-chain should ever
-    express as one expression tree — encodes correctly vs the in-test
-    reference encoder, and engine='auto' routes it to pandas."""
+def test_bpe_trained_merges_valid_and_scale_vocab(spark):
+    """VERDICT r4 #3: (a) a small TRAINED table is a valid cascade and
+    retraining is deterministic; (b) a ~1k-merge trained table — far past
+    what a one-replace()-per-merge expression tree could express —
+    counts correctly vs the in-test reference encoder."""
     import re
 
     texts = [
@@ -132,14 +130,7 @@ def test_bpe_pandas_engine_matches_native_and_scales_vocab(spark):
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string")
 
-    # (a) native == pandas on the toy table
-    nat = {r["doc_id"]: (r["n_pretokens"], r["n_tokens_bpe"])
-           for r in textops.with_bpe_token_count(df, engine="native").collect()}
-    pan = {r["doc_id"]: (r["n_pretokens"], r["n_tokens_bpe"])
-           for r in textops.with_bpe_token_count(df, engine="pandas").collect()}
-    assert nat == pan
-
-    # train a small table on a synthetic corpus; native == pandas on it too
+    # (a) train a small table on a synthetic corpus
     corpus_rows = [(i, " ".join(texts) + " repetition makes frequency") for i in range(4)]
     corpus = spark.createDataFrame(corpus_rows, "doc_id bigint, text string")
     small = textops.train_bpe_merges(corpus, n_merges=30)
@@ -149,11 +140,6 @@ def test_bpe_pandas_engine_matches_native_and_scales_vocab(spark):
         for part in (x, y):
             assert len(part) == 1 or part in formed, (x, y)
         formed.add(x + y)
-    nat2 = {r["doc_id"]: r["n_tokens_bpe"]
-            for r in textops.with_bpe_token_count(df, merges=small, engine="native").collect()}
-    pan2 = {r["doc_id"]: r["n_tokens_bpe"]
-            for r in textops.with_bpe_token_count(df, merges=small, engine="pandas").collect()}
-    assert nat2 == pan2
 
     # determinism: retraining yields the identical table
     assert textops.train_bpe_merges(corpus, n_merges=30) == small
@@ -170,7 +156,6 @@ def test_bpe_pandas_engine_matches_native_and_scales_vocab(spark):
     )
     big = textops.train_bpe_merges(big_corpus, n_merges=1000)
     assert len(big) == 1000
-    assert len(big) > textops.NATIVE_MERGE_LIMIT  # auto must go pandas
     out = textops.with_bpe_token_count(df.union(big_corpus.limit(3)), merges=big).collect()
     for r in out:
         pretoks = re.findall(textops.BPE_TOKEN_RE, r["text"])
@@ -570,18 +555,8 @@ def test_cosine_topk_matches_numpy(emb):
         assert r["sim"] == pytest.approx(s, abs=1e-5)
 
 
-def test_ann_topk_subset_of_bucket(emb):
-    got = similarity.ann_topk(emb, query_id=0, n_anchors=4, k=5).collect()
-    assert 0 < len(got) <= 5
-    assert all(-1.0 <= r["sim"] <= 1.0 for r in got)
-    # ANN results are true cosine values: spot-check against brute force
-    brute = {r["vec_id"]: r["sim"] for r in similarity.cosine_topk(emb, 0, k=500).collect()}
-    for r in got:
-        assert r["sim"] == pytest.approx(brute[r["vec_id"]], abs=1e-6)
-
-
-def test_embedding_near_dups_threshold(emb):
-    out = similarity.embedding_near_dups(emb.limit(120), threshold=0.9, n_anchors=4)
+def test_ivf_near_dups_threshold(emb):
+    out = similarity.ivf_near_dups(emb.limit(120), threshold=0.9, n_cells=4)
     assert out.filter(F.col("sim") < 0.9).count() == 0
 
 
@@ -631,10 +606,8 @@ def test_pair_kernel_fold_exactness(spark):
 
 
 def test_default_ann_recall_meets_floor(spark):
-    """The recommended/default ANN config (IVF — what embedding_near_dups
-    runs) must keep recall@10 ≥ ANN_RECALL_FLOOR on the test embeddings;
-    sign-LSH measured 0.0 there, which is why it is no longer the default
-    (VERDICT r3 #6)."""
+    """The ANN config `ann_recall` gates (IVF, n=6, nprobe=2) must keep
+    recall@10 ≥ ANN_RECALL_FLOOR on the test embeddings (VERDICT r3 #6)."""
     from logspark.queries import ANN_RECALL_FLOOR, q_ann_recall
 
     rows = {r["method"]: r for r in q_ann_recall(spark, "/root/testdata/sf0.001").collect()}
