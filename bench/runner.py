@@ -92,7 +92,6 @@ def run_parse_route(spark, input_path: str, out_dir: str) -> dict:
         for f in cfg.filter:
             if f["type"] == "grok":
                 f["engine"] = engine
-    # metrics accumulators on (the production configuration), observation on
     dims = {
         "tool_catalog": spark.createDataFrame(tool_catalog_pdf()),
         "role_map": spark.createDataFrame(role_map_pdf()),

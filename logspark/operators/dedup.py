@@ -787,6 +787,13 @@ class SignatureStore:
     (never read, overwritten on retry under the same run_id). At 100 TB
     the store is ~n_hashes x 8 bytes per doc — 3 orders of magnitude
     smaller than the corpus — and reads are partition-pruned per run.
+
+    Format invariant: every committed run has a ``files`` entry (its
+    input files, possibly empty), so `committed_files()` is the complete
+    provenance map the dedup agent's per-file replay key and verify-scan
+    pruning rely on. An index with a run lacking one predates per-run
+    provenance; reading it raises ValueError — rebuild such a store
+    rather than silently losing the pairs of its unattributed docs.
     """
 
     def __init__(self, root: str):
@@ -809,7 +816,13 @@ class SignatureStore:
             return {"runs": [], "files": {}}
         with open(p) as f:
             idx = json.load(f)
-        idx.setdefault("files", {})
+        missing = [r for r in idx["runs"] if r not in idx.get("files", {})]
+        if missing:
+            raise ValueError(
+                f"signature store {self.root!r} has runs without input-file "
+                f"provenance (first: {missing[:3]!r}); it predates per-run "
+                "provenance and must be rebuilt"
+            )
         return idx
 
     def _write_index(self, idx: dict) -> None:
@@ -837,20 +850,6 @@ class SignatureStore:
             files.update(fs)
         return files
 
-    def files_complete(self) -> bool:
-        """True when every committed run recorded its input files — i.e.
-        committed_files() is a complete provenance map and callers may
-        prune corpus scans to it. Legacy runs appended without
-        `input_files` make it False — and compaction PRESERVES that
-        incompleteness (`legacy_incomplete` marker): folding runs must
-        not fabricate provenance the legacy runs never had, or the
-        verify-scan fallback in dedup_tick would silently drop the
-        legacy files' texts."""
-        idx = self._read_index()
-        if idx.get("legacy_incomplete"):
-            return False
-        return all(r in idx["files"] for r in idx["runs"])
-
     def append(
         self,
         sigs: DataFrame,
@@ -860,7 +859,9 @@ class SignatureStore:
     ) -> None:
         """Write-then-commit: parquet first, index rename second.
         `input_files` records which source files this run's signatures came
-        from (feeds `committed_files()` for per-file crash replay).
+        from (feeds `committed_files()` for per-file crash replay); omit it
+        only for in-memory batches with no source files — the run is then
+        committed with an empty file list.
         `partition_by` lays the run out partitioned (e.g. by IVF cell, so
         loads filtered on the partition key prune whole directories)."""
         import os
@@ -886,8 +887,7 @@ class SignatureStore:
         w.parquet(path)
         idx = self._read_index()
         idx["runs"] = idx["runs"] + [run_id]
-        if input_files:
-            idx["files"][run_id] = sorted(input_files)
+        idx["files"][run_id] = sorted(input_files or [])
         if partition_by:
             idx["partition_by"] = list(partition_by)
         self._write_index(idx)
@@ -948,15 +948,10 @@ class SignatureStore:
                 w = w.partitionBy(*part)
             w.parquet(os.path.join(self.root, "runs", cid))
             # fold the per-run file provenance into the compacted run so
-            # committed_files() survives compaction — but keep the
-            # incompleteness marker if any folded run predates provenance
-            complete_before = self.files_complete()
-            all_files = sorted(self.committed_files())
-            idx = {"runs": [cid], "files": {cid: all_files} if all_files else {}}
+            # committed_files() survives compaction
+            idx = {"runs": [cid], "files": {cid: sorted(self.committed_files())}}
             if part:
                 idx["partition_by"] = part
-            if not complete_before:
-                idx["legacy_incomplete"] = True
             self._write_index(idx)
         # sweep anything the index no longer references
         live = set(self.committed_runs())
@@ -1006,6 +1001,10 @@ def incremental_near_dup_pairs(
       same defense as the whole-corpus path, evaluated per run;
     - Jaccard verification re-reads texts ONLY for candidate-touched docs
       (semi-join prune on the corpus), O(|candidates| · shingles/doc).
+
+    `input_files` becomes the appended run's provenance entry
+    (`SignatureStore.append`): the dedup agent passes the batch's source
+    files; in-memory batches with no source files leave it empty.
     """
     # materialize the new batch's signatures ONCE (r6): they feed the
     # (old ∪ new) banded side, the new-ids semi-join AND the store append

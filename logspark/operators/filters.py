@@ -104,10 +104,9 @@ def grok_filter(df: DataFrame, cfg: dict) -> DataFrame:
       Needed for Unicode \\w/\\b semantics or optional capture groups.
     - "native": force JVM; raises if the pattern set is not expressible.
 
-    Parse metrics: the pandas engine supports per-filter accumulators
-    (cfg["accumulators"]); the native engine has no Python worker to count
-    in — rows/failures come from the plan-level `observe` the pipeline
-    attaches (plans/pipeline.py), which is exact and free."""
+    Parse metrics: rows/failures come from the plan-level `observe` the
+    pipeline attaches (plans/pipeline.py), which is exact for both engines
+    and free."""
     source = cfg.get("source", "text")
     match = cfg["match"] if isinstance(cfg["match"], list) else [cfg["match"]]
     patterns = cfg.get("patterns")
@@ -129,16 +128,9 @@ def grok_filter(df: DataFrame, cfg: dict) -> DataFrame:
         if jpatterns is not None:
             return _grok_native(df, cfg, source, schema, jpatterns, failure_tag)
 
-    # Only plain config values (and picklable accumulators) cross the closure
-    # boundary — each Python worker re-resolves the compiled grok from its
-    # own process cache.
+    # Only plain config values cross the closure boundary — each Python
+    # worker re-resolves the compiled grok from its own process cache.
     patterns_items = tuple(sorted((patterns or {}).items())) or None
-
-    accs = None
-    if cfg.get("accumulators", True):
-        from logspark.plans.metrics import parse_accumulators
-
-        accs = parse_accumulators(df.sparkSession.sparkContext, cfg.get("id", "grok"))
 
     # Cheap prefilter (Sparser-style "filter before you parse", PAPERS.md).
     # It runs INSIDE the pandas UDF: a JVM-side CASE WHEN around a Python
@@ -148,11 +140,7 @@ def grok_filter(df: DataFrame, cfg: dict) -> DataFrame:
 
     def _extract(s: pd.Series) -> pd.DataFrame:
         cg = compile_grok(list(match), dict(patterns_items) if patterns_items else None, anchor)
-        out = cg.extract_pandas(s, prefilter=prefilter)
-        if accs is not None:
-            accs.rows.add(len(s))
-            accs.matched.add(int(out["_grok_matched"].sum()))
-        return out
+        return cg.extract_pandas(s, prefilter=prefilter)
 
     udf = F.pandas_udf(_extract, returnType=schema)
     df = df.withColumn("_g", udf(F.col(source)))

@@ -628,9 +628,10 @@ def incremental_ivf_near_dups(
     bit-identical (the dot fold is operand-order symmetric). With
     max_bucket SET the cap is evaluated per run on partial cells, so
     capped runs can diverge from the one-shot capped result in either
-    direction (same caveat as the MinHash path). `replay=True` (with the
-    caller holding per-file provenance, run_id=None) recomputes a
-    crashed run's pairs without re-appending."""
+    direction (same caveat as the MinHash path). `input_files` becomes
+    the appended run's provenance entry (empty for in-memory batches).
+    `replay=True` (with the caller holding per-file provenance,
+    run_id=None) recomputes a crashed run's pairs without re-appending."""
     spark = new_vecs.sparkSession
     from logspark.operators.dedup import cap_buckets
 

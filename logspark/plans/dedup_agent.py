@@ -58,35 +58,22 @@ def dedup_tick(
         # Crash replay is keyed PER FILE, not on the pending-set hash
         # (ADVICE r4 medium): a tick that died between the store commit and
         # the manifest commit leaves its files in store.committed_files()
-        # but not in the manifest. If a NEW file arrived before the retry,
-        # the pending set (and rid) changed — but the per-file key still
-        # routes the already-ingested files through replay (band against
-        # the store, never re-append), so the store can never accumulate
-        # duplicate signature rows.
+        # but not in the manifest. Whether the retry sees the same pending
+        # set (same rid) or a NEW file arrived first (rid changed), the
+        # per-file key routes the already-ingested files through replay
+        # (band against the store, never re-append), so the store can never
+        # accumulate duplicate signature rows.
         ingested = store.committed_files()
         already = sorted(f for f in pending if f in ingested)
         fresh = sorted(f for f in pending if f not in ingested)
-        # Secondary replay signal (ADVICE r5 medium): a LEGACY-format run
-        # (appended before per-file provenance existed) that crashed
-        # between store commit and manifest commit leaves its files out of
-        # committed_files(); with an unchanged pending set the derived rid
-        # equals the committed run id, and re-appending under it would
-        # raise 'already committed' on every tick — wedging the loop.
-        # rid membership in committed_runs() proves this exact pending set
-        # was already ingested, so route it all through replay.
-        if fresh and rid in store.committed_runs():
-            already, fresh = sorted(pending), []
 
         # Verify-stage texts: only files that can hold candidate-touched
-        # docs — the pending set plus every store-member file. Files that
-        # land in the table concurrently (after the listing above) are
-        # never scanned; io.read(table) at action time would be. Legacy
-        # stores without per-run file provenance fall back to the
-        # manifest's processed set.
+        # docs — the pending set plus every store-member file (every store
+        # run records its input files). Files that land in the table
+        # concurrently (after the listing above) are never scanned;
+        # io.read(table) at action time would be.
         needed = set(pending) | ingested
-        if not store.files_complete():
-            needed |= manifest.processed_files
-        corpus = io.read_files(spark, table, sorted(needed & set(all_files) | set(pending)))
+        corpus = io.read_files(spark, table, sorted(needed & set(all_files)))
 
         parts = []
         if already:
@@ -123,22 +110,6 @@ def dedup_tick(
         out = os.path.join(sink_root, "runs", rid, "pairs")
         pairs.write.mode("overwrite").parquet(out)
         n_pairs = spark.read.parquet(out).count()
-        # Observability for the legacy crash window (ADVICE r5 low): when
-        # store provenance is incomplete, signatures may belong to files
-        # in neither the pending set nor the manifest — their candidate
-        # pairs are silently dropped by the text semi-join. Count them so
-        # the loss is visible in the tick result (legacy stores only; the
-        # count is one anti-join over id-only projections).
-        n_orphan = 0
-        if not store.files_complete():
-            sigs_all = store.load(spark)
-            if sigs_all is not None:
-                n_orphan = (
-                    sigs_all.select("doc_id")
-                    .distinct()
-                    .join(corpus.select("doc_id").distinct(), "doc_id", "left_anti")
-                    .count()
-                )
         mf.commit_run(sink_root, mf.RunRecord(run_id=rid, input_files=pending))
         return {
             "run_id": rid,
@@ -146,7 +117,6 @@ def dedup_tick(
             "n_pairs": n_pairs,
             "replayed_files": already,
             "corpus_files": sorted(corpus.inputFiles()),
-            "n_orphan_sig_docs": n_orphan,
         }
 
 

@@ -4,7 +4,7 @@
       → build(): scan → filter chain → enrich joins → router
                  (ALL narrow — one stage, no shuffle before the sinks)
       → run():   one partitioned sink write + one per-sink-counts aggregate,
-                 observation + accumulator metrics, resume manifest commit.
+                 observation metrics, resume manifest commit.
 
 Scale notes (the 100 TB story):
 - Everything before the write/agg is a single narrow stage: parquet/Iceberg

@@ -88,7 +88,7 @@ def transcripts_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 FLAGSHIP_FILTERS = [
-    {"type": "grok", "source": "text", "match": [GROK_K], "add_tag": ["parsed"], "accumulators": False},
+    {"type": "grok", "source": "text", "match": [GROK_K], "add_tag": ["parsed"]},
 ]
 FLAGSHIP_SINKS = [
     {"name": "parsed", "when": {"tags_include": ["parsed"]}},
@@ -136,7 +136,7 @@ def q_grok_typed_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_workers(spark)
     ev = _t(spark, sf_dir, "events")
     out = apply_filter_chain(
-        ev, [{"type": "grok", "source": "props", "match": [GROK_K], "accumulators": False}]
+        ev, [{"type": "grok", "source": "props", "match": [GROK_K]}]
     )
     return out.select("event_id", "k")
 
@@ -146,7 +146,7 @@ def q_grok_failure_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     out = apply_filter_chain(
         docs,
-        [{"type": "grok", "source": "text", "match": [r"key %{GREEDYDATA:rest}"], "accumulators": False}],
+        [{"type": "grok", "source": "text", "match": [r"key %{GREEDYDATA:rest}"]}],
     )
     return out.select(
         "doc_id",

@@ -491,12 +491,14 @@ def test_dedup_agent_ticks_equal_whole_corpus(spark, tmp_path):
     assert got_again == whole
 
 
-def test_dedup_agent_replay_with_new_arrival(spark, tmp_path):
+@pytest.mark.parametrize("new_arrival", [True, False])
+def test_dedup_agent_replay_with_new_arrival(spark, tmp_path, monkeypatch, new_arrival):
     """ADVICE r4 (medium): a tick dies between the SignatureStore commit
-    and the manifest commit, and a NEW file arrives before the retry. The
-    pending set (and rid) changes — replay must still be detected PER FILE
-    so the crashed file's signatures are never appended twice, and the
-    union of pairs still equals the one-shot whole-corpus set."""
+    and the manifest commit. If a NEW file arrives before the retry, the
+    pending set (and rid) changes; if not, the retry derives the crashed
+    tick's rid. Either way replay must be detected PER FILE so the
+    crashed file's signatures are never appended twice, and the union of
+    pairs still equals the one-shot whole-corpus set."""
     import pandas as pd
 
     from logspark.operators import dedup
@@ -513,31 +515,51 @@ def test_dedup_agent_replay_with_new_arrival(spark, tmp_path):
     pd.DataFrame(b1, columns=["doc_id", "text"]).to_parquet(tbl / "f1.parquet")
     io = ParquetIO(str(tmp_path / "in"))
     sink = str(tmp_path / "agent")
+    store = dedup.SignatureStore(str(tmp_path / "agent" / "sigstore"))
 
     r1 = dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)
     assert r1["run_id"]
 
-    # tick 2 ingests f2 but "crashes" before the manifest commit: simulate
-    # by running the tick then dropping its run from the manifest (the
-    # store keeps f2's signatures — exactly the crash window)
+    # tick 2 ingests f2 and crashes before its manifest commit (the store
+    # commit already happened — exactly the crash window)
     pd.DataFrame(b2, columns=["doc_id", "text"]).to_parquet(tbl / "f2.parquet")
-    r2 = dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)
-    m = mf.load_manifest(sink)
-    mf.save_manifest(sink, mf.Manifest(runs=[r for r in m.runs if r.run_id != r2["run_id"]]))
+    real_commit = mf.commit_run
 
-    # a NEW file arrives before the retry -> pending = {f2, f3}, rid changes
-    pd.DataFrame(b3, columns=["doc_id", "text"]).to_parquet(tbl / "f3.parquet")
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(dedup_agent.mf, "commit_run", real_commit)
+        raise RuntimeError("crash before the manifest commit")
+
+    monkeypatch.setattr(dedup_agent.mf, "commit_run", crash_once)
+    with pytest.raises(RuntimeError, match="crash before the manifest commit"):
+        dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)
+    runs_after_crash = store.committed_runs()
+    crashed_rid = runs_after_crash[-1]
+    assert len(runs_after_crash) == 2
+    assert crashed_rid not in {r.run_id for r in mf.load_manifest(sink).runs}
+
+    batches = b1 + b2
+    if new_arrival:
+        # a NEW file arrives before the retry -> pending = {f2, f3}, rid changes
+        pd.DataFrame(b3, columns=["doc_id", "text"]).to_parquet(tbl / "f3.parquet")
+        batches += b3
     r3 = dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)
-    assert r3["run_id"] != r2["run_id"]
     assert any(f.endswith("f2.parquet") for f in r3["replayed_files"])
+    if new_arrival:
+        assert r3["run_id"] != crashed_rid
+        assert store.committed_runs() == runs_after_crash + [r3["run_id"]]
+    else:
+        # same pending set -> same rid, routed through replay, no append
+        assert r3["run_id"] == crashed_rid
+        assert r3["replayed_files"] == r3["new_files"]
+        assert store.committed_runs() == runs_after_crash
+    assert dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)["run_id"] is None
 
     # the store must hold exactly ONE signature row per doc (no re-append)
-    store = dedup.SignatureStore(str(tmp_path / "agent" / "sigstore"))
     sigs = store.load(spark).groupBy("doc_id").count().collect()
-    assert all(r["count"] == 1 for r in sigs) and len(sigs) == 6
+    assert all(r["count"] == 1 for r in sigs) and len(sigs) == len(batches)
 
     # union of tick pairs == one-shot whole-corpus pairs
-    corpus = spark.createDataFrame(b1 + b2 + b3, "doc_id bigint, text string")
+    corpus = spark.createDataFrame(batches, "doc_id bigint, text string")
     whole = {
         (r["a"], r["b"])
         for r in dedup.ngram_jaccard(
@@ -588,47 +610,6 @@ def test_dedup_tick_verify_scan_pruned(spark, tmp_path):
     assert any("f2.parquet" in f for f in r2["corpus_files"])  # pending file scanned
 
 
-def test_dedup_tick_legacy_store_fallback_scans_manifest_files(spark, tmp_path):
-    """When the store holds runs WITHOUT file provenance (legacy format),
-    dedup_tick must fall back to scanning manifest-processed files for
-    verify texts — pruning only what provenance can prove. Built by
-    manually appending a provenance-less run for a committed file."""
-    import os
-
-    import pandas as pd
-
-    from logspark.operators import dedup
-    from logspark.plans import dedup_agent
-    from logspark.sources import manifest as mf
-    from logspark.sources.tableio import ParquetIO
-
-    base = "the quick brown fox jumps over the lazy dog near the river bank"
-    tbl = tmp_path / "in" / "docs.parquet"
-    tbl.mkdir(parents=True)
-    pd.DataFrame([(1, base), (2, base + " today")], columns=["doc_id", "text"]
-                 ).to_parquet(tbl / "f1.parquet")
-    io = ParquetIO(str(tmp_path / "in"))
-    sink = str(tmp_path / "agent")
-
-    # simulate a legacy deployment: f1 ingested + committed WITHOUT file
-    # provenance in the store index
-    f1 = io.input_files(spark, "docs")[0]
-    store = dedup.SignatureStore(os.path.join(sink, "sigstore"))
-    docs1 = io.read_files(spark, "docs", [f1])
-    store.append(dedup.minhash_signatures(docs1), "legacy-r1")  # no input_files
-    os.makedirs(sink, exist_ok=True)
-    mf.commit_run(sink, mf.RunRecord(run_id="legacy-r1", input_files=[f1]))
-    assert not store.files_complete()
-
-    pd.DataFrame([(3, base + " yesterday")], columns=["doc_id", "text"]
-                 ).to_parquet(tbl / "f2.parquet")
-    r = dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)
-    # fallback: the legacy file's texts WERE scanned (cross-file pair found)
-    assert any("f1.parquet" in f for f in r["corpus_files"])
-    got = {(x["a"], x["b"]) for x in dedup_agent.all_pairs(spark, sink).collect()}
-    assert any(a in (1, 2) and b == 3 for a, b in got)  # crosses the legacy boundary
-
-
 def test_watch_dedup_compaction_preserves_provenance(spark, tmp_path):
     """watch_dedup's compact_every folds the store's run dirs into one
     WITHOUT losing the per-file ingestion provenance — a post-compaction
@@ -660,7 +641,6 @@ def test_watch_dedup_compaction_preserves_provenance(spark, tmp_path):
     store = dedup.SignatureStore(os.path.join(sink, "sigstore"))
     assert len(store.committed_runs()) < 3  # compaction actually fired
     assert len(store.committed_files()) == 3  # provenance survived
-    assert store.files_complete()
     sigs = store.load(spark).groupBy("doc_id").count().collect()
     assert all(r["count"] == 1 for r in sigs) and len(sigs) == 4
     corpus = spark.createDataFrame([r for b in batches for r in b], "doc_id bigint, text string")
@@ -695,56 +675,6 @@ def test_watch_dedup_loop(spark, tmp_path):
     )
     assert len(res) == 2
     assert res[0]["run_id"] is not None and res[1]["run_id"] is None
-
-
-def test_dedup_tick_legacy_crash_window_replays_not_wedges(spark, tmp_path):
-    """ADVICE r5 medium: a LEGACY-format run (no per-file provenance) that
-    crashed between the store commit and the manifest commit leaves its
-    files out of committed_files(); with an unchanged pending set the
-    tick's derived rid equals the committed run id, and re-appending
-    under it raised 'already committed' on every tick — a permanent
-    wedge. The rid-membership secondary signal must route the pending
-    set through replay instead."""
-    import hashlib
-
-    import pandas as pd
-
-    from logspark.operators import dedup
-    from logspark.plans import dedup_agent
-    from logspark.sources.tableio import ParquetIO
-
-    tbl = tmp_path / "in" / "docs.parquet"
-    tbl.mkdir(parents=True)
-    pd.DataFrame(
-        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta epsilon")],
-        columns=["doc_id", "text"],
-    ).to_parquet(tbl / "f1.parquet")
-    io = ParquetIO(str(tmp_path / "in"))
-    sink = str(tmp_path / "agent")
-
-    # simulate the crashed legacy tick: store committed under the SAME rid
-    # the retry will derive (pending-set hash), without input_files; the
-    # manifest commit never happened
-    pending = io.input_files(spark, "docs")
-    rid = "d-" + hashlib.md5("\n".join(sorted(pending)).encode()).hexdigest()[:12]
-    docs = spark.read.parquet(*pending)
-    import os
-
-    store = dedup.SignatureStore(os.path.join(sink, "sigstore"))
-    store.append(dedup.minhash_signatures(docs), rid)  # no input_files
-
-    r = dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.3)
-    assert r["run_id"] == rid
-    assert r["replayed_files"] == sorted(pending)  # routed through replay
-    assert r["n_pairs"] >= 1  # (1, 2) is a near-dup pair
-    assert store.committed_runs() == [rid]  # no duplicate append
-    # provenance incomplete → the orphan-signature audit ran (0 here:
-    # every store doc has corpus text)
-    assert r["n_orphan_sig_docs"] == 0
-
-    # and the loop does not wedge: next tick is a clean no-op
-    r2 = dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.3)
-    assert r2["run_id"] is None
 
 
 def test_signature_store_partition_by_must_match_existing_layout(spark, tmp_path):

@@ -39,7 +39,7 @@ def test_single_python_eval_through_router(transcripts):
     """The explode router must not duplicate the grok pandas UDF (pandas
     engine forced — the fallback path for non-JVM-expressible patterns)."""
     parsed = apply_filter_chain(
-        transcripts, [{**FLAGSHIP_FILTERS[0], "accumulators": False, "engine": "pandas"}]
+        transcripts, [{**FLAGSHIP_FILTERS[0], "engine": "pandas"}]
     )
     routed = route(parsed, FLAGSHIP_SINKS)
     plan = _plan(routed.select("sink", "conv_id"))
@@ -50,9 +50,7 @@ def test_native_grok_has_zero_python(transcripts):
     """JVM-expressible grok configs (the common case: every canonical and
     flagship pattern) must compile to pure Column expressions — no Arrow
     boundary, no Python workers, anywhere in the routed plan."""
-    parsed = apply_filter_chain(
-        transcripts, [{**FLAGSHIP_FILTERS[0], "accumulators": False}]
-    )
+    parsed = apply_filter_chain(transcripts, FLAGSHIP_FILTERS)
     routed = route(parsed, FLAGSHIP_SINKS)
     plan = _plan(routed.select("sink", "conv_id"))
     assert "ArrowEvalPython" not in plan, plan
@@ -73,7 +71,7 @@ def test_native_grok_whole_canonical_pipeline_python_free(transcripts, dims):
 def test_grok_engine_fallback_and_force(transcripts):
     """Optional capture groups are not JVM-expressible: auto falls back to
     the pandas UDF; engine='native' refuses loudly."""
-    opt = {"type": "grok", "source": "text", "match": [r"c%{INT:a:int}(?: %{INT:b:int})?"], "accumulators": False}
+    opt = {"type": "grok", "source": "text", "match": [r"c%{INT:a:int}(?: %{INT:b:int})?"]}
     parsed = apply_filter_chain(transcripts, [opt])
     assert _plan(parsed).count("ArrowEvalPython") == 1
     with pytest.raises(ValueError, match="not JVM-expressible"):
@@ -91,11 +89,7 @@ def test_enrich_is_broadcast_hash_join(transcripts, dims):
 def test_no_shuffle_before_sink_write(transcripts, dims):
     """scan → grok → patch/json → enrich → route is ONE narrow stage."""
     cfg = canonical_config()
-    filters = [
-        {**f, "accumulators": False} if f.get("type") == "grok" else f
-        for f in cfg.filter
-    ]
-    parsed = apply_filter_chain(transcripts, filters)
+    parsed = apply_filter_chain(transcripts, cfg.filter)
     parsed = apply_enrich_chain(parsed, cfg.enrich, dims)
     routed = route(parsed, cfg.output)
     plan = _plan(routed)
@@ -108,11 +102,7 @@ def test_no_shuffle_before_sink_write(transcripts, dims):
 def test_counts_aggregate_is_partial_final(transcripts, dims):
     """The only shuffle: partial aggregation below one Exchange."""
     cfg = canonical_config()
-    filters = [
-        {**f, "accumulators": False} if f.get("type") == "grok" else f
-        for f in cfg.filter
-    ]
-    parsed = apply_filter_chain(transcripts, filters)
+    parsed = apply_filter_chain(transcripts, cfg.filter)
     routed = route(parsed, cfg.output)
     plan = _plan(sink_counts(routed))
     assert plan.count("Exchange hashpartitioning") == 1, plan

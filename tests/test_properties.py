@@ -178,7 +178,7 @@ def test_native_engine_equals_pandas_engine(spark, lines):
     from logspark.operators.filters import apply_filter_chain
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(lines)], "rid int, text string")
-    base = {"type": "grok", "match": _ENGINE_PATTERNS, "accumulators": False}
+    base = {"type": "grok", "match": _ENGINE_PATTERNS}
     cols = ["rid", "k", "d", "rest", "head", "tail", "tags"]
     nat = apply_filter_chain(df, [dict(base, engine="native")]).select(*cols).collect()
     pan = apply_filter_chain(df, [dict(base, engine="pandas")]).select(*cols).collect()
@@ -205,7 +205,6 @@ def test_native_engine_carriage_return_parity(spark):
             "type": "grok",
             "match": [r"ev k=%{INT:k:int} d=%{DATA:d} rest=%{GREEDYDATA:rest}"],
             "anchor": anchor,
-            "accumulators": False,
         }
         cols = ["rid", "k", "d", "rest", "tags"]
         nat = apply_filter_chain(df, [dict(base, engine="native")]).select(*cols).collect()
@@ -234,11 +233,7 @@ def test_native_engine_control_char_whitespace_parity(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(lines)], "rid int, text string"
     )
-    base = {
-        "type": "grok",
-        "match": [r"%{NOTSPACE:head} %{GREEDYDATA:tail}"],
-        "accumulators": False,
-    }
+    base = {"type": "grok", "match": [r"%{NOTSPACE:head} %{GREEDYDATA:tail}"]}
     cols = ["rid", "head", "tail", "tags"]
     nat = apply_filter_chain(df, [dict(base, engine="native")]).select(*cols).collect()
     pan = apply_filter_chain(df, [dict(base, engine="pandas")]).select(*cols).collect()

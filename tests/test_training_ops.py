@@ -509,10 +509,12 @@ def test_incremental_dedup_equals_full_run(spark, docs, tmp_path):
         dedup.incremental_near_dup_pairs(store, batches[2], docs, run_id="r-2")
 
 
-def test_signature_store_compact(spark, docs, tmp_path):
+def test_signature_store_compact(spark, docs, tmp_path, monkeypatch):
     """compact() folds all runs into one deterministic directory with the
     identical signature set, sweeps stale dirs, and the store keeps
-    accepting incremental batches afterwards."""
+    accepting incremental batches afterwards. A compaction that crashes
+    after its parquet write but before the index swap leaves the store
+    unchanged, and the retry lands in the same directory."""
     import os
 
     store = dedup.SignatureStore(str(tmp_path / "sigs"))
@@ -520,11 +522,30 @@ def test_signature_store_compact(spark, docs, tmp_path):
     for i, b in enumerate(thirds[:2]):
         store.append(dedup.minhash_signatures(b), run_id=f"r-{i}")
     before = {r["doc_id"] for r in store.load(spark).select("doc_id").collect()}
+    n_before = store.load(spark).count()
+
+    real_write = dedup.SignatureStore._write_index
+
+    def crash_on_compacted_index(self, idx):
+        if idx["runs"] and idx["runs"][0].startswith("compact-"):
+            raise RuntimeError("crash before the compaction index swap")
+        real_write(self, idx)
+
+    with monkeypatch.context() as m:
+        m.setattr(dedup.SignatureStore, "_write_index", crash_on_compacted_index)
+        with pytest.raises(RuntimeError, match="compaction index swap"):
+            store.compact(spark)
+    assert store.committed_runs() == ["r-0", "r-1"]
+    assert store.load(spark).count() == n_before
+    assert {r["doc_id"] for r in store.load(spark).select("doc_id").collect()} == before
+    crashed = [d for d in os.listdir(tmp_path / "sigs" / "runs") if d.startswith("compact-")]
+    assert len(crashed) == 1  # the compacted parquet was written, never committed
 
     store.compact(spark)
     assert len(store.committed_runs()) == 1
     cid = store.committed_runs()[0]
-    assert cid.startswith("compact-")
+    assert cid == crashed[0]
+    assert store.load(spark).count() == n_before
     after = {r["doc_id"] for r in store.load(spark).select("doc_id").collect()}
     assert after == before
     assert sorted(os.listdir(tmp_path / "sigs" / "runs")) == [cid]
@@ -1094,7 +1115,7 @@ def test_watch_embed_dedup_with_compaction_and_pin_crash(spark, emb, tmp_path):
 
     store = SignatureStore(os.path.join(sink, "vstore"))
     assert len(store.committed_runs()) < 3  # compaction fired
-    assert store.files_complete() and len(store.committed_files()) == 3
+    assert len(store.committed_files()) == 3
     rows = store.load_runs_union(spark).groupBy("vec_id", "cell").count().collect()
     assert all(r["count"] == 1 for r in rows)
     run_dir = os.path.join(sink, "vstore", "runs", store.committed_runs()[0])
@@ -1109,13 +1130,16 @@ def test_watch_embed_dedup_with_compaction_and_pin_crash(spark, emb, tmp_path):
     assert got == one and one
 
 
-def test_vector_store_compaction_partitioned_and_legacy_semantics(spark, emb, tmp_path):
-    """r5 review fixes: (a) compacting a CELL-PARTITIONED store must use
+def test_vector_store_compaction_partitioned_and_provenance_less_store_rejected(
+    spark, emb, tmp_path
+):
+    """(a) r5 review fix: compacting a CELL-PARTITIONED store must use
     the per-run union load (the multi-path read throws
     CONFLICTING_DIRECTORY_STRUCTURES on partitioned run dirs) and keep
-    the partitioned layout + pruning; (b) compaction must NOT fabricate
-    complete provenance when a legacy run was appended without
-    input_files — files_complete() stays False across compaction."""
+    the partitioned layout + pruning; (b) a store whose index holds a run
+    without input-file provenance (the pre-provenance format) is rejected
+    loudly instead of silently losing its docs' pairs."""
+    import json
     import os
     import re
 
@@ -1137,7 +1161,7 @@ def test_vector_store_compaction_partitioned_and_legacy_semantics(spark, emb, tm
     assert len(vs.committed_runs()) == 1
     after = {(r["vec_id"], r["cell"]) for r in vs.load_runs_union(spark).collect()}
     assert after == before
-    assert vs.committed_files() == {"f0", "f1"} and vs.files_complete()
+    assert vs.committed_files() == {"f0", "f1"}
     run_dir = os.path.join(str(tmp_path / "vs"), "runs", vs.committed_runs()[0])
     assert any(d.startswith("cell=") for d in os.listdir(run_dir))  # layout kept
     plan = (
@@ -1147,17 +1171,12 @@ def test_vector_store_compaction_partitioned_and_legacy_semantics(spark, emb, tm
     )
     assert re.search(r"PartitionFilters: \[.*cell", plan)
 
-    # (b) legacy run without provenance: incompleteness survives compaction
+    # (b) an index with a run lacking a `files` entry is refused
     ls = SignatureStore(str(tmp_path / "ls"))
-    sigs = spark.createDataFrame([(1, 7), (2, 9)], "doc_id bigint, h bigint")
-    ls.append(sigs, "legacy")  # no input_files
-    ls.append(spark.createDataFrame([(3, 5)], "doc_id bigint, h bigint"),
-              "new", input_files=["fX"])
-    assert not ls.files_complete()
-    ls.compact(spark)
-    assert len(ls.committed_runs()) == 1
-    assert not ls.files_complete()  # compaction did not fabricate provenance
-    assert "fX" in ls.committed_files()
+    with open(os.path.join(str(tmp_path / "ls"), "index.json"), "w") as f:
+        json.dump({"runs": ["old", "new"], "files": {"new": ["fX"]}}, f)
+    with pytest.raises(ValueError, match="predates per-run provenance"):
+        ls.committed_files()
 
 
 def test_ivf_index_partition_pruned_search(spark, emb, tmp_path):
