@@ -80,7 +80,7 @@ def _extra_bench_queries() -> dict:
 
     def sample_frames(spark, sf_dir):
         media = multimodal.synth_media_df(spark, 2000)
-        return multimodal.sample_frames(media, frame_stride=200, max_frames=8, fake=True)
+        return multimodal.sample_frames(media, frame_stride=200, max_frames=8)
 
     def approx_distinct(spark, sf_dir):
         ev = _t(spark, sf_dir, "events")

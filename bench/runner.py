@@ -10,7 +10,7 @@ machine's own (no-Spark) scaling ceiling for context: past ~16 busy cores
 this VM slows per-core, so 8→32 is bounded at ~0.66 by hardware alone.
 
 The measured job is the full canonical pipeline over a pre-generated
-transcripts table: scan → grok pandas UDF (2 patterns) → json codec →
+transcripts table: scan → JVM-native grok (2 patterns) → json codec →
 patch templates → 2 broadcast enrich joins → sinks/explode router →
 partitioned routed write + per-sink (conv_id, hour) counts write.
 
@@ -87,11 +87,6 @@ def run_parse_route(spark, input_path: str, out_dir: str) -> dict:
     ensure_workers(spark)
     cfg = canonical_config()
     cfg.input = [{"type": "memory"}]
-    engine = os.environ.get("SPARK_GRAFT_GROK_ENGINE")
-    if engine:
-        for f in cfg.filter:
-            if f["type"] == "grok":
-                f["engine"] = engine
     dims = {
         "tool_catalog": spark.createDataFrame(tool_catalog_pdf()),
         "role_map": spark.createDataFrame(role_map_pdf()),
@@ -104,7 +99,7 @@ def run_parse_route(spark, input_path: str, out_dir: str) -> dict:
     # on a real cluster — including it would charge a constant to both
     # levels and distort the throughput ratio. Execution (physical planning,
     # scheduling, all stages, commits) is fully inside the timed window.
-    bp = build(spark, cfg, df=src, dims=dims, observe=True)
+    bp = build(spark, cfg, df=src, dims=dims)
     _ = bp.routed.schema
 
     t0 = time.time()

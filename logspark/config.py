@@ -79,11 +79,6 @@ def canonical_config(sink_dir: str | None = None) -> PipelineConfig:
                         r"%{NONNEGINT:response:int} %{NONNEGINT:bytes:int}",
                     ],
                     "add_tag": ["parsed"],
-                    # (prefilter_rlike is available but not used here: with
-                    # start-anchored patterns the regex engine rejects
-                    # non-matching rows in ~O(1), so a prefilter only adds
-                    # a pass — measured slower. It pays off for UNANCHORED
-                    # patterns where rejection scans the whole string.)
                 },
                 {
                     "type": "json",

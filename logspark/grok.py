@@ -258,7 +258,7 @@ class CompiledGrok:
                 out.setdefault(f.name, f.type)
         return out
 
-    def extract_pandas(self, s: pd.Series, prefilter: str | None = None) -> pd.DataFrame:
+    def extract_pandas(self, s: pd.Series) -> pd.DataFrame:
         """Columnar first-match-wins extraction.
 
         Returns a DataFrame with one column per capture name (string dtype,
@@ -267,9 +267,7 @@ class CompiledGrok:
         lacks a given field) hold nulls.
 
         One `str.extract` pass per pattern over the still-unmatched subset:
-        the gALL outer group doubles as the match indicator. An optional
-        `prefilter` regex (cheap anchor) excludes obvious non-matches from
-        even entering the pattern regexes.
+        the gALL outer group doubles as the match indicator.
         """
         # Direct numpy-object loop: pandas' str.extract spends ~4x more on
         # per-row wrapper overhead than on the regex itself (profiled), so
@@ -282,15 +280,7 @@ class CompiledGrok:
         matched = np.zeros(n, dtype=bool)
         cols: dict[str, np.ndarray] = {m: np.full(n, None, dtype=object) for m in names}
 
-        # re.ASCII for Java-default \s\S\w\d\b parity (see compile()).
-        pre = re.compile(prefilter, re.ASCII) if prefilter is not None else None
-        if pre is not None:
-            remaining = [
-                i for i, x in enumerate(arr)
-                if x is not None and pre.match(x) is not None
-            ]
-        else:
-            remaining = [i for i, x in enumerate(arr) if x is not None]
+        remaining = [i for i, x in enumerate(arr) if x is not None]
 
         for pat in self.patterns:
             if not remaining:
@@ -347,10 +337,12 @@ class CompiledGrok:
 # - backreferences (group renumbering would break them);
 # - unescaped literal '{' that is not a {m,n} quantifier (Java rejects);
 # - Python-only (?...) constructs.
-# Known residual divergence: Java \w/\b are ASCII while Python 3's are
-# Unicode. This matches Go's RE2 (the reference engine) and every oracle
-# (DuckDB RE2), so ASCII-class behavior is the CORRECT parity target; a
-# config can force engine="pandas" for Unicode-class matching.
+# Character classes: both engines are ASCII-class. Java's \s \w \d \b are
+# ASCII by default and the pandas engine compiles with re.ASCII (see
+# GrokCompiler.compile), so the two agree byte for byte. This matches Go's
+# RE2 (the reference engine) and every oracle (DuckDB RE2), the parity
+# target. The pandas engine exists only for patterns that are not
+# JVM-expressible, never for different matching semantics.
 #
 # Line-terminator parity: every emitted Java regex is prefixed with (?d)
 # (UNIX_LINES), so '.', '^', '$' treat ONLY \n as a line terminator — the

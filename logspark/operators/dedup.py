@@ -973,32 +973,25 @@ def incremental_near_dup_pairs(
     bands: int = 4,
     k: int = 3,
     threshold: float = 0.5,
-    max_bucket: int | None = None,
     replay: bool = False,
     input_files: list[str] | None = None,
 ) -> DataFrame:
     """Verified near-dup pairs INVOLVING the new batch: new-vs-new plus
     new-vs-already-ingested, then append the new signatures to the store.
 
-    Guarantee (for `max_bucket=None`, the gated configuration): unioning
-    each run's pairs over a sequence of incremental runs yields EXACTLY
-    the full-corpus pair set (every pair {x, y} is emitted by the run that
-    ingests its later member), so incremental ingestion and a one-shot
-    whole-corpus run produce the same surviving set under dedup_apply —
-    property-tested and under the DuckDB gate. With `max_bucket` SET the
-    equivalence does NOT hold exactly: the cap is evaluated per run on the
-    partial (old ∪ new) banded set, so a bucket under the cap in an early
-    run emits pairs that the one-shot run (where the bucket exceeds the
-    cap) would drop, and vice versa — capped incremental runs can diverge
-    from the one-shot capped run in either direction (ADVICE r3).
+    Guarantee: unioning each run's pairs over a sequence of incremental
+    runs yields EXACTLY the full-corpus pair set (every pair {x, y} is
+    emitted by the run that ingests its later member), so incremental
+    ingestion and a one-shot whole-corpus run produce the same surviving
+    set under dedup_apply — property-tested and under the DuckDB gate.
+    Buckets are never capped here: a cap evaluated per run on the partial
+    (old ∪ new) banded set would break that equality.
 
     Scale shape per run (N = corpus so far, B = new batch, B << N):
     - signatures computed for B only (the store holds the rest);
     - banding is a narrow projection of both sides; the candidate join is
       band(new) ⋈ band(all) — the all side streams, the new side is the
       small build side;
-    - `max_bucket` caps buckets by their CURRENT (old ∪ new) size — the
-      same defense as the whole-corpus path, evaluated per run;
     - Jaccard verification re-reads texts ONLY for candidate-touched docs
       (semi-join prune on the corpus), O(|candidates| · shingles/doc).
 
@@ -1030,7 +1023,7 @@ def incremental_near_dup_pairs(
         all_sigs = old_sigs
     else:
         all_sigs = new_sigs if old_sigs is None else old_sigs.unionByName(new_sigs)
-    all_b = cap_buckets(band_signatures(all_sigs, id_col, n_hashes, bands), max_bucket)
+    all_b = band_signatures(all_sigs, id_col, n_hashes, bands)
     new_ids = new_sigs.select(id_col)
     new_b = all_b.join(new_ids, id_col, "leftsemi")
 

@@ -89,66 +89,56 @@ def grok_output_schema(match: list[str] | str, patterns: dict | None, anchor: st
     return StructType(fields)
 
 
+_GROK_KEYS = frozenset({"type", "source", "match", "patterns", "anchor", "failure_tag", "add_tag"})
+
+
 @register_filter("grok")
 def grok_filter(df: DataFrame, cfg: dict) -> DataFrame:
     """Compile `match` pattern(s) to anchored regexes; extract named captures
     from `source`; promote captures to top-level columns; tag non-matching
     rows with `_grokparsefailure` (first-match-wins across patterns).
 
-    Two engines, selected by cfg["engine"]:
-    - "auto" (default): JVM-NATIVE when every pattern is safely expressible
-      as Java regex with always-participating captures (logspark.grok
-      compile_grok_java) — rlike + regexp_extract + try_cast columns, zero
-      Python workers, whole-stage codegen; falls back to pandas otherwise.
-    - "pandas": the Arrow-batched vectorized UDF (per-worker compile cache).
-      Needed for Unicode \\w/\\b semantics or optional capture groups.
-    - "native": force JVM; raises if the pattern set is not expressible.
+    The engine follows from the pattern set alone: JVM-NATIVE when every
+    pattern is safely expressible as Java regex with always-participating
+    captures (logspark.grok compile_grok_java) — rlike + regexp_extract +
+    try_cast columns, zero Python workers, whole-stage codegen; otherwise
+    the Arrow-batched pandas UDF (_grok_pandas), which exists only for
+    patterns that are not JVM-expressible (optional or alternated
+    captures). Both engines share ASCII-class \\s \\w \\d \\b semantics, the
+    RE2/DuckDB parity target. A config key outside the grok keys raises.
 
     Parse metrics: rows/failures come from the plan-level `observe` the
     pipeline attaches (plans/pipeline.py), which is exact for both engines
     and free."""
-    source = cfg.get("source", "text")
-    match = cfg["match"] if isinstance(cfg["match"], list) else [cfg["match"]]
-    patterns = cfg.get("patterns")
-    anchor = cfg.get("anchor", "start")
-    failure_tag = cfg.get("failure_tag", GROK_FAILURE_TAG)
+    unknown = sorted(set(cfg) - _GROK_KEYS)
+    if unknown:
+        raise ValueError(f"unknown grok config key(s) {unknown}; known: {sorted(_GROK_KEYS)}")
+    jpatterns = compile_grok_java(cfg["match"], cfg.get("patterns"), cfg.get("anchor", "start"))
+    if jpatterns is not None:
+        return _grok_native(df, cfg, jpatterns)
+    return _grok_pandas(df, cfg)
+
+
+def _grok_pandas(df: DataFrame, cfg: dict) -> DataFrame:
+    """The pandas-UDF grok engine: one Arrow-batched UDF (per-worker compile
+    cache) returns every capture plus the match bit in one struct."""
+    match, patterns, anchor = cfg["match"], cfg.get("patterns"), cfg.get("anchor", "start")
     schema = grok_output_schema(match, patterns, anchor)
-    capture_names = [f.name for f in schema.fields[:-1]]
-
-    engine = cfg.get("engine", "auto")
-    if engine not in ("auto", "native", "pandas"):
-        raise ValueError(f"unknown grok engine {engine!r}")
-    if engine in ("auto", "native"):
-        jpatterns = compile_grok_java(list(match), patterns, anchor)
-        if jpatterns is None and engine == "native":
-            raise ValueError(
-                "grok engine='native' but the pattern set is not JVM-expressible "
-                "(optional/alternated capture group, backreference, or literal '{')"
-            )
-        if jpatterns is not None:
-            return _grok_native(df, cfg, source, schema, jpatterns, failure_tag)
-
     # Only plain config values cross the closure boundary — each Python
     # worker re-resolves the compiled grok from its own process cache.
     patterns_items = tuple(sorted((patterns or {}).items())) or None
 
-    # Cheap prefilter (Sparser-style "filter before you parse", PAPERS.md).
-    # It runs INSIDE the pandas UDF: a JVM-side CASE WHEN around a Python
-    # UDF does NOT skip evaluation (ExtractPythonUDFs evaluates the UDF for
-    # every row unconditionally), so the skip has to happen in pandas.
-    prefilter = cfg.get("prefilter_rlike")
-
     def _extract(s: pd.Series) -> pd.DataFrame:
-        cg = compile_grok(list(match), dict(patterns_items) if patterns_items else None, anchor)
-        return cg.extract_pandas(s, prefilter=prefilter)
+        cg = compile_grok(match, dict(patterns_items) if patterns_items else None, anchor)
+        return cg.extract_pandas(s)
 
     udf = F.pandas_udf(_extract, returnType=schema)
-    df = df.withColumn("_g", udf(F.col(source)))
-    for name in capture_names:
-        df = df.withColumn(name, F.col("_g").getField(name))
+    df = df.withColumn("_g", udf(F.col(cfg.get("source", "text"))))
+    for f in schema.fields[:-1]:
+        df = df.withColumn(f.name, F.col("_g").getField(f.name))
     matched = F.coalesce(F.col("_g").getField("_grok_matched"), F.lit(False))
     new_tags = F.when(matched, add_tags(F.col("tags"), cfg.get("add_tag", []))).otherwise(
-        add_tags(F.col("tags"), [failure_tag])
+        add_tags(F.col("tags"), [cfg.get("failure_tag", GROK_FAILURE_TAG)])
     )
     return df.withColumn("tags", new_tags).drop("_g")
 
@@ -156,14 +146,7 @@ def grok_filter(df: DataFrame, cfg: dict) -> DataFrame:
 _GROK_DELIM = "\x01"  # never occurs in log text; collisions detected per row
 
 
-def _grok_native(
-    df: DataFrame,
-    cfg: dict,
-    source: str,
-    schema: StructType,
-    jpatterns,
-    failure_tag: str,
-) -> DataFrame:
+def _grok_native(df: DataFrame, cfg: dict, jpatterns) -> DataFrame:
     """JVM-side grok — all expressions inside whole-stage codegen, no Arrow
     boundary. Regex evaluations per row are capture-count-INDEPENDENT:
 
@@ -180,7 +163,8 @@ def _grok_native(
 
     Typed captures coerce via `try_cast` (null on bad parse — same as the
     pandas path's to_numeric coerce)."""
-    src = F.col(source)
+    schema = grok_output_schema(cfg["match"], cfg.get("patterns"), cfg.get("anchor", "start"))
+    src = F.col(cfg.get("source", "text"))
 
     # Materialize the expensive expressions (rlike match bits; the one-shot
     # replace+split capture vector) as REAL columns, referenced by name
@@ -250,7 +234,7 @@ def _grok_native(
         df = df.withColumn(name, value)
 
     new_tags = F.when(matched, add_tags(F.col("tags"), cfg.get("add_tag", []))).otherwise(
-        add_tags(F.col("tags"), [failure_tag])
+        add_tags(F.col("tags"), [cfg.get("failure_tag", GROK_FAILURE_TAG)])
     )
     return df.withColumn("tags", new_tags).drop(*tmp)
 

@@ -1,14 +1,14 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
-The container has no image/audio codecs (no PIL/ffmpeg), so the DECODE step
-is stubbed — but every piece of Spark plumbing is real and tested:
+The container has no image/audio codecs (no PIL/ffmpeg), so there is no
+codec decode: the one decoder reads the raw bytes themselves as the signal.
+Every piece of Spark plumbing is real and tested:
 
 - schema: `content: binary` + `media_type/width/height/duration_ms` metadata
 - partition-friendly batch shape: `mapInPandas` over Arrow record batches,
   so each Python worker sees a columnar slab of binaries, never one row
-- deterministic fake decoder (`fake=True`) derives features from the bytes
-  themselves, so tests pin the full pipeline shape end-to-end
-- the real decoder raises NotImplementedError with the dependency it needs
+- the byte-signal decoder is deterministic, so tests and the DuckDB oracle
+  pin the full pipeline shape end-to-end
 
 At 100 TB the binaries dominate bytes; the design keeps them in one narrow
 mapInPandas stage (no shuffle touches the binary column) and projects
@@ -35,20 +35,7 @@ FEATURE_SCHEMA_DDL = (
 )
 
 
-def _decode_real(content: bytes, media_type: str) -> np.ndarray:
-    raise NotImplementedError(
-        "real media decode needs Pillow (image/*) or av/ffmpeg (audio/*, "
-        "video/*), which are not installed in this container; run with "
-        "fake=True for the deterministic stub"
-    )
-
-
-def _decode_fake(content: bytes, media_type: str) -> np.ndarray:
-    """Deterministic stand-in: interpret the raw bytes as the 'signal'."""
-    return np.frombuffer(content, dtype=np.uint8).astype(np.float64)
-
-
-def extract_features(df: DataFrame, fake: bool = True, frame_stride: int = 1000) -> DataFrame:
+def extract_features(df: DataFrame, frame_stride: int = 1000) -> DataFrame:
     """Decode → feature-extract via mapInPandas (Arrow-batched, columnar).
 
     frame_stride models frame sampling: every `frame_stride` bytes counts as
@@ -61,13 +48,12 @@ def extract_features(df: DataFrame, fake: bool = True, frame_stride: int = 1000)
     (numpy's pairwise-summed .std() would differ in the last ulp)."""
     import math
 
-    decode = _decode_fake if fake else _decode_real
-
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             sig_mean, sig_std, frames, nbytes = [], [], [], []
-            for content, mtype in zip(pdf["content"], pdf["media_type"]):
-                arr = decode(bytes(content), mtype).astype(np.int64)
+            for content in pdf["content"]:
+                # byte-signal decode: the raw bytes are the signal
+                arr = np.frombuffer(bytes(content), dtype=np.uint8).astype(np.int64)
                 n = arr.size
                 nbytes.append(len(content))
                 if n:
@@ -99,14 +85,13 @@ RESIZED_SCHEMA_DDL = (
 )
 
 
-def resize_images(df: DataFrame, target_w: int, target_h: int, fake: bool = True) -> DataFrame:
+def resize_images(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
     """Resize image rows to (target_w, target_h); non-image rows pass through
     untouched. Same mapInPandas batch shape as extract_features.
 
-    Real path: PIL decode → resize → re-encode (NotImplementedError here —
-    no codec libs in this container). Fake path: deterministic nearest-
-    neighbor resample of the raw byte signal to target_w*target_h bytes, so
-    tests pin the plumbing (schema, pass-through, batch shape) exactly.
+    Deterministic nearest-neighbor resample of the raw byte signal to
+    target_w*target_h bytes, so tests pin the plumbing (schema,
+    pass-through, batch shape) exactly.
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -120,8 +105,6 @@ def resize_images(df: DataFrame, target_w: int, target_h: int, fake: bool = True
                     out_w.append(w)
                     out_h.append(h)
                     continue
-                if not fake:
-                    _decode_real(bytes(content), str(mtype))
                 src = np.frombuffer(bytes(content), dtype=np.uint8)
                 n_out = target_w * target_h
                 idx = (np.arange(n_out) * max(len(src), 1) // n_out) % max(len(src), 1)
@@ -150,7 +133,6 @@ def sample_frames(
     df: DataFrame,
     frame_stride: int = 1000,
     max_frames: int | None = None,
-    fake: bool = True,
 ) -> DataFrame:
     """Frame sampling: EXPLODE each audio/video row into one output row per
     sampled frame — (media_id, frame_idx, frame bytes) — the shape a
@@ -163,10 +145,8 @@ def sample_frames(
     Same mapInPandas batch contract as extract_features: Arrow-batched
     columnar, fan-out happens INSIDE the batch generator, so output rows
     per input batch can exceed the input row count without any Spark-side
-    explode. Real path: av/ffmpeg keyframe extraction
-    (NotImplementedError here — no codec libs in this container); fake
-    path slices the raw byte signal every `frame_stride` bytes, making
-    count/order/slicing deterministic and testable."""
+    explode. Frames are slices of the raw byte signal every `frame_stride`
+    bytes, making count/order/slicing deterministic and testable."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -175,8 +155,6 @@ def sample_frames(
                 pdf["media_id"], pdf["content"], pdf["media_type"]
             ):
                 raw = bytes(content)
-                if not fake:
-                    _decode_real(raw, str(mtype))
                 if str(mtype).startswith("image/"):
                     chunks = [raw]
                 else:
@@ -233,7 +211,7 @@ def media_from_documents(df: DataFrame, id_col: str = "doc_id", text_col: str = 
 
 
 def synth_media_df(spark, n: int = 64):
-    """Deterministic fake media table (binary payloads derived from ids)."""
+    """Deterministic synthetic media table (binary payloads derived from ids)."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids = pdf["id"].to_numpy()

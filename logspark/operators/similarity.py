@@ -605,7 +605,6 @@ def incremental_ivf_near_dups(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_bucket: int | None = None,
     input_files: list[str] | None = None,
     replay: bool = False,
 ) -> DataFrame:
@@ -622,19 +621,16 @@ def incremental_ivf_near_dups(
     `streaming_embedding_near_dups` — a drifting assignment splits cells
     across time; re-training means a new store generation).
 
-    Guarantee (max_bucket=None): union of per-run pairs over incremental
-    ingestion == one-shot `ivf_near_dups` with the same centroids —
-    every pair is emitted by the run ingesting its later member, sims
-    bit-identical (the dot fold is operand-order symmetric). With
-    max_bucket SET the cap is evaluated per run on partial cells, so
-    capped runs can diverge from the one-shot capped result in either
-    direction (same caveat as the MinHash path). `input_files` becomes
-    the appended run's provenance entry (empty for in-memory batches).
+    Guarantee: union of per-run pairs over incremental ingestion ==
+    one-shot `ivf_near_dups` with the same centroids — every pair is
+    emitted by the run ingesting its later member, sims bit-identical
+    (the dot fold is operand-order symmetric). Cells are never capped
+    here: a cap evaluated per run on partial cells would break that
+    equality. `input_files` becomes the appended run's provenance entry
+    (empty for in-memory batches).
     `replay=True` (with the caller holding per-file provenance,
     run_id=None) recomputes a crashed run's pairs without re-appending."""
     spark = new_vecs.sparkSession
-    from logspark.operators.dedup import cap_buckets
-
     m_new = ivf_assign_multi(new_vecs, centroids, nprobe, id_col, vec_col)
     m_new = m_new.localCheckpoint(eager=True)
     cells = [r["cell"] for r in m_new.select("cell").distinct().collect()]
@@ -666,7 +662,6 @@ def incremental_ivf_near_dups(
             if old_pruned is None
             else old_pruned.withColumn("_new", F.lit(False)).unionByName(tagged_new)
         )
-    all_m = cap_buckets(all_m, max_bucket, keys=("cell",))
     pairs = _pair_scores_grouped(
         all_m, ("cell",), threshold, id_col, vec_col, flag_col="_new"
     ).distinct()

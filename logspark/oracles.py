@@ -433,23 +433,6 @@ LSH_CANDIDATES = (
     f"SELECT a, b, TRUE AS capped FROM ({_lsh_select(max_bucket=20)})"
 )
 
-NGRAM_JACCARD = (
-    _SHINGLES_CTE
-    + """,
-sz AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY 1),
-inter AS (
-  SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS inter
-  FROM sh l JOIN sh r ON l.shingle = r.shingle AND l.doc_id < r.doc_id
-  GROUP BY 1, 2
-)
-SELECT a, b, round(CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter), 6) AS jaccard
-FROM inter
-JOIN sz sa ON sa.doc_id = a
-JOIN sz sb ON sb.doc_id = b
-WHERE round(CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter), 6) >= 0.5
-"""
-)
-
 # the scale path: exact Jaccard verified ONLY on LSH candidate pairs —
 # the quadratic shared-shingle pair space is never the driver of cost
 NGRAM_JACCARD_VERIFIED = (

@@ -12,8 +12,8 @@ Each tick:
   3. verified pairs written under runs/<run_id>/pairs, then the manifest
      commit marks the files processed (write-then-commit, like run()).
 
-Union-of-ticks == one-shot whole-corpus pairs (the incremental
-guarantee, max_bucket=None), so a corpus ingested file-by-file over
+Union-of-ticks == one-shot uncapped whole-corpus pairs (the incremental
+guarantee), so a corpus ingested file-by-file over
 days yields exactly the pair set a from-scratch batch job would — the
 operational shape of continuous training-data ingestion.
 
@@ -162,7 +162,7 @@ def embed_dedup_tick(
     hashes). Unlike the MinHash tick there is NO corpus re-read at all:
     the store carries the vectors, and its scan is pruned to the new
     batch's cells. Union-of-ticks == one-shot `ivf_near_dups` on the
-    pinned centroids (the incremental guarantee, max_bucket=None)."""
+    pinned centroids (the incremental guarantee)."""
     from logspark.operators.similarity import incremental_ivf_near_dups
 
     with WriterLock(sink_root):

@@ -41,7 +41,7 @@ class BuiltPipeline:
     parsed: DataFrame  # after filter chain + enrich (pre-router, all events)
     routed: DataFrame  # one row per (event, sink)
     counts: DataFrame  # (sink, conv_id, bucket, n)
-    observation: Observation | None = None
+    observation: Observation  # exact parse metrics: rows_in, parse_failures
 
 
 @dataclass
@@ -87,7 +87,6 @@ def build(
     df: DataFrame | None = None,
     io: ParquetIO | None = None,
     dims: dict[str, DataFrame] | None = None,
-    observe: bool = True,
     input_files: list[str] | None = None,
 ) -> BuiltPipeline:
     src = load_inputs(spark, cfg, io, df, input_files)
@@ -97,16 +96,14 @@ def build(
     if cfg.enrich:
         parsed = apply_enrich_chain(parsed, cfg.enrich, dims or {})
 
-    obs = None
-    if observe:
-        obs = Observation("parse")
-        parsed = parsed.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_in"),
-            F.sum(
-                F.array_contains(F.col("tags"), GROK_FAILURE_TAG).cast("long")
-            ).alias("parse_failures"),
-        )
+    obs = Observation("parse")
+    parsed = parsed.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows_in"),
+        F.sum(
+            F.array_contains(F.col("tags"), GROK_FAILURE_TAG).cast("long")
+        ).alias("parse_failures"),
+    )
 
     routed = route(parsed, cfg.output)
     counts = sink_counts(routed, bucket=cfg.aggregate.get("bucket", "hour"))
@@ -350,8 +347,7 @@ def _run_locked(
         for r in spark.read.parquet(counts_path).groupBy("sink").agg(F.sum("n").alias("n")).collect()
     }
     result.sink_rows = {k: int(v) for k, v in per_sink.items()}
-    if bp.observation is not None:
-        result.metrics.update({k: float(v) for k, v in bp.observation.get.items()})
+    result.metrics.update({k: float(v) for k, v in bp.observation.get.items()})
 
     mf.commit_run(
         sink_root,

@@ -645,7 +645,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_workers(spark)
     docs = _t(spark, sf_dir, "documents")
     media = multimodal.media_from_documents(docs)
-    return multimodal.extract_features(media, fake=True)
+    return multimodal.extract_features(media)
 
 
 QUERIES = {

@@ -115,7 +115,7 @@ def test_sink_counts_match_routed(run):
 
 
 def test_observation_metrics(spark, transcripts, dims, mem_config):
-    bp = pipeline.build(spark, mem_config, df=transcripts, dims=dims, observe=True)
+    bp = pipeline.build(spark, mem_config, df=transcripts, dims=dims)
     bp.routed.write.format("noop").mode("overwrite").save()
     got = bp.observation.get
     assert got["rows_in"] == transcripts.count()

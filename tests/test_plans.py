@@ -35,13 +35,26 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+# Optional capture groups are not JVM-expressible: grok takes the pandas UDF.
+OPTIONAL_CAPTURE_GROK = {
+    "type": "grok",
+    "source": "text",
+    "match": [r"c%{INT:a:int}(?: %{INT:b:int})?"],
+    "add_tag": ["parsed"],
+}
+
+
 def test_single_python_eval_through_router(transcripts):
-    """The explode router must not duplicate the grok pandas UDF (pandas
-    engine forced — the fallback path for non-JVM-expressible patterns)."""
-    parsed = apply_filter_chain(
-        transcripts, [{**FLAGSHIP_FILTERS[0], "engine": "pandas"}]
-    )
-    routed = route(parsed, FLAGSHIP_SINKS)
+    """The explode router must not duplicate the grok pandas UDF (the
+    fallback path for non-JVM-expressible patterns), even with a sink
+    predicate over a capture the UDF produces."""
+    parsed = apply_filter_chain(transcripts, [OPTIONAL_CAPTURE_GROK])
+    sinks = [
+        {"name": "parsed", "when": {"tags_include": ["parsed"]}},
+        {"name": "high_a", "when": {"tags_include": ["parsed"], "expr": "a >= 50"}},
+        {"name": "raw", "when": {"tags_include": ["_grokparsefailure"]}},
+    ]
+    routed = route(parsed, sinks)
     plan = _plan(routed.select("sink", "conv_id"))
     assert plan.count("ArrowEvalPython") == 1, plan
 
@@ -59,7 +72,7 @@ def test_native_grok_has_zero_python(transcripts):
 
 def test_native_grok_whole_canonical_pipeline_python_free(transcripts, dims):
     """The full canonical pipeline (grok + json + patch + enrich + route)
-    is JVM-only end-to-end under engine=auto."""
+    is JVM-only end-to-end."""
     cfg = canonical_config()
     parsed = apply_filter_chain(transcripts, cfg.filter)
     parsed = apply_enrich_chain(parsed, cfg.enrich, dims)
@@ -68,14 +81,19 @@ def test_native_grok_whole_canonical_pipeline_python_free(transcripts, dims):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
-def test_grok_engine_fallback_and_force(transcripts):
-    """Optional capture groups are not JVM-expressible: auto falls back to
-    the pandas UDF; engine='native' refuses loudly."""
-    opt = {"type": "grok", "source": "text", "match": [r"c%{INT:a:int}(?: %{INT:b:int})?"]}
-    parsed = apply_filter_chain(transcripts, [opt])
+def test_grok_falls_back_to_pandas_for_optional_captures(transcripts):
+    """Optional capture groups are not JVM-expressible: grok falls back to
+    the pandas UDF."""
+    parsed = apply_filter_chain(transcripts, [OPTIONAL_CAPTURE_GROK])
     assert _plan(parsed).count("ArrowEvalPython") == 1
-    with pytest.raises(ValueError, match="not JVM-expressible"):
-        apply_filter_chain(transcripts, [{**opt, "engine": "native"}])
+
+
+def test_grok_rejects_unknown_config_keys(transcripts):
+    """Removed grok options fail at plan time instead of being ignored, so
+    a hot-reloaded config that still sets one is refused loudly."""
+    for key, value in {"engine": "native", "prefilter_rlike": r"^\["}.items():
+        with pytest.raises(ValueError, match=f"unknown grok config key.*'{key}'"):
+            apply_filter_chain(transcripts, [{**FLAGSHIP_FILTERS[0], key: value}])
 
 
 def test_enrich_is_broadcast_hash_join(transcripts, dims):

@@ -172,16 +172,25 @@ _ENGINE_PATTERNS = [
 ]
 
 
+def _native_and_pandas(df, cfg, cols):
+    """Rows of the grok filter (native for these JVM-expressible patterns)
+    and of the pandas reference engine called directly."""
+    from logspark.grok import compile_grok_java
+    from logspark.operators import filters
+
+    assert compile_grok_java(cfg["match"], None, cfg.get("anchor", "start")) is not None
+    nat = filters.apply_filter_chain(df, [cfg]).select(*cols).collect()
+    pan = filters._grok_pandas(filters.ensure_tags(df), cfg).select(*cols).collect()
+    return nat, pan
+
+
 @settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(st.lists(st.one_of(_structured, _ascii_lines), min_size=1, max_size=40))
 def test_native_engine_equals_pandas_engine(spark, lines):
-    from logspark.operators.filters import apply_filter_chain
-
     df = spark.createDataFrame([(i, t) for i, t in enumerate(lines)], "rid int, text string")
     base = {"type": "grok", "match": _ENGINE_PATTERNS}
     cols = ["rid", "k", "d", "rest", "head", "tail", "tags"]
-    nat = apply_filter_chain(df, [dict(base, engine="native")]).select(*cols).collect()
-    pan = apply_filter_chain(df, [dict(base, engine="pandas")]).select(*cols).collect()
+    nat, pan = _native_and_pandas(df, base, cols)
     for a, b in zip(sorted(nat), sorted(pan)):
         assert a == b, (a, b)
 
@@ -207,11 +216,10 @@ def test_native_engine_carriage_return_parity(spark):
             "anchor": anchor,
         }
         cols = ["rid", "k", "d", "rest", "tags"]
-        nat = apply_filter_chain(df, [dict(base, engine="native")]).select(*cols).collect()
-        pan = apply_filter_chain(df, [dict(base, engine="pandas")]).select(*cols).collect()
+        nat, pan = _native_and_pandas(df, base, cols)
         assert sorted(nat) == sorted(pan), (anchor, sorted(nat), sorted(pan))
     # and the \r rows really do match (not just agree-on-failure)
-    out = apply_filter_chain(df, [dict(base, engine="native")])
+    out = apply_filter_chain(df, [base])
     import pyspark.sql.functions as F
 
     matched = out.filter(~F.array_contains("tags", "_grokparsefailure")).count()
@@ -224,8 +232,6 @@ def test_native_engine_control_char_whitespace_parity(spark):
     \\x85; Java's default \\s does not, so NOTSPACE (\\S+) matched them
     natively but not in the pandas engine until the re.ASCII fix
     (grok.py compile()).  Pin both engines on every such byte."""
-    from logspark.operators.filters import apply_filter_chain
-
     lines = (
         ["\x1c x", "\x1d x", "\x1e x", "\x1f x", "\x1f ", "\x85 x"]
         + ["a\x1cb tail", "plain line", "\x0b x"]  # \x0b IS whitespace in both
@@ -235,8 +241,7 @@ def test_native_engine_control_char_whitespace_parity(spark):
     )
     base = {"type": "grok", "match": [r"%{NOTSPACE:head} %{GREEDYDATA:tail}"]}
     cols = ["rid", "head", "tail", "tags"]
-    nat = apply_filter_chain(df, [dict(base, engine="native")]).select(*cols).collect()
-    pan = apply_filter_chain(df, [dict(base, engine="pandas")]).select(*cols).collect()
+    nat, pan = _native_and_pandas(df, base, cols)
     assert sorted(nat) == sorted(pan), (sorted(nat), sorted(pan))
     # semantic spot-checks: \x1f is NOT whitespace (Java default), so
     # "\x1f x" matches with head="\x1f"; "\x0b x" cannot match because

@@ -684,25 +684,19 @@ def test_ivf_assign_multi_matches_argmax_and_recovers_boundary_pairs(spark, emb)
 
 def test_multimodal_feature_extraction(spark):
     media = multimodal.synth_media_df(spark, 30)
-    feats = multimodal.extract_features(media, fake=True)
+    feats = multimodal.extract_features(media)
     rows = feats.collect()
     assert len(rows) == 30
     assert all(r["n_bytes"] > 0 and r["frame_count"] >= 1 for r in rows)
     assert all(not math.isnan(r["feat_mean"]) for r in rows)
     # deterministic: same input → same features
-    again = {r["media_id"]: r["feat_mean"] for r in multimodal.extract_features(media, fake=True).collect()}
+    again = {r["media_id"]: r["feat_mean"] for r in multimodal.extract_features(media).collect()}
     assert all(again[r["media_id"]] == r["feat_mean"] for r in rows)
-
-
-def test_multimodal_real_decoder_gated(spark):
-    media = multimodal.synth_media_df(spark, 3)
-    with pytest.raises(Exception, match="NotImplementedError|real media decode"):
-        multimodal.extract_features(media, fake=False).collect()
 
 
 def test_multimodal_resize(spark):
     media = multimodal.synth_media_df(spark, 30)
-    resized = multimodal.resize_images(media, target_w=8, target_h=4, fake=True)
+    resized = multimodal.resize_images(media, target_w=8, target_h=4)
     rows = {r["media_id"]: r for r in resized.collect()}
     assert len(rows) == 30
     for mid, r in rows.items():
@@ -946,8 +940,7 @@ def test_approx_quantiles_bracket_exact(spark):
 def test_sample_frames_explodes_and_caps(spark):
     """Frame sampling: non-image media explodes into stride-sized byte
     slices that reassemble to the original content; images yield one
-    frame; max_frames caps fan-out with the first frame kept; the real
-    decode path names its missing dependency."""
+    frame; max_frames caps fan-out with the first frame kept."""
     media = multimodal.synth_media_df(spark, 24)
     frames = multimodal.sample_frames(media, frame_stride=100).collect()
     raw = {r["media_id"]: (bytes(r["content"]), r["media_type"]) for r in media.collect()}
@@ -973,9 +966,6 @@ def test_sample_frames_explodes_and_caps(spark):
         assert len(rows) <= 3
         first = min(rows, key=lambda r: r["frame_idx"])
         assert bytes(first["frame"]) == raw[mid][0][:50] or raw[mid][1].startswith("image/")
-    # real path is honestly stubbed
-    with pytest.raises(Exception, match="Pillow|av/ffmpeg"):
-        multimodal.sample_frames(media, fake=False).collect()
 
 
 def test_incremental_ivf_near_dups_equals_one_shot(spark, emb, tmp_path):
