@@ -61,15 +61,14 @@ def warm(spark, input_path: str, cores: int) -> None:
     from pyspark.sql import functions as F
 
     # no type annotations: `from __future__ import annotations` stringifies
-    # them and pyspark's eval-type inference can't resolve 'pd.Series'
+    # them and pyspark's eval-type inference can't resolve a local 'pd';
+    # an unannotated function with no function type is a scalar pandas UDF
     def _warm_fn(s):
         import logspark.grok  # noqa: F401  (compile cache + pandas import)
 
         return s
 
-    from pyspark.sql.pandas.functions import PandasUDFType
-
-    _warm = F.pandas_udf(_warm_fn, "long", PandasUDFType.SCALAR)
+    _warm = F.pandas_udf(_warm_fn, "long")
 
     spark.range(cores * 4, numPartitions=cores * 4).select(_warm("id")).write.format(
         "noop"

@@ -22,8 +22,10 @@ Scale design (100 TB story):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from logspark.operators.textops import portable_hash60
@@ -140,7 +142,7 @@ def _make_minhash_kernel(coeffs: list[tuple[int, int]], k: int):
     here (BENCH/NOTES.md fix 7)."""
     _task_memo: dict[str, int] = {}  # fallback when logspark isn't importable
 
-    def kernel(s):
+    def kernel(s: pd.Series) -> pd.DataFrame:
         import hashlib
         import numpy as np
         import pandas as pd
@@ -216,8 +218,6 @@ def minhash_signatures(
     (doc, shingle) pair — at 100 TB that shuffle dwarfs the hashing. Docs
     with < k words have no shingles and are dropped (matching the explode
     form and the DuckDB oracle)."""
-    from pyspark.sql.pandas.functions import PandasUDFType
-
     coeffs = _minhash_coeffs(n_hashes)
     schema = ", ".join(f"mh_{i} bigint" for i in range(n_hashes))
     # asNondeterministic (r6, guide §4.4): the < k-token filter below
@@ -226,15 +226,14 @@ def minhash_signatures(
     # ArrowEvalPython nodes (every doc shingled+hashed twice, and every
     # consumer of sigs inherited both). The kernel is pure; the marker
     # only forbids Catalyst from re-evaluating/reordering it.
-    udf = F.pandas_udf(
-        _make_minhash_kernel(coeffs, k), schema, PandasUDFType.SCALAR
-    ).asNondeterministic()
-    out = df.select(F.col(id_col), udf(F.col(text_col)).alias("_mh")).filter(
-        F.col("_mh").getField("mh_0").isNotNull()
+    udf = F.pandas_udf(_make_minhash_kernel(coeffs, k), schema).asNondeterministic()
+    # one projection for the struct's fields: a withColumn per hash
+    # re-analyses the growing plan n_hashes times on the driver
+    return (
+        df.select(F.col(id_col), udf(F.col(text_col)).alias("_mh"))
+        .filter(F.col("_mh").getField("mh_0").isNotNull())
+        .select(id_col, "_mh.*")
     )
-    for i in range(n_hashes):
-        out = out.withColumn(f"mh_{i}", F.col("_mh").getField(f"mh_{i}"))
-    return out.drop("_mh")
 
 
 def band_signatures(
@@ -386,9 +385,7 @@ def winnow_fingerprints(
     are interpreted per element — 103 s vs ~2 s for this kernel (same
     lesson as the minhash kernel, BENCH/NOTES.md fix 7). The portable
     md5-derived hash keeps the DuckDB oracle value-identical."""
-    from pyspark.sql.pandas.functions import PandasUDFType
-
-    udf = F.pandas_udf(_make_winnow_kernel(k, w), "array<bigint>", PandasUDFType.SCALAR)
+    udf = F.pandas_udf(_make_winnow_kernel(k, w), "array<bigint>")
     return df.select(
         F.col(id_col), F.explode(udf(F.col(text_col))).alias("fingerprint")
     )
@@ -401,7 +398,7 @@ def _make_winnow_kernel(k: int, w: int):
     dedup. No per-row Python beyond the gram join."""
     _task_memo: dict[str, int] = {}  # fallback when logspark isn't importable
 
-    def kernel(s):
+    def kernel(s: pd.Series) -> pd.Series:
         import hashlib
 
         import numpy as np
@@ -807,6 +804,11 @@ class SignatureStore:
 
         return os.path.join(self.root, "index.json")
 
+    def _run_path(self, run_id: str) -> str:
+        import os
+
+        return os.path.join(self.root, "runs", run_id)
+
     def _read_index(self) -> dict:
         import json
         import os
@@ -864,8 +866,6 @@ class SignatureStore:
         committed with an empty file list.
         `partition_by` lays the run out partitioned (e.g. by IVF cell, so
         loads filtered on the partition key prune whole directories)."""
-        import os
-
         if not run_id:
             raise ValueError("append requires a run_id")
         idx0 = self._read_index()
@@ -880,11 +880,10 @@ class SignatureStore:
                 f"partition_by {partition_by!r} does not match the store's "
                 f"existing layout {idx0.get('partition_by')!r}"
             )
-        path = os.path.join(self.root, "runs", run_id)
         w = sigs.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.parquet(path)
+        w.parquet(self._run_path(run_id))
         idx = self._read_index()
         idx["runs"] = idx["runs"] + [run_id]
         idx["files"][run_id] = sorted(input_files or [])
@@ -892,16 +891,16 @@ class SignatureStore:
             idx["partition_by"] = list(partition_by)
         self._write_index(idx)
 
-    def load(self, spark) -> DataFrame | None:
-        """All committed signatures, or None when the store is empty."""
-        import os
-
+    def load(self, spark, schema: StructType | None = None) -> DataFrame | None:
+        """All committed signatures, or None when the store is empty.
+        `schema` (the signature schema, e.g. a batch's
+        `minhash_signatures(...).schema`, which is analysis-only) skips
+        the footer-inference job a schema-less parquet read runs."""
         runs = self.committed_runs()
         if not runs:
             return None
-        return spark.read.parquet(
-            *[os.path.join(self.root, "runs", r) for r in runs]
-        )
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*[self._run_path(r) for r in runs])
 
     def load_runs_union(self, spark) -> DataFrame | None:
         """Per-run scans unioned by name — the load for PARTITIONED runs:
@@ -911,12 +910,11 @@ class SignatureStore:
         partition pruning (a cell filter above the union prunes
         directories in every branch)."""
         import functools
-        import os
 
         runs = self.committed_runs()
         if not runs:
             return None
-        dfs = [spark.read.parquet(os.path.join(self.root, "runs", r)) for r in runs]
+        dfs = [spark.read.parquet(self._run_path(r)) for r in runs]
         return functools.reduce(lambda a, b: a.unionByName(b), dfs)
 
     def compact(self, spark) -> None:
@@ -946,7 +944,7 @@ class SignatureStore:
             w = self.load_runs_union(spark).write.mode("overwrite")
             if part:
                 w = w.partitionBy(*part)
-            w.parquet(os.path.join(self.root, "runs", cid))
+            w.parquet(self._run_path(cid))
             # fold the per-run file provenance into the compacted run so
             # committed_files() survives compaction
             idx = {"runs": [cid], "files": {cid: sorted(self.committed_files())}}
@@ -977,7 +975,8 @@ def incremental_near_dup_pairs(
     input_files: list[str] | None = None,
 ) -> DataFrame:
     """Verified near-dup pairs INVOLVING the new batch: new-vs-new plus
-    new-vs-already-ingested, then append the new signatures to the store.
+    new-vs-already-ingested. The new signatures are appended to the store
+    first, so the store commit precedes the candidate join.
 
     Guarantee: unioning each run's pairs over a sequence of incremental
     runs yields EXACTLY the full-corpus pair set (every pair {x, y} is
@@ -988,44 +987,42 @@ def incremental_near_dup_pairs(
     (old ∪ new) banded set would break that equality.
 
     Scale shape per run (N = corpus so far, B = new batch, B << N):
-    - signatures computed for B only (the store holds the rest);
-    - banding is a narrow projection of both sides; the candidate join is
-      band(new) ⋈ band(all) — the all side streams, the new side is the
-      small build side;
-    - Jaccard verification re-reads texts ONLY for candidate-touched docs
+    - signatures computed for B only, once, inside the store append (the
+      store holds the rest); the batch side reads the appended run back;
+    - the candidate join is band(new) ⋈ band(store): the store — which now
+      includes the batch — is scanned and banded once as the streamed
+      side, and the banded batch (B x bands rows) is the broadcast build
+      side;
+    - Jaccard verification (`ngram_jaccard(candidates=)`) checkpoints the
+      candidate list and re-reads texts ONLY for candidate-touched docs
       (semi-join prune on the corpus), O(|candidates| · shingles/doc).
+
+    Crash safety: a crash after the append leaves the batch's files in
+    `store.committed_files()`, so the retry takes `replay=True` — nothing
+    is appended, and the recomputed batch signatures feed only the build
+    side; the pair set is identical (signatures are deterministic).
+    run_id=None with replay means "the caller established from
+    committed_files() that every new_docs source file is already
+    ingested" (the per-file replay key, ADVICE r4).
 
     `input_files` becomes the appended run's provenance entry
     (`SignatureStore.append`): the dedup agent passes the batch's source
     files; in-memory batches with no source files leave it empty.
     """
-    # materialize the new batch's signatures ONCE (r6): they feed the
-    # (old ∪ new) banded side, the new-ids semi-join AND the store append
-    # — each consumer otherwise re-runs the MinHash kernel over the batch
-    new_sigs = minhash_signatures(new_docs, id_col, text_col, n_hashes, k).localCheckpoint(
-        eager=True
-    )
-    old_sigs = store.load(new_docs.sparkSession)
-
+    spark = new_docs.sparkSession
+    sigs = minhash_signatures(new_docs, id_col, text_col, n_hashes, k)
     if replay:
-        # crash replay AFTER the store commit: these docs' signatures are
-        # already in old_sigs — band against the store alone and skip the
-        # append; the pair set is identical to the original attempt's
-        # (signatures are deterministic). run_id=None means "the caller
-        # established from committed_files() that every new_docs source
-        # file is already ingested" (the per-file replay key, ADVICE r4).
-        if old_sigs is None or (
-            run_id is not None and run_id not in store.committed_runs()
-        ):
+        runs = store.committed_runs()
+        if not runs or (run_id is not None and run_id not in runs):
             raise ValueError(
                 f"replay=True but run {run_id!r} is not committed in the store"
             )
-        all_sigs = old_sigs
+        new_sigs = sigs
     else:
-        all_sigs = new_sigs if old_sigs is None else old_sigs.unionByName(new_sigs)
-    all_b = band_signatures(all_sigs, id_col, n_hashes, bands)
-    new_ids = new_sigs.select(id_col)
-    new_b = all_b.join(new_ids, id_col, "leftsemi")
+        store.append(sigs, run_id, input_files=input_files)
+        new_sigs = spark.read.schema(sigs.schema).parquet(store._run_path(run_id))
+    new_b = F.broadcast(band_signatures(new_sigs, id_col, n_hashes, bands))
+    all_b = band_signatures(store.load(spark, sigs.schema), id_col, n_hashes, bands)
 
     l, r = new_b.alias("l"), all_b.alias("r")
     pairs = (
@@ -1036,22 +1033,5 @@ def incremental_near_dup_pairs(
             F.greatest(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("b"),
         )
         .distinct()
-        # materialize the tiny candidate list once (r6): it feeds the
-        # touched-docs semi-join (two union branches) and the verify —
-        # without this each consumer re-runs the store-scan + banding join
-        .localCheckpoint(eager=True)
     )
-
-    touched = corpus.join(
-        pairs.select(F.col("a").alias(id_col))
-        .union(pairs.select(F.col("b").alias(id_col)))
-        .distinct(),
-        id_col,
-        "leftsemi",
-    )
-    verified = ngram_jaccard(
-        touched, id_col, text_col, k, threshold=threshold, candidates=pairs
-    )
-    if not replay:
-        store.append(new_sigs, run_id, input_files=input_files)
-    return verified
+    return ngram_jaccard(corpus, id_col, text_col, k, threshold=threshold, candidates=pairs)

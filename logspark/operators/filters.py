@@ -300,12 +300,10 @@ def json_filter(df: DataFrame, cfg: dict) -> DataFrame:
     # — anything else fails Jackson anyway. Nulling those inputs up front
     # skips the Jackson parse entirely (from_json(NULL) → NULL struct, same
     # downstream semantics: fields null, failure tagged). Measured ~85% of
-    # the codec's cost on a 10%-json corpus. `prefilter: false` disables.
+    # the codec's cost on a 10%-json corpus.
     # rlike, not ltrim().startswith: ltrim strips only spaces, so JSON behind
     # a tab/newline would be nulled and wrongly failure-tagged (ADVICE r1)
-    src_col = F.col(source)
-    if cfg.get("prefilter", True):
-        src_col = F.when(src_col.rlike(r"^\s*\{"), src_col)
+    src_col = F.when(F.col(source).rlike(r"^\s*\{"), F.col(source))
     if cfg.get("schema"):
         tag_on_failure = cfg.get("tag_on_failure", True)
         # PERMISSIVE from_json yields a struct of nulls (not a null struct)

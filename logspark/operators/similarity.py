@@ -700,7 +700,6 @@ def ivf_near_dups(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_bucket: int | None = None,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a, b, sim ≥ threshold) via
@@ -709,12 +708,11 @@ def ivf_near_dups(
     Multi-probe assignment (nprobe nearest cells per vector) recovers
     boundary pairs; a pair co-occurring in two cells is deduplicated by a
     distinct on (a, b, sim) — sim is a deterministic left fold, so the
-    duplicate rows are bit-identical. `max_bucket` caps degenerate cells
-    before the quadratic self-join (see dedup.cap_buckets); default
-    centroids are the `n_cells` lowest-id rows (oracle-reproducible) —
-    pass `centroids=train_ivf_centroids(...)` in production."""
-    from logspark.operators.dedup import cap_buckets
-
+    duplicate rows are bit-identical. Cells are never capped: every
+    caller needs the exact pair set (the oracle, and the union-of-ticks
+    equality of `incremental_ivf_near_dups`). Default centroids are the
+    `n_cells` lowest-id rows (oracle-reproducible) — pass
+    `centroids=train_ivf_centroids(...)` in production."""
     if centroids is None:
         centroids = head_centroids(df, n_cells, id_col, vec_col)
     # r6: assignment is one narrow Arrow pass (no self-join sides to
@@ -725,6 +723,5 @@ def ivf_near_dups(
     # plan spent 55 of embed_near_dups' 56 s at sf1.0 there. Sims stay
     # bit-identical (fold-exact accumulation + HALF_UP two-stage cut).
     m = ivf_assign_multi(df, centroids, nprobe, id_col, vec_col)
-    m = cap_buckets(m, max_bucket, keys=("cell",))
     return _pair_scores_grouped(m, ("cell",), threshold, id_col, vec_col).distinct()
 

@@ -17,6 +17,7 @@ O(tokens x 60) vectorized JVM ops per row, not x60 row blowup).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -918,7 +919,7 @@ def train_bpe_merges(
 SIMHASH_BITS = 60  # md5-15-hex portable hash gives 60 usable bits
 
 
-def _simhash_from_hashes(s):
+def _simhash_from_hashes(s: pd.Series) -> pd.Series:
     """Arrow batch of array<bigint> token hashes → int64 simhash.
 
     Fully vectorized: flatten every batch's token hashes into one uint64
@@ -969,11 +970,9 @@ def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     dominates. Values are identical and reproducible in DuckDB SQL for
     the oracle. Near-dup candidates then band on bit ranges (see
     dedup.simhash_bands)."""
-    from pyspark.sql.pandas.functions import PandasUDFType
-
     toks = tokens(F.col(text_col))
     hashes = F.transform(
         toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint")
     )
-    udf = F.pandas_udf(_simhash_from_hashes, "long", PandasUDFType.SCALAR)
+    udf = F.pandas_udf(_simhash_from_hashes, "long")
     return df.withColumn("simhash", udf(hashes))

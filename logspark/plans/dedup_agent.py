@@ -4,13 +4,19 @@ dedup family).
 
 Each tick:
 
-  1. manifest-pending input files (same resume seam as the parse→route
-     pipeline: crash mid-tick → same run_id → idempotent overwrite);
+  1. list the table and take the manifest-pending input files (same
+     resume seam as the parse→route pipeline: crash mid-tick → same
+     run_id → idempotent overwrite); the listing's inferred schema is
+     reused by every later read of the table's files;
   2. `incremental_near_dup_pairs` — MinHash signatures for the NEW batch
-     only, banding against the `SignatureStore` (store ∪ new), Jaccard
-     verify reading texts only for candidate-touched docs;
-  3. verified pairs written under runs/<run_id>/pairs, then the manifest
-     commit marks the files processed (write-then-commit, like run()).
+     only, written straight into the `SignatureStore` (the store commit),
+     then the broadcast banded batch joined against one banded scan of
+     the store, and Jaccard verify reading texts only for
+     candidate-touched docs; files already in the store (a crash after
+     its commit) are replayed against it without a second append;
+  3. verified pairs written under runs/<run_id>/pairs, counted by an
+     `Observation` on that write, then the manifest commit marks the
+     files processed (write-then-commit, like run()).
 
 Union-of-ticks == one-shot uncapped whole-corpus pairs (the incremental
 guarantee), so a corpus ingested file-by-file over
@@ -26,7 +32,8 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from logspark.operators.dedup import SignatureStore, incremental_near_dup_pairs
 from logspark.plans.pipeline import WriterLock
@@ -72,8 +79,8 @@ def dedup_tick(
         # run records its input files). Files that land in the table
         # concurrently (after the listing above) are never scanned;
         # io.read(table) at action time would be.
-        needed = set(pending) | ingested
-        corpus = io.read_files(spark, table, sorted(needed & set(all_files)))
+        corpus_files = sorted((set(pending) | ingested) & set(all_files))
+        corpus = io.read_files(spark, table, corpus_files)
 
         parts = []
         if already:
@@ -104,20 +111,26 @@ def dedup_tick(
                     input_files=fresh,
                 )
             )
-        pairs = parts[0]
-        for p in parts[1:]:
-            pairs = pairs.unionByName(p).dropDuplicates(["a", "b"])
-        out = os.path.join(sink_root, "runs", rid, "pairs")
-        pairs.write.mode("overwrite").parquet(out)
-        n_pairs = spark.read.parquet(out).count()
+        n_pairs = _write_pairs(parts, os.path.join(sink_root, "runs", rid, "pairs"))
         mf.commit_run(sink_root, mf.RunRecord(run_id=rid, input_files=pending))
         return {
             "run_id": rid,
             "new_files": pending,
             "n_pairs": n_pairs,
             "replayed_files": already,
-            "corpus_files": sorted(corpus.inputFiles()),
+            "corpus_files": corpus_files,
         }
+
+
+def _write_pairs(parts: list[DataFrame], out: str) -> int:
+    """Union a tick's pair sets, write them to `out` and return the row
+    count, observed on the write itself instead of re-reading `out`."""
+    pairs = parts[0]
+    for p in parts[1:]:
+        pairs = pairs.unionByName(p).dropDuplicates(["a", "b"])
+    obs = Observation("pairs")
+    pairs.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(out)
+    return obs.get["n"]
 
 
 def _pin_centroids(spark, sink_root: str, centroids, first_batch_fn, n_cells: int):
@@ -208,12 +221,7 @@ def embed_dedup_tick(
                     input_files=fresh,
                 )
             )
-        pairs = parts[0]
-        for p in parts[1:]:
-            pairs = pairs.unionByName(p).dropDuplicates(["a", "b"])
-        out = os.path.join(sink_root, "runs", rid, "pairs")
-        pairs.write.mode("overwrite").parquet(out)
-        n_pairs = spark.read.parquet(out).count()
+        n_pairs = _write_pairs(parts, os.path.join(sink_root, "runs", rid, "pairs"))
         mf.commit_run(sink_root, mf.RunRecord(run_id=rid, input_files=pending))
         return {
             "run_id": rid,

@@ -18,16 +18,23 @@ never branch on the backend.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
 class ParquetIO:
-    """Directory-of-parquet tables: table name → <base_dir>/<name>[.parquet]."""
+    """Directory-of-parquet tables: table name → <base_dir>/<name>[.parquet].
+
+    `input_files` keeps the schema its listing read inferred, per table,
+    and `read_files` applies it: every schema-less `spark.read.parquet`
+    runs a footer-inference job, and a resume-aware run reads the files
+    it just listed. A read before any listing still infers."""
 
     base_dir: str
+    _schemas: dict[str, StructType] = field(default_factory=dict, init=False, repr=False, compare=False)
 
     def _path(self, table: str) -> str:
         p = os.path.join(self.base_dir, f"{table}.parquet")
@@ -37,10 +44,14 @@ class ParquetIO:
         return spark.read.parquet(self._path(table))
 
     def read_files(self, spark: SparkSession, table: str, files: list[str]) -> DataFrame:
-        return spark.read.parquet(*files)
+        schema = self._schemas.get(table)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*files)
 
     def input_files(self, spark: SparkSession, table: str) -> list[str]:
-        return sorted(self.read(spark, table).inputFiles())
+        df = self.read(spark, table)
+        self._schemas[table] = df.schema
+        return sorted(df.inputFiles())
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
         w = df.write.mode(mode)

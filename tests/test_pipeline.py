@@ -131,19 +131,20 @@ def test_unknown_filter_type_raises(spark, transcripts):
 
 
 def test_json_prefilter_accepts_any_leading_whitespace(spark):
-    """Regression (ADVICE r1): the fast-path prefilter must not null out
-    valid JSON behind a tab/newline — semantics must equal no-prefilter."""
-    from logspark.operators.filters import apply_filter_chain
+    """Regression (ADVICE r1): the `^\\s*\\{` prefilter must not null out
+    valid JSON behind a space, tab or newline, and a non-object input is
+    still nulled and failure-tagged."""
+    from logspark.operators.filters import JSON_FAILURE_TAG, apply_filter_chain
 
     rows = [("sp", ' {"k": 1}'), ("tab", '\t{"k": 2}'), ("nl", '\n{"k": 3}'), ("bad", "x")]
     df = spark.createDataFrame(rows, "id string, text string")
     cfg = {"type": "json", "source": "text", "schema": "k bigint", "tag_on_failure": True}
-    fast = {r["id"]: r for r in apply_filter_chain(df, [cfg]).collect()}
-    slow = {r["id"]: r for r in apply_filter_chain(df, [{**cfg, "prefilter": False}]).collect()}
-    for i in ("sp", "tab", "nl", "bad"):
-        assert fast[i]["k"] == slow[i]["k"]
-        assert list(fast[i]["tags"]) == list(slow[i]["tags"])
-    assert fast["tab"]["k"] == 2 and fast["nl"]["k"] == 3
+    got = {r["id"]: r for r in apply_filter_chain(df, [cfg]).collect()}
+    for i, k in (("sp", 1), ("tab", 2), ("nl", 3)):
+        assert got[i]["k"] == k
+        assert JSON_FAILURE_TAG not in list(got[i]["tags"])
+    assert got["bad"]["k"] is None
+    assert JSON_FAILURE_TAG in list(got["bad"]["tags"])
 
 
 def test_manifest_forward_compat_extra_keys(tmp_path):
@@ -570,6 +571,84 @@ def test_dedup_agent_replay_with_new_arrival(spark, tmp_path, monkeypatch, new_a
     }
     got = {(r["a"], r["b"]) for r in dedup_agent.all_pairs(spark, sink).collect()}
     assert got == whole and whole
+
+
+def _tick_table(tmp_path):
+    """(io, sink, table dir) for a `docs` table the tests land files into."""
+    from logspark.sources.tableio import ParquetIO
+
+    tbl = tmp_path / "in" / "docs.parquet"
+    tbl.mkdir(parents=True)
+    return ParquetIO(str(tmp_path / "in")), str(tmp_path / "agent"), tbl
+
+
+def _pairs_on_disk(spark, sink, rid):
+    import os
+
+    return spark.read.parquet(os.path.join(sink, "runs", rid, "pairs")).count()
+
+
+def test_dedup_tick_checkpoints_candidates_once(spark, tmp_path, monkeypatch):
+    """A steady-state tick checkpoints its candidate pair list exactly
+    once (inside the verify) and its shingle set once — no separate
+    checkpoint of the batch signatures or of the candidates before the
+    verify."""
+    import pandas as pd
+
+    from logspark.plans import dedup_agent
+
+    io, sink, tbl = _tick_table(tmp_path)
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    pd.DataFrame([(1, base), (2, "totally different content here okay")],
+                 columns=["doc_id", "text"]).to_parquet(tbl / "f1.parquet")
+    assert dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)["run_id"]
+
+    pd.DataFrame([(3, base + " today"), (4, "totally different content here okay now")],
+                 columns=["doc_id", "text"]).to_parquet(tbl / "f2.parquet")
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+    calls = []
+
+    def counted(self, *args, **kwargs):
+        calls.append(self.columns)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counted)
+    r = dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)
+    assert r["n_pairs"] >= 1
+    assert calls == [["a", "b"], ["doc_id", "shingle"]]
+
+
+def test_dedup_tick_pair_count_matches_written_pairs(spark, tmp_path, monkeypatch):
+    """`n_pairs` is observed on the pairs write; it equals the rows of
+    runs/<rid>/pairs on disk for a fresh tick and for a tick that replays
+    files a crashed tick had already committed to the store."""
+    import pandas as pd
+
+    from logspark.plans import dedup_agent
+    from logspark.sources import manifest as mf
+
+    io, sink, tbl = _tick_table(tmp_path)
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    pd.DataFrame([(1, base), (2, base + " today"), (3, "something else entirely here")],
+                 columns=["doc_id", "text"]).to_parquet(tbl / "f1.parquet")
+    fresh = dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)
+    assert fresh["n_pairs"] == _pairs_on_disk(spark, sink, fresh["run_id"]) == 1
+
+    pd.DataFrame([(4, base + " yesterday"), (5, base + " tomorrow")],
+                 columns=["doc_id", "text"]).to_parquet(tbl / "f2.parquet")
+    real_commit = mf.commit_run
+
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(dedup_agent.mf, "commit_run", real_commit)
+        raise RuntimeError("crash before the manifest commit")
+
+    monkeypatch.setattr(dedup_agent.mf, "commit_run", crash_once)
+    with pytest.raises(RuntimeError, match="crash before the manifest commit"):
+        dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)
+    replayed = dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)
+    assert replayed["replayed_files"] == replayed["new_files"]
+    assert replayed["n_pairs"] == _pairs_on_disk(spark, sink, replayed["run_id"]) >= 2
 
 
 def test_dedup_tick_verify_scan_pruned(spark, tmp_path):

@@ -331,3 +331,57 @@ def test_candidate_self_joins_recompute_kernel_per_side(spark):
     sigs = dedup.minhash_signatures(docs, n_hashes=16)
     plan = _plan(dedup.lsh_candidates(sigs, n_hashes=16, bands=4, max_bucket=20))
     assert plan.count("ArrowEvalPython") == 2, plan
+
+
+def _subtrees(plan: str, node: str) -> list[tuple[str, list[str]]]:
+    """(node line, [child subtree text, ...]) for every `node` operator in
+    the AQE final plan, read from the tree string's indentation."""
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    lines = [ln for ln in final.splitlines() if ln.strip()]
+    col = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+
+    def subtree(i: int) -> list[str]:
+        j = i + 1
+        while j < len(lines) and col[j] > col[i]:
+            j += 1
+        return lines[i:j]
+
+    out = []
+    for i, ln in enumerate(lines):
+        if ln.lstrip(" :+-*()0123456789").startswith(node):
+            kids = [k for k in range(i + 1, i + len(subtree(i))) if col[k] == col[i] + 3]
+            out.append((ln, ["\n".join(subtree(k)) for k in kids]))
+    return out
+
+
+def test_incremental_candidate_join_broadcasts_batch_streams_store(spark, tmp_path, monkeypatch):
+    """The incremental candidate join builds its hash table on the banded
+    BATCH (the appended run read back, broadcast) and streams ONE banded
+    scan of the store, which already holds the batch: no Exchange sits
+    between the store scan and the join, and the store is never
+    broadcast."""
+    from logspark.operators import dedup
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    store = dedup.SignatureStore(str(tmp_path / "store"))
+    dedup.incremental_near_dup_pairs(store, docs.filter(F.col("doc_id") % 2 == 0), docs, run_id="r-0")
+    seen = {}
+    real = dedup.ngram_jaccard
+
+    def spy(*args, **kwargs):
+        seen["candidates"] = kwargs["candidates"]
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "ngram_jaccard", spy)
+    dedup.incremental_near_dup_pairs(store, docs.filter(F.col("doc_id") % 2 == 1), docs, run_id="r-1")
+    plan = _plan(seen["candidates"])  # executed by the verify's checkpoint
+
+    joins = _subtrees(plan, "BroadcastHashJoin")
+    assert len(joins) == 1, plan
+    line, (build, streamed) = joins[0]
+    assert "BuildLeft" in line, line
+    assert "BroadcastExchange" in build and "InMemoryFileIndex(1 paths)" in build, build
+    assert build.count("FileScan") == 1, build  # the batch's run dir only
+    assert streamed.count("FileScan") == 1 and "InMemoryFileIndex(2 paths)" in streamed, streamed
+    assert "Exchange" not in streamed and "QueryStage" not in streamed, streamed
+    assert plan.split("== Initial Plan ==")[0].count("FileScan") == 2, plan

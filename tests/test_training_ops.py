@@ -1058,6 +1058,9 @@ def test_embed_dedup_agent_ticks_equal_one_shot(spark, emb, tmp_path):
     r2 = dedup_agent.embed_dedup_tick(spark, io, "vecs", sink, threshold=0.35)
     assert r2["run_id"] != r1["run_id"]
     assert any(f.endswith("f1.parquet") for f in r2["replayed_files"])
+    for r in (r0, r1, r2):  # n_pairs is observed on the pairs write
+        out = os.path.join(sink, "runs", r["run_id"], "pairs")
+        assert r["n_pairs"] == spark.read.parquet(out).count()
 
     store = SignatureStore(os.path.join(sink, "vstore"))
     rows = store.load_runs_union(spark).groupBy("vec_id", "cell").count().collect()
