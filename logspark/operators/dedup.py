@@ -990,9 +990,12 @@ def incremental_near_dup_pairs(
     - signatures computed for B only, once, inside the store append (the
       store holds the rest); the batch side reads the appended run back;
     - the candidate join is band(new) ⋈ band(store): the store — which now
-      includes the batch — is scanned and banded once as the streamed
-      side, and the banded batch (B x bands rows) is the broadcast build
-      side;
+      includes the batch — is scanned and banded once, and the banded
+      batch (B x bands rows) is the side the planner picks to broadcast
+      when it fits `autoBroadcastJoinThreshold`: both sides are plain
+      scans with real file statistics, and the store side holds the batch,
+      so it is never the smaller one. A batch over the threshold (a first
+      tick over a large table) gets a shuffle join;
     - Jaccard verification (`ngram_jaccard(candidates=)`) checkpoints the
       candidate list and re-reads texts ONLY for candidate-touched docs
       (semi-join prune on the corpus), O(|candidates| · shingles/doc).
@@ -1021,7 +1024,7 @@ def incremental_near_dup_pairs(
     else:
         store.append(sigs, run_id, input_files=input_files)
         new_sigs = spark.read.schema(sigs.schema).parquet(store._run_path(run_id))
-    new_b = F.broadcast(band_signatures(new_sigs, id_col, n_hashes, bands))
+    new_b = band_signatures(new_sigs, id_col, n_hashes, bands)
     all_b = band_signatures(store.load(spark, sigs.schema), id_col, n_hashes, bands)
 
     l, r = new_b.alias("l"), all_b.alias("r")

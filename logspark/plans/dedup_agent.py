@@ -4,16 +4,17 @@ dedup family).
 
 Each tick:
 
-  1. list the table and take the manifest-pending input files (same
-     resume seam as the parse→route pipeline: crash mid-tick → same
-     run_id → idempotent overwrite); the listing's inferred schema is
-     reused by every later read of the table's files;
+  1. manifest-pending input files (same resume seam as the parse→route
+     pipeline: crash mid-tick → same run_id → idempotent overwrite); the
+     batch reads reuse the schema the verify corpus read inferred (the
+     batch files are a subset of the corpus files);
   2. `incremental_near_dup_pairs` — MinHash signatures for the NEW batch
      only, written straight into the `SignatureStore` (the store commit),
-     then the broadcast banded batch joined against one banded scan of
-     the store, and Jaccard verify reading texts only for
-     candidate-touched docs; files already in the store (a crash after
-     its commit) are replayed against it without a second append;
+     then the banded batch joined against one banded scan of the store
+     (the batch is the broadcast side when it fits), and Jaccard verify
+     reading texts only for candidate-touched docs; files already in the
+     store (a crash after its commit) are replayed against it without a
+     second append;
   3. verified pairs written under runs/<run_id>/pairs, counted by an
      `Observation` on that write, then the manifest commit marks the
      files processed (write-then-commit, like run()).
@@ -79,15 +80,20 @@ def dedup_tick(
         # run records its input files). Files that land in the table
         # concurrently (after the listing above) are never scanned;
         # io.read(table) at action time would be.
-        corpus_files = sorted((set(pending) | ingested) & set(all_files))
-        corpus = io.read_files(spark, table, corpus_files)
+        needed = set(pending) | ingested
+        corpus = io.read_files(spark, table, sorted(needed & set(all_files)))
+
+        def read_batch(files: list[str]) -> DataFrame:
+            # a subset of the corpus files: read with the corpus read's
+            # schema instead of running another footer-inference job
+            return spark.read.schema(corpus.schema).parquet(*files)
 
         parts = []
         if already:
             parts.append(
                 incremental_near_dup_pairs(
                     store,
-                    io.read_files(spark, table, already),
+                    read_batch(already),
                     corpus,
                     run_id=None,
                     threshold=threshold,
@@ -101,7 +107,7 @@ def dedup_tick(
             parts.append(
                 incremental_near_dup_pairs(
                     store,
-                    io.read_files(spark, table, fresh),
+                    read_batch(fresh),
                     corpus,
                     run_id=rid,
                     threshold=threshold,
@@ -118,7 +124,7 @@ def dedup_tick(
             "new_files": pending,
             "n_pairs": n_pairs,
             "replayed_files": already,
-            "corpus_files": corpus_files,
+            "corpus_files": sorted(corpus.inputFiles()),
         }
 
 

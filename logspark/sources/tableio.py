@@ -18,23 +18,16 @@ never branch on the backend.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 
 @dataclass
 class ParquetIO:
-    """Directory-of-parquet tables: table name → <base_dir>/<name>[.parquet].
-
-    `input_files` keeps the schema its listing read inferred, per table,
-    and `read_files` applies it: every schema-less `spark.read.parquet`
-    runs a footer-inference job, and a resume-aware run reads the files
-    it just listed. A read before any listing still infers."""
+    """Directory-of-parquet tables: table name → <base_dir>/<name>[.parquet]."""
 
     base_dir: str
-    _schemas: dict[str, StructType] = field(default_factory=dict, init=False, repr=False, compare=False)
 
     def _path(self, table: str) -> str:
         p = os.path.join(self.base_dir, f"{table}.parquet")
@@ -44,14 +37,13 @@ class ParquetIO:
         return spark.read.parquet(self._path(table))
 
     def read_files(self, spark: SparkSession, table: str, files: list[str]) -> DataFrame:
-        schema = self._schemas.get(table)
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(*files)
+        return spark.read.parquet(*files)
 
     def input_files(self, spark: SparkSession, table: str) -> list[str]:
-        df = self.read(spark, table)
-        self._schemas[table] = df.schema
-        return sorted(df.inputFiles())
+        # listed through the schema-free binaryFile source: the same file
+        # index as a parquet read (hidden files skipped, partition dirs
+        # walked) without the footer job a schema-less parquet read runs
+        return sorted(spark.read.format("binaryFile").load(self._path(table)).inputFiles())
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
         w = df.write.mode(mode)
