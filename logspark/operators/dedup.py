@@ -791,6 +791,10 @@ class SignatureStore:
     pruning rely on. An index with a run lacking one predates per-run
     provenance; reading it raises ValueError — rebuild such a store
     rather than silently losing the pairs of its unattributed docs.
+
+    One `load()` serves every layout: the index's ``partition_by`` picks
+    per-run scans unioned by name (partitioned runs) or one multi-path
+    read (flat runs).
     """
 
     def __init__(self, root: str):
@@ -873,7 +877,7 @@ class SignatureStore:
             raise ValueError(f"signature run {run_id!r} already committed")
         # partition_by is a store-global layout key (ADVICE r5 low): mixing
         # a partitioned append into a store with non-partitioned runs (or
-        # changing the columns) breaks load_runs_union's unionByName and
+        # changing the columns) breaks load()'s per-run unionByName and
         # makes compaction partition over rows lacking the column.
         if idx0["runs"] and list(partition_by or []) != list(idx0.get("partition_by") or []):
             raise ValueError(
@@ -893,29 +897,38 @@ class SignatureStore:
 
     def load(self, spark, schema: StructType | None = None) -> DataFrame | None:
         """All committed signatures, or None when the store is empty.
-        `schema` (the signature schema, e.g. a batch's
+
+        The layout picks the read: for PARTITIONED runs (index
+        ``partition_by``), one scan per run unioned by name — multi-path
+        partition discovery chokes on the non-k=v run-dir segment between
+        the common root and the cell=N directories, while a per-run scan
+        keeps its own partition column and pruning (a cell filter above
+        the union prunes directories in every branch). Flat runs are one
+        multi-path read. `schema` (the signature schema, e.g. a batch's
         `minhash_signatures(...).schema`, which is analysis-only) skips
         the footer-inference job a schema-less parquet read runs."""
-        runs = self.committed_runs()
+        import functools
+
+        idx = self._read_index()
+        runs = idx["runs"]
         if not runs:
             return None
         reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(*[self._run_path(r) for r in runs])
-
-    def load_runs_union(self, spark) -> DataFrame | None:
-        """Per-run scans unioned by name — the load for PARTITIONED runs:
-        multi-path partition discovery chokes on the non-k=v run-dir
-        segment between the common root and the cell=N directories, while
-        one scan per run keeps its own partition column AND its own
-        partition pruning (a cell filter above the union prunes
-        directories in every branch)."""
-        import functools
-
-        runs = self.committed_runs()
-        if not runs:
-            return None
-        dfs = [spark.read.parquet(self._run_path(r)) for r in runs]
+        if not idx.get("partition_by"):
+            return reader.parquet(*[self._run_path(r) for r in runs])
+        dfs = [reader.parquet(self._run_path(r)) for r in runs]
         return functools.reduce(lambda a, b: a.unionByName(b), dfs)
+
+    def require_committed(self, run_id: str | None) -> None:
+        """The replay precondition of both incremental operators: the
+        store holds at least one run, and `run_id` (when given) is one of
+        them. run_id=None means the caller established from
+        `committed_files()` that the batch's files are already ingested."""
+        runs = self.committed_runs()
+        if not runs or (run_id is not None and run_id not in runs):
+            raise ValueError(
+                f"replay=True but run {run_id!r} is not committed in the store"
+            )
 
     def compact(self, spark) -> None:
         """Fold every committed run into ONE compacted run — the
@@ -937,11 +950,7 @@ class SignatureStore:
         if len(runs) > 1:
             cid = "compact-" + hashlib.md5("\n".join(runs).encode()).hexdigest()[:12]
             part = self._read_index().get("partition_by")
-            # per-run union, NOT the multi-path self.load(): partitioned
-            # run dirs make spark.read.parquet(run1, run2, ...) throw
-            # CONFLICTING_DIRECTORY_STRUCTURES (the run-dir segment sits
-            # between the common root and the cell=N directories)
-            w = self.load_runs_union(spark).write.mode("overwrite")
+            w = self.load(spark).write.mode("overwrite")
             if part:
                 w = w.partitionBy(*part)
             w.parquet(self._run_path(cid))
@@ -965,11 +974,6 @@ def incremental_near_dup_pairs(
     new_docs: DataFrame,
     corpus: DataFrame,
     run_id: str | None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 16,
-    bands: int = 4,
-    k: int = 3,
     threshold: float = 0.5,
     replay: bool = False,
     input_files: list[str] | None = None,
@@ -1011,30 +1015,29 @@ def incremental_near_dup_pairs(
     `input_files` becomes the appended run's provenance entry
     (`SignatureStore.append`): the dedup agent passes the batch's source
     files; in-memory batches with no source files leave it empty.
+
+    Docs are (doc_id, text) rows, and signatures, bands and shingles are
+    the one-shot defaults of `minhash_signatures`, `band_signatures` and
+    `ngram_jaccard` (16 hashes, 4 bands, k=3): a persistent store mixing
+    two parameterisations would silently break union-of-runs == one-shot.
     """
     spark = new_docs.sparkSession
-    sigs = minhash_signatures(new_docs, id_col, text_col, n_hashes, k)
+    sigs = minhash_signatures(new_docs)
     if replay:
-        runs = store.committed_runs()
-        if not runs or (run_id is not None and run_id not in runs):
-            raise ValueError(
-                f"replay=True but run {run_id!r} is not committed in the store"
-            )
+        store.require_committed(run_id)
         new_sigs = sigs
     else:
         store.append(sigs, run_id, input_files=input_files)
         new_sigs = spark.read.schema(sigs.schema).parquet(store._run_path(run_id))
-    new_b = band_signatures(new_sigs, id_col, n_hashes, bands)
-    all_b = band_signatures(store.load(spark, sigs.schema), id_col, n_hashes, bands)
-
-    l, r = new_b.alias("l"), all_b.alias("r")
+    l = band_signatures(new_sigs).alias("l")
+    r = band_signatures(store.load(spark, sigs.schema)).alias("r")
     pairs = (
         l.join(r, ["band", "key"])
-        .filter(F.col(f"l.{id_col}") != F.col(f"r.{id_col}"))
+        .filter(F.col("l.doc_id") != F.col("r.doc_id"))
         .select(
-            F.least(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("a"),
-            F.greatest(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("b"),
+            F.least(F.col("l.doc_id"), F.col("r.doc_id")).alias("a"),
+            F.greatest(F.col("l.doc_id"), F.col("r.doc_id")).alias("b"),
         )
         .distinct()
     )
-    return ngram_jaccard(corpus, id_col, text_col, k, threshold=threshold, candidates=pairs)
+    return ngram_jaccard(corpus, threshold=threshold, candidates=pairs)

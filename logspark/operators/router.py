@@ -48,7 +48,7 @@ def index_column(df: DataFrame, sink_cfgs: list[dict], ts_col: str = "ts") -> Co
     return expr
 
 
-def route(df: DataFrame, sink_cfgs: list[dict], keep_sinks_col: bool = False) -> DataFrame:
+def route(df: DataFrame, sink_cfgs: list[dict]) -> DataFrame:
     """Returns the routed frame: one row per (event, matched sink), with a
     `sink` string column. Events matching no sink are absent (but remain in
     the un-routed input frame for metrics — count there, not here)."""
@@ -65,4 +65,4 @@ def route(df: DataFrame, sink_cfgs: list[dict], keep_sinks_col: bool = False) ->
     df = df.withColumn("sink", F.explode_outer("sinks")).filter(F.col("sink").isNotNull())
     if any(c.get("index") for c in sink_cfgs):
         df = df.withColumn("index", index_column(df, sink_cfgs))
-    return df if keep_sinks_col else df.drop("sinks")
+    return df.drop("sinks")

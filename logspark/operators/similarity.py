@@ -602,9 +602,6 @@ def incremental_ivf_near_dups(
     centroids: DataFrame,
     run_id: str | None,
     threshold: float = 0.95,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     input_files: list[str] | None = None,
     replay: bool = False,
 ) -> DataFrame:
@@ -629,12 +626,15 @@ def incremental_ivf_near_dups(
     equality. `input_files` becomes the appended run's provenance entry
     (empty for in-memory batches).
     `replay=True` (with the caller holding per-file provenance,
-    run_id=None) recomputes a crashed run's pairs without re-appending."""
+    run_id=None) recomputes a crashed run's pairs without re-appending.
+    Vectors are (vec_id, embedding) rows probed into `ivf_near_dups`'
+    default nprobe=2 cells: a persistent store mixing two probe counts
+    would silently break union-of-runs == one-shot."""
     spark = new_vecs.sparkSession
-    m_new = ivf_assign_multi(new_vecs, centroids, nprobe, id_col, vec_col)
-    m_new = m_new.localCheckpoint(eager=True)
+    id_col, vec_col = "vec_id", "embedding"
+    m_new = ivf_assign_multi(new_vecs, centroids).localCheckpoint(eager=True)
     cells = [r["cell"] for r in m_new.select("cell").distinct().collect()]
-    old = store.load_runs_union(spark)
+    old = store.load(spark)
 
     # r6: pair scoring is the per-cell applyInPandas kernel
     # (_pair_scores_grouped, flagged form) instead of the new x all join
@@ -644,10 +644,7 @@ def incremental_ivf_near_dups(
     # (per-element multiply commutes, so the old orient-by-id when() was
     # already orientation-independent bitwise).
     if replay:
-        if old is None or (run_id is not None and run_id not in store.committed_runs()):
-            raise ValueError(
-                f"replay=True but run {run_id!r} is not committed in the store"
-            )
+        store.require_committed(run_id)
         new_ids = m_new.select(F.col(id_col)).distinct().withColumn("_new", F.lit(True))
         all_m = (
             old.filter(F.col("cell").isin(cells))

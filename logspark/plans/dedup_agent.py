@@ -2,36 +2,47 @@
 near-duplicate detection (SURVEY.md §3.1 agent mode x the training-data
 dedup family).
 
-Each tick:
+Two agents share one crash-safe tick (`_tick`): `dedup_tick` (MinHash
+signatures in `sink_root/sigstore`) and `embed_dedup_tick` (IVF cell
+rows in the cell-partitioned `sink_root/vstore`). Each tick holds the
+sink_root's WriterLock, so a concurrent ad-hoc tick cannot race the
+manifest commit, and:
 
-  1. manifest-pending input files (same resume seam as the parse→route
-     pipeline: crash mid-tick → same run_id → idempotent overwrite); the
-     batch reads reuse the schema the verify corpus read inferred (the
-     batch files are a subset of the corpus files);
-  2. `incremental_near_dup_pairs` — MinHash signatures for the NEW batch
-     only, written straight into the `SignatureStore` (the store commit),
-     then the banded batch joined against one banded scan of the store
-     (the batch is the broadcast side when it fits), and Jaccard verify
-     reading texts only for candidate-touched docs; files already in the
-     store (a crash after its commit) are replayed against it without a
-     second append;
-  3. verified pairs written under runs/<run_id>/pairs, counted by an
-     `Observation` on that write, then the manifest commit marks the
-     files processed (write-then-commit, like run()).
+  1. list the table and take the manifest-pending files (same resume
+     seam as the parse→route pipeline); the run id is the agent's prefix
+     plus the md5 of the pending set, so a retry over the same files
+     overwrites the crashed tick's output;
+  2. split the pending files by the store's provenance
+     (`committed_files()`): files already in the store (a crash after its
+     commit) are replayed against it with run_id None and no second
+     append; fresh files go through the incremental operator under the
+     run id, which appends them to the store (the store commit) before
+     the pairs are computed;
+  3. write the union of both pair sets under runs/<run_id>/pairs, counted
+     by an `Observation` on that write, then the manifest commit marks
+     the files processed (write-then-commit, like run()).
+
+The crash sites are therefore one set for both agents: after the store
+append, after the pairs write, before the manifest commit.
+
+Per agent: the MinHash tick verifies candidates against the texts of
+`pending ∪ ingested` files only (its batch reads reuse that corpus read's
+schema); the embedding tick needs no corpus re-read (the store carries
+the vectors) and scores against centroids pinned by its first tick.
 
 Union-of-ticks == one-shot uncapped whole-corpus pairs (the incremental
-guarantee), so a corpus ingested file-by-file over
-days yields exactly the pair set a from-scratch batch job would — the
-operational shape of continuous training-data ingestion.
-
-Single-writer: each tick holds the sink_root's WriterLock (flock), so a
-concurrent ad-hoc tick cannot race the manifest commit.
+guarantee), so a corpus ingested file-by-file over days yields exactly
+the pair set a from-scratch batch job would — the operational shape of
+continuous training-data ingestion. The signature and probe parameters
+are fixed to the one-shot defaults for that reason: a later tick with
+other values against the same persistent store would break it.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -41,27 +52,28 @@ from logspark.plans.pipeline import WriterLock
 from logspark.sources import manifest as mf
 from logspark.sources.tableio import ParquetIO
 
-
-def dedup_tick(
+def _tick(
     spark: SparkSession,
     io: ParquetIO,
     table: str,
     sink_root: str,
-    threshold: float = 0.5,
-    n_hashes: int = 16,
-    bands: int = 4,
-    k: int = 3,
+    prefix: str,
+    store_dir: str,
+    prepare: Callable[[SignatureStore, list[str], list[str], set[str]], tuple[Callable, dict]],
 ) -> dict:
-    """One agent tick. Returns {run_id, new_files, n_pairs} (run_id None
-    when nothing is pending). Safe to call from a watch()-style loop."""
+    """The agent tick protocol both agents share (module docstring steps
+    1–3). `prepare(store, all_files, pending, ingested)` builds the
+    agent's per-tick inputs and returns its pairs function
+    `(files, run_id) -> pairs` (run_id None = replay) plus extra result
+    keys. Returns {run_id, new_files, n_pairs, replayed_files,
+    ...extra}; run_id is None when nothing is pending."""
     with WriterLock(sink_root):
         all_files = io.input_files(spark, table)
-        manifest = mf.load_manifest(sink_root)
-        pending = mf.pending_files(all_files, manifest)
+        pending = mf.pending_files(all_files, mf.load_manifest(sink_root))
         if not pending:
             return {"run_id": None, "new_files": [], "n_pairs": 0}
-        rid = "d-" + hashlib.md5("\n".join(sorted(pending)).encode()).hexdigest()[:12]
-        store = SignatureStore(os.path.join(sink_root, "sigstore"))
+        rid = prefix + hashlib.md5("\n".join(sorted(pending)).encode()).hexdigest()[:12]
+        store = SignatureStore(os.path.join(sink_root, store_dir))
 
         # Crash replay is keyed PER FILE, not on the pending-set hash
         # (ADVICE r4 medium): a tick that died between the store commit and
@@ -69,54 +81,15 @@ def dedup_tick(
         # but not in the manifest. Whether the retry sees the same pending
         # set (same rid) or a NEW file arrived first (rid changed), the
         # per-file key routes the already-ingested files through replay
-        # (band against the store, never re-append), so the store can never
-        # accumulate duplicate signature rows.
+        # (paired against the store, never re-appended), so the store can
+        # never accumulate duplicate rows.
         ingested = store.committed_files()
         already = sorted(f for f in pending if f in ingested)
         fresh = sorted(f for f in pending if f not in ingested)
-
-        # Verify-stage texts: only files that can hold candidate-touched
-        # docs — the pending set plus every store-member file (every store
-        # run records its input files). Files that land in the table
-        # concurrently (after the listing above) are never scanned;
-        # io.read(table) at action time would be.
-        needed = set(pending) | ingested
-        corpus = io.read_files(spark, table, sorted(needed & set(all_files)))
-
-        def read_batch(files: list[str]) -> DataFrame:
-            # a subset of the corpus files: read with the corpus read's
-            # schema instead of running another footer-inference job
-            return spark.read.schema(corpus.schema).parquet(*files)
-
-        parts = []
-        if already:
-            parts.append(
-                incremental_near_dup_pairs(
-                    store,
-                    read_batch(already),
-                    corpus,
-                    run_id=None,
-                    threshold=threshold,
-                    n_hashes=n_hashes,
-                    bands=bands,
-                    k=k,
-                    replay=True,
-                )
-            )
+        pairs_of, extra = prepare(store, all_files, pending, ingested)
+        parts = [pairs_of(already, None)] if already else []
         if fresh:
-            parts.append(
-                incremental_near_dup_pairs(
-                    store,
-                    read_batch(fresh),
-                    corpus,
-                    run_id=rid,
-                    threshold=threshold,
-                    n_hashes=n_hashes,
-                    bands=bands,
-                    k=k,
-                    input_files=fresh,
-                )
-            )
+            parts.append(pairs_of(fresh, rid))
         n_pairs = _write_pairs(parts, os.path.join(sink_root, "runs", rid, "pairs"))
         mf.commit_run(sink_root, mf.RunRecord(run_id=rid, input_files=pending))
         return {
@@ -124,7 +97,7 @@ def dedup_tick(
             "new_files": pending,
             "n_pairs": n_pairs,
             "replayed_files": already,
-            "corpus_files": sorted(corpus.inputFiles()),
+            **extra,
         }
 
 
@@ -139,7 +112,43 @@ def _write_pairs(parts: list[DataFrame], out: str) -> int:
     return obs.get["n"]
 
 
-def _pin_centroids(spark, sink_root: str, centroids, first_batch_fn, n_cells: int):
+def dedup_tick(
+    spark: SparkSession,
+    io: ParquetIO,
+    table: str,
+    sink_root: str,
+    threshold: float = 0.5,
+) -> dict:
+    """One MinHash agent tick over a (doc_id, text) table. Returns
+    {run_id, new_files, n_pairs, replayed_files, corpus_files} (only the
+    first three, run_id None, when nothing is pending). Safe to call from
+    a watch()-style loop."""
+
+    def prepare(store, all_files, pending, ingested):
+        # Verify-stage texts: only files that can hold candidate-touched
+        # docs — the pending set plus every store-member file (every store
+        # run records its input files). Files that land in the table
+        # concurrently (after the listing) are never scanned;
+        # io.read(table) at action time would be.
+        needed = set(pending) | ingested
+        corpus = io.read_files(spark, table, sorted(needed & set(all_files)))
+
+        def pairs_of(files: list[str], run_id: str | None) -> DataFrame:
+            # the batch files are a subset of the corpus files: read them
+            # with the corpus read's schema instead of running another
+            # footer-inference job
+            batch = spark.read.schema(corpus.schema).parquet(*files)
+            return incremental_near_dup_pairs(
+                store, batch, corpus, run_id, threshold=threshold,
+                replay=run_id is None, input_files=files,
+            )
+
+        return pairs_of, {"corpus_files": sorted(corpus.inputFiles())}
+
+    return _tick(spark, io, table, sink_root, "d-", "sigstore", prepare)
+
+
+def _pin_centroids(spark, sink_root: str, first_batch_fn):
     """Centroids must be FIXED for the store's lifetime (a drifting
     assignment splits cells across time), so the FIRST tick persists them
     under the sink root and every later tick — any process, any restart —
@@ -156,9 +165,9 @@ def _pin_centroids(spark, sink_root: str, centroids, first_batch_fn, n_cells: in
     if not os.path.isdir(path):
         from logspark.operators.similarity import head_centroids
 
-        c = head_centroids(first_batch_fn(), n_cells) if centroids is None else centroids
         tmp = path + ".tmp"
-        c.write.mode("overwrite").parquet(tmp)
+        # 6 cells: `ivf_near_dups`' one-shot default
+        head_centroids(first_batch_fn(), 6).write.mode("overwrite").parquet(tmp)
         os.rename(tmp, path)
     return spark.read.parquet(path)
 
@@ -168,73 +177,28 @@ def embed_dedup_tick(
     io: ParquetIO,
     table: str,
     sink_root: str,
-    centroids=None,
-    n_cells: int = 6,
     threshold: float = 0.95,
-    nprobe: int = 2,
 ) -> dict:
-    """One EMBEDDING dedup agent tick — the vector sibling of
-    `dedup_tick`: manifest-pending files → `incremental_ivf_near_dups`
-    against the cell-partitioned vector store → pairs under
-    runs/<rid>/pairs → manifest commit, all under the writer lock, with
-    the same PER-FILE crash replay key (store provenance, not run-set
-    hashes). Unlike the MinHash tick there is NO corpus re-read at all:
-    the store carries the vectors, and its scan is pruned to the new
+    """One EMBEDDING agent tick over a (vec_id, embedding) table — the
+    vector sibling of `dedup_tick`, same protocol and result keys (no
+    `corpus_files`): `incremental_ivf_near_dups` against the
+    cell-partitioned vector store, whose scan is pruned to the new
     batch's cells. Union-of-ticks == one-shot `ivf_near_dups` on the
     pinned centroids (the incremental guarantee)."""
     from logspark.operators.similarity import incremental_ivf_near_dups
 
-    with WriterLock(sink_root):
-        all_files = io.input_files(spark, table)
-        manifest = mf.load_manifest(sink_root)
-        pending = mf.pending_files(all_files, manifest)
-        if not pending:
-            return {"run_id": None, "new_files": [], "n_pairs": 0}
-        rid = "e-" + hashlib.md5("\n".join(sorted(pending)).encode()).hexdigest()[:12]
-        store = SignatureStore(os.path.join(sink_root, "vstore"))
-        ingested = store.committed_files()
-        already = sorted(f for f in pending if f in ingested)
-        fresh = sorted(f for f in pending if f not in ingested)
-        cents = _pin_centroids(
-            spark,
-            sink_root,
-            centroids,
-            lambda: io.read_files(spark, table, pending),
-            n_cells,
-        )
-        parts = []
-        if already:
-            parts.append(
-                incremental_ivf_near_dups(
-                    store,
-                    io.read_files(spark, table, already),
-                    cents,
-                    run_id=None,
-                    threshold=threshold,
-                    nprobe=nprobe,
-                    replay=True,
-                )
+    def prepare(store, all_files, pending, ingested):
+        cents = _pin_centroids(spark, sink_root, lambda: io.read_files(spark, table, pending))
+
+        def pairs_of(files: list[str], run_id: str | None) -> DataFrame:
+            return incremental_ivf_near_dups(
+                store, io.read_files(spark, table, files), cents, run_id,
+                threshold=threshold, input_files=files, replay=run_id is None,
             )
-        if fresh:
-            parts.append(
-                incremental_ivf_near_dups(
-                    store,
-                    io.read_files(spark, table, fresh),
-                    cents,
-                    run_id=rid,
-                    threshold=threshold,
-                    nprobe=nprobe,
-                    input_files=fresh,
-                )
-            )
-        n_pairs = _write_pairs(parts, os.path.join(sink_root, "runs", rid, "pairs"))
-        mf.commit_run(sink_root, mf.RunRecord(run_id=rid, input_files=pending))
-        return {
-            "run_id": rid,
-            "new_files": pending,
-            "n_pairs": n_pairs,
-            "replayed_files": already,
-        }
+
+        return pairs_of, {}
+
+    return _tick(spark, io, table, sink_root, "e-", "vstore", prepare)
 
 
 def _watch(
@@ -247,7 +211,7 @@ def _watch(
     interval_s: float,
     max_iterations: int | None,
     compact_every: int | None,
-    tick_kwargs: dict,
+    threshold: float,
 ) -> list[dict]:
     """The shared agent loop: tick → compact the store under the
     WriterLock once it holds `compact_every` runs → sleep."""
@@ -256,7 +220,7 @@ def _watch(
     results: list[dict] = []
     i = 0
     while max_iterations is None or i < max_iterations:
-        results.append(tick(spark, io, table, sink_root, **tick_kwargs))
+        results.append(tick(spark, io, table, sink_root, threshold=threshold))
         store = SignatureStore(os.path.join(sink_root, store_dir))
         if compact_every is not None and len(store.committed_runs()) >= compact_every:
             with WriterLock(sink_root):
@@ -275,7 +239,7 @@ def watch_dedup(
     interval_s: float = 30.0,
     max_iterations: int | None = None,
     compact_every: int | None = 64,
-    **tick_kwargs,
+    threshold: float = 0.5,
 ) -> list[dict]:
     """Continuous agent loop around `dedup_tick` — the dedup analogue of
     plans.pipeline.watch: poll for new input files every `interval_s`,
@@ -288,10 +252,10 @@ def watch_dedup(
     listings start to dominate every load). Compaction preserves the
     per-file ingestion provenance the crash-replay key depends on, and
     runs under the same WriterLock as ticks so it cannot race a commit.
-    None disables."""
+    None disables. `threshold` is each tick's Jaccard threshold."""
     return _watch(
         dedup_tick, "sigstore", spark, io, table, sink_root,
-        interval_s, max_iterations, compact_every, tick_kwargs,
+        interval_s, max_iterations, compact_every, threshold,
     )
 
 
@@ -303,15 +267,16 @@ def watch_embed_dedup(
     interval_s: float = 30.0,
     max_iterations: int | None = None,
     compact_every: int | None = 64,
-    **tick_kwargs,
+    threshold: float = 0.95,
 ) -> list[dict]:
     """Continuous loop around `embed_dedup_tick` — same contract as
     `watch_dedup`, over the cell-partitioned vector store. Compaction
     preserves the partitioned layout (store index carries partition_by)
-    and the per-file provenance, both under the writer lock."""
+    and the per-file provenance, both under the writer lock. `threshold`
+    is each tick's cosine threshold."""
     return _watch(
         embed_dedup_tick, "vstore", spark, io, table, sink_root,
-        interval_s, max_iterations, compact_every, tick_kwargs,
+        interval_s, max_iterations, compact_every, threshold,
     )
 
 

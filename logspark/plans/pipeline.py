@@ -331,6 +331,14 @@ def _run_locked(
             "sink",
             F.pmod(F.hash("conv_id"), F.lit(int(fps))),
         )
+    # Per-sink totals are observed on the routed write itself (one exact
+    # row count per configured sink) instead of re-reading the counts.
+    sinks = [c["name"] for c in cfg.output]
+    sink_obs = Observation("sinks")
+    routed_out = routed_out.observe(
+        sink_obs,
+        *[F.count_if(F.col("sink") == s).alias(f"n{i}") for i, s in enumerate(sinks)],
+    )
     routed_out.write.mode("overwrite").partitionBy("sink").parquet(routed_path)
     # Counts come from the WRITTEN sink, not a recomputation: the parse→route
     # stage runs exactly once, and the (sink, conv_id, ts)-only re-read is a
@@ -342,11 +350,10 @@ def _run_locked(
         "overwrite"
     ).parquet(counts_path)
 
-    per_sink = {
-        r["sink"]: r["n"]
-        for r in spark.read.parquet(counts_path).groupBy("sink").agg(F.sum("n").alias("n")).collect()
+    n_by_sink = sink_obs.get
+    result.sink_rows = {
+        s: int(n_by_sink[f"n{i}"]) for i, s in enumerate(sinks) if n_by_sink[f"n{i}"]
     }
-    result.sink_rows = {k: int(v) for k, v in per_sink.items()}
     result.metrics.update({k: float(v) for k, v in bp.observation.get.items()})
 
     mf.commit_run(

@@ -784,7 +784,7 @@ def test_watch_dedup_loop(spark, tmp_path):
 def test_signature_store_partition_by_must_match_existing_layout(spark, tmp_path):
     """ADVICE r5 low: partition_by is a store-global layout key — mixing a
     partitioned append into a non-partitioned store (or changing the
-    columns) breaks load_runs_union and compaction; append must raise."""
+    columns) breaks load()'s per-run union and compaction; append must raise."""
     import pytest as _pytest
 
     from logspark.operators import dedup

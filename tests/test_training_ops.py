@@ -1007,7 +1007,7 @@ def test_incremental_ivf_near_dups_equals_one_shot(spark, emb, tmp_path):
     # becomes a PartitionFilter in every run's scan branch
     import re
 
-    scan = store.load_runs_union(spark).filter(F.col("cell").isin([0, 1]))
+    scan = store.load(spark).filter(F.col("cell").isin([0, 1]))
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"PartitionFilters: \[cell#\d+ IN \(0,1\)\]", plan)) == 3
 
@@ -1019,11 +1019,11 @@ def test_incremental_ivf_near_dups_equals_one_shot(spark, emb, tmp_path):
         ).collect()
     }
     assert p2 == per_run[2]
-    rows = store.load_runs_union(spark).groupBy("vec_id", "cell").count().collect()
+    rows = store.load(spark).groupBy("vec_id", "cell").count().collect()
     assert all(r["count"] == 1 for r in rows)
 
 
-def test_embed_dedup_agent_ticks_equal_one_shot(spark, emb, tmp_path):
+def test_embed_dedup_agent_ticks_equal_one_shot(spark, emb, tmp_path, monkeypatch):
     """Continuous EMBEDDING dedup agent: vector files arriving across
     ticks yield exactly the one-shot ivf_near_dups pair set on the pinned
     centroids; a crash between store and manifest commit with a NEW file
@@ -1048,22 +1048,31 @@ def test_embed_dedup_agent_ticks_equal_one_shot(spark, emb, tmp_path):
     r0 = dedup_agent.embed_dedup_tick(spark, io, "vecs", sink, threshold=0.35)
     assert r0["run_id"]
 
-    # tick 2 "crashes" after the store commit: drop its manifest entry
+    # tick 2 crashes after the store commit, before the manifest commit
     chunks[1].to_parquet(tbl / "f1.parquet")
-    r1 = dedup_agent.embed_dedup_tick(spark, io, "vecs", sink, threshold=0.35)
-    m = mf.load_manifest(sink)
-    mf.save_manifest(sink, mf.Manifest(runs=[r for r in m.runs if r.run_id != r1["run_id"]]))
+    store = SignatureStore(os.path.join(sink, "vstore"))
+    real_commit = mf.commit_run
+
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(dedup_agent.mf, "commit_run", real_commit)
+        raise RuntimeError("crash before the manifest commit")
+
+    monkeypatch.setattr(dedup_agent.mf, "commit_run", crash_once)
+    with pytest.raises(RuntimeError, match="crash before the manifest commit"):
+        dedup_agent.embed_dedup_tick(spark, io, "vecs", sink, threshold=0.35)
+    crashed_rid = store.committed_runs()[-1]
+    assert len(store.committed_runs()) == 2
+    assert crashed_rid not in {r.run_id for r in mf.load_manifest(sink).runs}
 
     chunks[2].to_parquet(tbl / "f2.parquet")  # new arrival before retry
     r2 = dedup_agent.embed_dedup_tick(spark, io, "vecs", sink, threshold=0.35)
-    assert r2["run_id"] != r1["run_id"]
+    assert r2["run_id"] != crashed_rid
     assert any(f.endswith("f1.parquet") for f in r2["replayed_files"])
-    for r in (r0, r1, r2):  # n_pairs is observed on the pairs write
+    for r in (r0, r2):  # n_pairs is observed on the pairs write
         out = os.path.join(sink, "runs", r["run_id"], "pairs")
         assert r["n_pairs"] == spark.read.parquet(out).count()
 
-    store = SignatureStore(os.path.join(sink, "vstore"))
-    rows = store.load_runs_union(spark).groupBy("vec_id", "cell").count().collect()
+    rows = store.load(spark).groupBy("vec_id", "cell").count().collect()
     assert all(r["count"] == 1 for r in rows)  # replay never re-appended
 
     pinned = spark.read.parquet(os.path.join(sink, "centroids"))
@@ -1109,7 +1118,7 @@ def test_watch_embed_dedup_with_compaction_and_pin_crash(spark, emb, tmp_path):
     store = SignatureStore(os.path.join(sink, "vstore"))
     assert len(store.committed_runs()) < 3  # compaction fired
     assert len(store.committed_files()) == 3
-    rows = store.load_runs_union(spark).groupBy("vec_id", "cell").count().collect()
+    rows = store.load(spark).groupBy("vec_id", "cell").count().collect()
     assert all(r["count"] == 1 for r in rows)
     run_dir = os.path.join(sink, "vstore", "runs", store.committed_runs()[0])
     assert any(d.startswith("cell=") for d in os.listdir(run_dir))
@@ -1149,16 +1158,16 @@ def test_vector_store_compaction_partitioned_and_provenance_less_store_rejected(
               input_files=["f0"], partition_by=["cell"])
     vs.append(m.filter(F.col("vec_id") > half), "r1",
               input_files=["f1"], partition_by=["cell"])
-    before = {(r["vec_id"], r["cell"]) for r in vs.load_runs_union(spark).collect()}
+    before = {(r["vec_id"], r["cell"]) for r in vs.load(spark).collect()}
     vs.compact(spark)
     assert len(vs.committed_runs()) == 1
-    after = {(r["vec_id"], r["cell"]) for r in vs.load_runs_union(spark).collect()}
+    after = {(r["vec_id"], r["cell"]) for r in vs.load(spark).collect()}
     assert after == before
     assert vs.committed_files() == {"f0", "f1"}
     run_dir = os.path.join(str(tmp_path / "vs"), "runs", vs.committed_runs()[0])
     assert any(d.startswith("cell=") for d in os.listdir(run_dir))  # layout kept
     plan = (
-        vs.load_runs_union(spark)
+        vs.load(spark)
         .filter(F.col("cell") == 0)
         ._jdf.queryExecution().executedPlan().toString()
     )
