@@ -12,7 +12,8 @@ this VM slows per-core, so 8→32 is bounded at ~0.66 by hardware alone.
 The measured job is the full canonical pipeline over a pre-generated
 transcripts table: scan → JVM-native grok (2 patterns) → json codec →
 patch templates → 2 broadcast enrich joins → sinks/explode router →
-partitioned routed write + per-sink (conv_id, hour) counts write.
+partitioned routed write + per-sink (conv_id, hour) counts write, through
+`pipeline.write_sinks`, the same writes a batch `pipeline.run` makes.
 
 Input is generated once (deterministic, seed=42) with 128 parquet files so
 both runs are parallelism-bound, not split-bound.
@@ -80,17 +81,15 @@ def run_parse_route(spark, input_path: str, out_dir: str) -> dict:
     """The measured job. Returns {rows, seconds, turns_per_sec}."""
     from logspark.config import canonical_config
     from logspark.datagen import role_map_pdf, tool_catalog_pdf
-    from logspark.plans.pipeline import build
+    from logspark.plans.pipeline import build, write_sinks
     from logspark.queries import ensure_workers
 
     ensure_workers(spark)
     cfg = canonical_config()
-    cfg.input = [{"type": "memory"}]
     dims = {
         "tool_catalog": spark.createDataFrame(tool_catalog_pdf()),
         "role_map": spark.createDataFrame(role_map_pdf()),
     }
-    src = spark.read.parquet(input_path)
     shutil.rmtree(out_dir, ignore_errors=True)
 
     # Build + analyze the plan untimed: Catalyst analysis is driver-side,
@@ -98,18 +97,11 @@ def run_parse_route(spark, input_path: str, out_dir: str) -> dict:
     # on a real cluster — including it would charge a constant to both
     # levels and distort the throughput ratio. Execution (physical planning,
     # scheduling, all stages, commits) is fully inside the timed window.
-    bp = build(spark, cfg, df=src, dims=dims)
+    bp = build(cfg, spark.read.parquet(input_path), dims)
     _ = bp.routed.schema
 
     t0 = time.time()
-    routed_path = os.path.join(out_dir, "routed")
-    bp.routed.write.mode("overwrite").partitionBy("sink").parquet(routed_path)
-    # counts from the written sink (one parse pass total; pruned 3-col scan)
-    from logspark.operators.aggregates import sink_counts
-
-    sink_counts(spark.read.parquet(routed_path)).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "sink_counts")
-    )
+    write_sinks(bp, cfg, os.path.join(out_dir, "routed"), os.path.join(out_dir, "sink_counts"))
     seconds = time.time() - t0
 
     rows = int(bp.observation.get["rows_in"])

@@ -77,7 +77,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.stream:
         from logspark.streaming import stream_pipeline
 
-        table = next(i["table"] for i in cfg.input if i["type"] == "table")
+        table = cfg.input[0]["table"]
         q = stream_pipeline(
             spark,
             cfg,

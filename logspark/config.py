@@ -8,7 +8,11 @@ go-logagent configs look like (utils/config.go family — SURVEY.md §3.1):
 
 We keep that shape verbatim (plus optional "enrich" and "aggregate"
 sections for the pinned broadcast-join and per-sink-counts stages) so
-reference-style configs and test fixtures drop in unchanged.
+reference-style configs and test fixtures drop in unchanged. The input
+section names exactly one table, `[{"type": "table", "table": <name>}]`:
+the table a batch run reads its manifest-pending files from and a stream
+tails. The output section names at least one sink. Configs that break
+either rule raise ValueError at load, before any Spark job runs.
 """
 
 from __future__ import annotations
@@ -30,10 +34,18 @@ class PipelineConfig:
     write: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
-        for section, entries in (("input", self.input), ("filter", self.filter)):
-            for e in entries:
-                if "type" not in e:
-                    raise ValueError(f"{section} entry missing 'type': {e}")
+        match self.input:
+            case [{"type": "table", "table": str()} as inp] if len(inp) == 2:
+                pass
+            case _:
+                raise ValueError(
+                    f'input must be exactly [{{"type": "table", "table": <name>}}], got {self.input}'
+                )
+        for e in self.filter:
+            if "type" not in e:
+                raise ValueError(f"filter entry missing 'type': {e}")
+        if not self.output:
+            raise ValueError("output must name at least one sink")
         names = [o.get("name") for o in self.output]
         if any(n is None for n in names):
             raise ValueError("every output needs a 'name'")
@@ -55,7 +67,11 @@ class PipelineConfig:
         if path.endswith((".yaml", ".yml")):
             import yaml
 
-            return cls.from_dict(yaml.safe_load(text))
+            try:
+                d = yaml.safe_load(text)
+            except yaml.YAMLError as e:  # malformed JSON is a ValueError already
+                raise ValueError(f"{path}: {e}") from e
+            return cls.from_dict(d)
         return cls.from_dict(json.loads(text))
 
 

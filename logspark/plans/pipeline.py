@@ -1,10 +1,16 @@
 """Config → DataFrame-DAG compiler + executed runs (SURVEY.md §3.2).
 
-    PipelineConfig
-      → build(): scan → filter chain → enrich joins → router
-                 (ALL narrow — one stage, no shuffle before the sinks)
-      → run():   one partitioned sink write + one per-sink-counts aggregate,
-                 observation metrics, resume manifest commit.
+    PipelineConfig + source DataFrame
+      → build():       filter chain → enrich joins → router
+                       (ALL narrow — one stage, no shuffle before the sinks)
+      → write_sinks(): one partitioned sink write + one per-sink-counts
+                       aggregate over what it wrote, observation metrics.
+
+run() feeds build() the manifest-pending files of the config's one table
+input and commits the resume manifest; the streaming foreachBatch processor
+feeds it each micro-batch and the scaling bench a whole table. All three
+write through write_sinks(), so a run, a micro-batch and a bench job
+execute the same plans.
 
 Scale notes (the 100 TB story):
 - Everything before the write/agg is a single narrow stage: parquet/Iceberg
@@ -30,7 +36,7 @@ from pyspark.sql import functions as F
 from logspark.config import PipelineConfig
 from logspark.operators.aggregates import sink_counts
 from logspark.operators.enrich import apply_enrich_chain
-from logspark.operators.filters import GROK_FAILURE_TAG, apply_filter_chain, ensure_tags
+from logspark.operators.filters import GROK_FAILURE_TAG, apply_filter_chain
 from logspark.operators.router import route
 from logspark.sources import manifest as mf
 from logspark.sources.tableio import ParquetIO
@@ -52,46 +58,13 @@ class RunResult:
     input_files: list[str] = dc_field(default_factory=list)
 
 
-def load_inputs(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    io: ParquetIO | None,
-    df: DataFrame | None,
-    input_files: list[str] | None = None,
-) -> DataFrame:
-    frames: list[DataFrame] = []
-    for inp in cfg.input:
-        t = inp["type"]
-        if t == "memory":
-            if df is None:
-                raise ValueError("memory input requires a DataFrame argument")
-            frames.append(df)
-        elif t == "table":
-            if io is None:
-                raise ValueError("table input requires a TableIO")
-            if input_files is not None:
-                frames.append(io.read_files(spark, inp["table"], input_files))
-            else:
-                frames.append(io.read(spark, inp["table"]))
-        else:
-            raise ValueError(f"unknown input type {t!r}")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
-
-
 def build(
-    spark: SparkSession,
     cfg: PipelineConfig,
-    df: DataFrame | None = None,
-    io: ParquetIO | None = None,
+    src: DataFrame,
     dims: dict[str, DataFrame] | None = None,
-    input_files: list[str] | None = None,
 ) -> BuiltPipeline:
-    src = load_inputs(spark, cfg, io, df, input_files)
-    src = ensure_tags(src)
-
+    """The routed DAG over `src` (a pending-files read, a micro-batch or a
+    bench table), with the exact parse metrics observed on it."""
     parsed = apply_filter_chain(src, cfg.filter)
     if cfg.enrich:
         parsed = apply_enrich_chain(parsed, cfg.enrich, dims or {})
@@ -108,6 +81,51 @@ def build(
     routed = route(parsed, cfg.output)
     counts = sink_counts(routed, bucket=cfg.aggregate.get("bucket", "hour"))
     return BuiltPipeline(parsed=parsed, routed=routed, counts=counts, observation=obs)
+
+
+def write_sinks(
+    bp: BuiltPipeline, cfg: PipelineConfig, routed_path: str, counts_path: str
+) -> dict[str, int]:
+    """Write the routed DAG partitioned by sink to `routed_path`, then the
+    per-sink (conv_id, bucket) counts of what landed there to `counts_path`;
+    both overwrite, so a replay under the same paths is idempotent. Returns
+    the nonzero per-sink row counts, observed on the routed write."""
+    routed_out = bp.routed
+    # File-count control. The shuffle-free dynamic-partition write produces
+    # tasks x sinks files — at 100 TB (~800k input splits, 3-5 sinks) that
+    # is millions of files per run, a metastore/list killer. With
+    # write.files_per_sink = k, one extra shuffle repartitions on
+    # (sink, hash(conv_id) % k) → ~k files per sink, each sized
+    # bytes_per_sink / k (pick k so files land near the 128-512 MB sweet
+    # spot). Default off: the narrow plan wins while file counts are sane.
+    fps = cfg.write.get("files_per_sink")
+    if fps:
+        routed_out = routed_out.repartition(
+            int(fps) * len(cfg.output),
+            "sink",
+            F.pmod(F.hash("conv_id"), F.lit(int(fps))),
+        )
+    # Per-sink totals are observed on the routed write itself (one exact
+    # row count per configured sink) instead of re-reading the counts.
+    sinks = [c["name"] for c in cfg.output]
+    sink_obs = Observation("sinks")
+    routed_out = routed_out.observe(
+        sink_obs,
+        *[F.count_if(F.col("sink") == s).alias(f"n{i}") for i, s in enumerate(sinks)],
+    )
+    routed_out.write.mode("overwrite").partitionBy("sink").parquet(routed_path)
+    # Counts come from the WRITTEN sink, not a recomputation: the parse→route
+    # stage runs exactly once, and the (sink, conv_id, ts)-only re-read is a
+    # column-pruned parquet scan — tiny next to the parse cost. This also
+    # makes the counts describe what physically landed in each sink. The
+    # read takes the written plan's schema: no footer-inference job, and a
+    # zero-row write (no sink=... directory) reads back as zero rows.
+    written = bp.routed.sparkSession.read.schema(bp.routed.schema).parquet(routed_path)
+    sink_counts(written, bucket=cfg.aggregate.get("bucket", "hour")).write.mode(
+        "overwrite"
+    ).parquet(counts_path)
+    n_by_sink = sink_obs.get
+    return {s: int(n_by_sink[f"n{i}"]) for i, s in enumerate(sinks) if n_by_sink[f"n{i}"]}
 
 
 class WriterLock:
@@ -220,35 +238,31 @@ def watch(
     a directory. `max_iterations` bounds the loop for tests; None tails
     forever like the reference agent."""
     import hashlib
+    import logging
     import time
 
     results: list[RunResult] = []
     i = 0
     while max_iterations is None or i < max_iterations:
-        cfg = PipelineConfig.load(config_path)  # hot reload, every tick
-        tables = [c["table"] for c in cfg.input if c["type"] == "table"]
-        if not tables:
-            # a hot-reloaded config without a table input must not kill the
-            # long-running agent with a bare StopIteration (ADVICE r2); the
+        try:
+            cfg = PipelineConfig.load(config_path)  # hot reload, every tick
+        except ValueError as e:
+            # a bad config push must not kill the long-running agent: the
             # tick is skipped with a diagnosable warning and the NEXT reload
             # picks up the fixed config — reference agents survive bad
             # config pushes the same way
-            import logging
-
             logging.getLogger(__name__).warning(
-                "watch(): config %r has no input section of type 'table'; "
-                "skipping this tick (fix the config — the next tick reloads it)",
+                "watch(): skipping this tick, config %r is invalid (%s); "
+                "the next tick reloads it",
                 config_path,
+                e,
             )
-            i += 1
-            if max_iterations is None or i < max_iterations:
-                time.sleep(interval_s)
-            continue
-        table = tables[0]
-        pending = mf.pending_files(io.input_files(spark, table), mf.load_manifest(sink_root))
-        if pending:
-            rid = "w-" + hashlib.md5("\n".join(sorted(pending)).encode()).hexdigest()[:12]
-            results.append(run(spark, cfg, io, sink_root, run_id=rid, dims=dims))
+        else:
+            table = cfg.input[0]["table"]
+            pending = mf.pending_files(io.input_files(spark, table), mf.load_manifest(sink_root))
+            if pending:
+                rid = "w-" + hashlib.md5("\n".join(sorted(pending)).encode()).hexdigest()[:12]
+                results.append(run(spark, cfg, io, sink_root, run_id=rid, dims=dims))
         i += 1
         if max_iterations is None or i < max_iterations:
             time.sleep(interval_s)
@@ -283,7 +297,7 @@ def _run_locked(
     dims: dict[str, DataFrame] | None,
     incremental: bool,
 ) -> RunResult:
-    table = next(i["table"] for i in cfg.input if i["type"] == "table")
+    table = cfg.input[0]["table"]
     all_files = io.input_files(spark, table)
     m = mf.load_manifest(sink_root)
     files = mf.pending_files(all_files, m) if incremental else all_files
@@ -313,48 +327,12 @@ def _run_locked(
             if d not in committed and d != run_id:
                 shutil.rmtree(os.path.join(runs_dir, d), ignore_errors=True)
 
-    bp = build(spark, cfg, io=io, dims=dims, input_files=files)
-
+    bp = build(cfg, io.read_files(spark, table, files), dims)
     routed_path = os.path.join(sink_root, "runs", run_id, "routed")
-    routed_out = bp.routed
-    # File-count control. The shuffle-free dynamic-partition write produces
-    # tasks x sinks files — at 100 TB (~800k input splits, 3-5 sinks) that
-    # is millions of files per run, a metastore/list killer. With
-    # write.files_per_sink = k, one extra shuffle repartitions on
-    # (sink, hash(conv_id) % k) → ~k files per sink, each sized
-    # bytes_per_sink / k (pick k so files land near the 128-512 MB sweet
-    # spot). Default off: the narrow plan wins while file counts are sane.
-    fps = cfg.write.get("files_per_sink")
-    if fps:
-        routed_out = routed_out.repartition(
-            int(fps) * max(len(cfg.output), 1),
-            "sink",
-            F.pmod(F.hash("conv_id"), F.lit(int(fps))),
-        )
-    # Per-sink totals are observed on the routed write itself (one exact
-    # row count per configured sink) instead of re-reading the counts.
-    sinks = [c["name"] for c in cfg.output]
-    sink_obs = Observation("sinks")
-    routed_out = routed_out.observe(
-        sink_obs,
-        *[F.count_if(F.col("sink") == s).alias(f"n{i}") for i, s in enumerate(sinks)],
-    )
-    routed_out.write.mode("overwrite").partitionBy("sink").parquet(routed_path)
-    # Counts come from the WRITTEN sink, not a recomputation: the parse→route
-    # stage runs exactly once, and the (sink, conv_id, ts)-only re-read is a
-    # column-pruned parquet scan — tiny next to the parse cost. This also
-    # makes the counts describe what physically landed in each sink.
     counts_path = os.path.join(sink_root, "runs", run_id, "sink_counts")
-    written = spark.read.parquet(routed_path)
-    sink_counts(written, bucket=cfg.aggregate.get("bucket", "hour")).write.mode(
-        "overwrite"
-    ).parquet(counts_path)
-
-    n_by_sink = sink_obs.get
-    result.sink_rows = {
-        s: int(n_by_sink[f"n{i}"]) for i, s in enumerate(sinks) if n_by_sink[f"n{i}"]
-    }
-    result.metrics.update({k: float(v) for k, v in bp.observation.get.items()})
+    result.sink_rows = write_sinks(bp, cfg, routed_path, counts_path)
+    # an all-empty input observes sum() over no rows as None
+    result.metrics.update({k: float(v or 0) for k, v in bp.observation.get.items()})
 
     mf.commit_run(
         sink_root,

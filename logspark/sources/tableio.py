@@ -4,15 +4,19 @@ Production target is Iceberg (BASELINE.json: "Iceberg table of multi-turn
 agent transcripts"); the sandbox ships no Iceberg runtime jars and has no
 network for --packages, so the seam has two implementations:
 
-- ParquetIO   — works everywhere; used by tests/bench. Incremental reads are
-                file-list based (new files since the manifest's last run).
+- ParquetIO   — works everywhere; used by tests, the benchmarks and
+                plans/. Incremental reads are file-list based: `input_files`
+                lists a table, the manifest drops the files already
+                processed, and `read_files` reads the rest.
 - IcebergIO   — the production path: reads via the `iceberg` format, resumes
                 via `option("start-snapshot-id", …)` incremental scans and
                 checkpoints the consumed snapshot id. Constructing it without
                 the Iceberg runtime on the classpath raises with instructions.
 
-Both honor the same interface so plans/pipeline.py and the manifest module
-never branch on the backend.
+The two do not share one interface yet: plans/pipeline.py and the dedup
+agents call ParquetIO's file-list methods (`input_files`, `read_files`),
+which IcebergIO lacks. Running them on Iceberg needs a snapshot-based
+pending set in the manifest in place of the file list.
 """
 
 from __future__ import annotations
@@ -32,9 +36,6 @@ class ParquetIO:
     def _path(self, table: str) -> str:
         p = os.path.join(self.base_dir, f"{table}.parquet")
         return p if os.path.exists(p) else os.path.join(self.base_dir, table)
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self._path(table))
 
     def read_files(self, spark: SparkSession, table: str, files: list[str]) -> DataFrame:
         return spark.read.parquet(*files)

@@ -5,19 +5,23 @@ Spark-native continuous form is a file-source stream over the transcripts
 directory with the identical batch DAG applied per micro-batch:
 
     readStream (file source, maxFilesPerTrigger)
-      → foreachBatch(batch_df -> filter chain → enrich → route → writes)
+      → foreachBatch(batch_df -> pipeline.build → pipeline.write_sinks)
 
 Design points:
-- the batch functions are reused UNCHANGED — `foreachBatch` hands us a
-  plain DataFrame, so grok/patch/enrich/router need no streaming variants;
+- the batch code is reused UNCHANGED — `foreachBatch` hands us a plain
+  DataFrame, and each micro-batch runs the batch run's own `build()` and
+  `write_sinks()`: the same filter/enrich/router plan, the same routed and
+  counts writes, and the same parse and per-sink observations;
 - the checkpointLocation tracks which input files each micro-batch covered
   (Spark's file-source log — the streaming analogue of our batch manifest);
 - **replay idempotency**: foreachBatch is only at-least-once — after a
-  mid-batch failure Spark re-runs the SAME batch_id. Writes are therefore
-  keyed by batch_id and use dynamic-partition OVERWRITE: a replayed batch
-  replaces its own partition instead of appending duplicates. Exactly the
-  per-run overwrite-directory idempotency of the batch path (manifest.py),
-  in streaming form;
+  mid-batch failure Spark re-runs the SAME batch_id. Each micro-batch
+  therefore writes its own paths, `routed/batch_id=<id>/` and
+  `sink_counts/batch_id=<id>/`, with plain overwrite: a replayed batch
+  replaces its own directories instead of appending duplicates, and a
+  read of `routed/` or `sink_counts/` discovers `batch_id` (and `sink`)
+  as partition columns. Exactly the per-run overwrite-directory
+  idempotency of the batch path (manifest.py), in streaming form;
 - event-time windowed aggregates with late data would use
   `withWatermark("ts", ...)` + `window(ts, ...)` *inside* the streaming DAG
   instead of foreachBatch; the reference has no late-data semantics
@@ -29,10 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from logspark.config import PipelineConfig
-from logspark.operators.aggregates import sink_counts
-from logspark.operators.enrich import apply_enrich_chain
-from logspark.operators.filters import apply_filter_chain
-from logspark.operators.router import route
+from logspark.plans.pipeline import build, write_sinks
 
 TRANSCRIPTS_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -44,37 +45,17 @@ def make_batch_processor(
     sink_root: str,
     dims: dict[str, DataFrame] | None = None,
 ):
-    """The foreachBatch function: batch DAG + batch_id-idempotent writes.
-    Exposed so tests can replay a batch_id and assert no double counts."""
+    """The foreachBatch function: the batch run's build + write_sinks into
+    batch_id-keyed paths. Exposed so tests can replay a batch_id and assert
+    no double counts."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        parsed = apply_filter_chain(batch_df, cfg.filter)
-        if cfg.enrich:
-            parsed = apply_enrich_chain(parsed, cfg.enrich, dims or {})
-        routed = route(parsed, cfg.output).withColumn("batch_id", F.lit(batch_id))
-        routed.persist()
-        try:
-            # dynamic-partition overwrite keyed on batch_id: a replayed
-            # micro-batch (at-least-once foreachBatch) replaces its own
-            # batch_id=<id>/ partitions — no double counts after recovery
-            (
-                routed.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "sink")
-                .parquet(f"{sink_root}/routed")
-            )
-            (
-                sink_counts(routed, bucket=cfg.aggregate.get("bucket", "hour"))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{sink_root}/sink_counts")
-            )
-        finally:
-            routed.unpersist()
+        write_sinks(
+            build(cfg, batch_df, dims),
+            cfg,
+            f"{sink_root}/routed/batch_id={batch_id}",
+            f"{sink_root}/sink_counts/batch_id={batch_id}",
+        )
 
     return process_batch
 

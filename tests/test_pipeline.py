@@ -10,15 +10,8 @@ from logspark.plans import pipeline
 
 
 @pytest.fixture(scope="module")
-def mem_config():
-    cfg = canonical_config()
-    cfg.input = [{"type": "memory"}]
-    return cfg
-
-
-@pytest.fixture(scope="module")
-def run(spark, transcripts, dims, mem_config):
-    bp = pipeline.build(spark, mem_config, df=transcripts, dims=dims)
+def run(spark, transcripts, dims):
+    bp = pipeline.build(canonical_config(), transcripts, dims)
     routed = bp.routed.cache()
     routed.count()
     return bp, routed
@@ -114,8 +107,8 @@ def test_sink_counts_match_routed(run):
     assert total_from_counts == total_from_routed
 
 
-def test_observation_metrics(spark, transcripts, dims, mem_config):
-    bp = pipeline.build(spark, mem_config, df=transcripts, dims=dims)
+def test_observation_metrics(spark, transcripts, dims):
+    bp = pipeline.build(canonical_config(), transcripts, dims)
     bp.routed.write.format("noop").mode("overwrite").save()
     got = bp.observation.get
     assert got["rows_in"] == transcripts.count()
@@ -124,10 +117,43 @@ def test_observation_metrics(spark, transcripts, dims, mem_config):
 
 def test_unknown_filter_type_raises(spark, transcripts):
     cfg = PipelineConfig.from_dict(
-        {"input": [{"type": "memory"}], "filter": [{"type": "nope"}], "output": [{"name": "x"}]}
+        {
+            "input": [{"type": "table", "table": "transcripts"}],
+            "filter": [{"type": "nope"}],
+            "output": [{"name": "x"}],
+        }
     )
     with pytest.raises(ValueError, match="unknown filter type"):
-        pipeline.build(spark, cfg, df=transcripts)
+        pipeline.build(cfg, transcripts)
+
+
+_TABLE = {"type": "table", "table": "transcripts"}
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        {"input": [_TABLE], "output": []},
+        {"input": [_TABLE, {"type": "table", "table": "other"}], "output": [{"name": "x"}]},
+        {"input": [{"type": "memory"}], "output": [{"name": "x"}]},
+        {"input": [{"type": "table"}], "output": [{"name": "x"}]},
+    ],
+    ids=["empty-output", "two-tables", "memory-input", "missing-table-key"],
+)
+def test_config_rejects_what_the_pipeline_cannot_run(bad):
+    """A config the pipeline cannot run fails at load, before any Spark
+    job: run() reads one table's pending files and writes >= 1 sink."""
+    with pytest.raises(ValueError):
+        PipelineConfig.from_dict(bad)
+
+
+def test_config_load_rejects_malformed_yaml(tmp_path):
+    """A malformed YAML file raises ValueError like malformed JSON does, so
+    watch() skips the tick instead of dying."""
+    p = tmp_path / "pipeline.yaml"
+    p.write_text("input: [unclosed\n")
+    with pytest.raises(ValueError):
+        PipelineConfig.load(str(p))
 
 
 def test_json_prefilter_accepts_any_leading_whitespace(spark):
@@ -165,7 +191,7 @@ def test_manifest_forward_compat_extra_keys(tmp_path):
     _os.remove(p)
 
 
-def test_run_gc_orphans_and_run_id_safety(spark, tiny_pdf, tmp_path, dims, mem_config):
+def test_run_gc_orphans_and_run_id_safety(spark, tiny_pdf, tmp_path, dims):
     """Crash-recovery ledger (ADVICE r1): orphan runs/<id>/ dirs (written but
     never committed) are GC'd at the next run start; reusing a committed
     run_id over a different input set is refused instead of clobbering."""
@@ -200,6 +226,41 @@ def test_run_gc_orphans_and_run_id_safety(spark, tiny_pdf, tmp_path, dims, mem_c
         pipeline.run(spark, cfg, io, sink_root, run_id="r1", dims=dims)
     res2 = pipeline.run(spark, cfg, io, sink_root, run_id="r2", dims=dims)
     assert len(res2.input_files) == 1  # only the new file
+
+
+def test_run_over_zero_row_file_commits(spark, tiny_pdf, tmp_path, dims):
+    """A pending file with zero rows routes nothing: the run still writes
+    readable (empty) sinks and commits the file, so the next run is a
+    no-op instead of failing on the same file at every retry."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from logspark.sources import manifest as mf
+    from logspark.sources.tableio import ParquetIO
+
+    tbl_dir = tmp_path / "in" / "transcripts.parquet"
+    tbl_dir.mkdir(parents=True)
+    # the transcripts schema with no rows (an empty pandas frame would
+    # write its object columns as null-typed)
+    pq.write_table(
+        pa.Table.from_pandas(tiny_pdf, preserve_index=False).slice(0, 0),
+        tbl_dir / "part-0.parquet",
+        coerce_timestamps="us",
+        allow_truncated_timestamps=True,
+    )
+    io = ParquetIO(str(tmp_path / "in"))
+    sink_root = str(tmp_path / "out")
+
+    res = pipeline.run(spark, canonical_config(), io, sink_root, run_id="r1", dims=dims)
+    assert res.sink_rows == {}
+    assert res.metrics == {"rows_in": 0.0, "parse_failures": 0.0}
+    assert len(res.input_files) == 1
+    assert [r.run_id for r in mf.load_manifest(sink_root).runs] == ["r1"]
+    counts = spark.read.parquet(str(tmp_path / "out" / "runs" / "r1" / "sink_counts"))
+    assert counts.count() == 0
+
+    again = pipeline.run(spark, canonical_config(), io, sink_root, run_id="r2", dims=dims)
+    assert again.input_files == [] and again.sink_rows == {}
 
 
 def test_writer_lock_blocks_concurrent_and_releases_on_death(spark, tiny_pdf, tmp_path, dims):
@@ -407,10 +468,17 @@ def test_watch_mode_hot_reloads_config(spark, tiny_pdf, tmp_path, dims):
                         interval_s=0, max_iterations=1)
     assert r4 == []
     cfg3["input"] = good_input
-    cfg_path.write_text(_json.dumps(cfg3))
     tiny_pdf.iloc[700:900].to_parquet(
         tbl / "p2.parquet", coerce_timestamps="us", allow_truncated_timestamps=True
     )
+    # a config with no sink is skipped the same way, with p2 left pending
+    good_output = cfg3["output"]
+    cfg3["output"] = []
+    cfg_path.write_text(_json.dumps(cfg3))
+    assert pipeline.watch(spark, str(cfg_path), io, sink_root, dims=dims,
+                          interval_s=0, max_iterations=1) == []
+    cfg3["output"] = good_output
+    cfg_path.write_text(_json.dumps(cfg3))
     r5 = pipeline.watch(spark, str(cfg_path), io, sink_root, dims=dims,
                         interval_s=0, max_iterations=1)
     assert len(r5) == 1 and len(r5[0].input_files) == 1

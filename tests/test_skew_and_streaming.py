@@ -267,6 +267,25 @@ def test_streaming_batch_replay_is_idempotent(spark, tmp_path, dims):
     assert sorted(map(tuple, counts_again.collect())) == snap_counts
 
 
+def test_streaming_empty_batch_adds_nothing(spark, tmp_path, dims):
+    """An empty micro-batch writes readable empty sinks: the processor
+    succeeds and the routed and sink_counts totals are unchanged."""
+    from logspark.streaming import make_batch_processor
+
+    df = spark.createDataFrame(synth_transcripts(np.arange(600), 600))
+    sink_root = str(tmp_path / "out")
+    process = make_batch_processor(canonical_config(), sink_root, dims)
+
+    process(df, 0)
+    n_routed = spark.read.parquet(f"{sink_root}/routed").count()
+    n_counts = spark.read.parquet(f"{sink_root}/sink_counts").count()
+    assert n_routed > 0 and n_counts > 0
+
+    process(df.limit(0), 1)
+    assert spark.read.parquet(f"{sink_root}/routed").count() == n_routed
+    assert spark.read.parquet(f"{sink_root}/sink_counts").count() == n_counts
+
+
 def test_manifest_roundtrip(tmp_path):
     root = str(tmp_path)
     m = mf.load_manifest(root)
