@@ -15,7 +15,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import uuid
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -26,7 +25,10 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument("--input-dir", required=True, help="directory of input tables")
     ap.add_argument("--sink-root", required=True, help="output root (sinks + manifest)")
-    ap.add_argument("--run-id", default=None)
+    ap.add_argument(
+        "--run-id", default=None,
+        help="default: 'w-' + md5 of the pending files, so a retry reuses the id",
+    )
     ap.add_argument("--master", default=None)
     ap.add_argument("--full", action="store_true", help="ignore manifest; process everything")
     ap.add_argument("--stream", action="store_true", help="continuous mode (foreachBatch)")
@@ -107,7 +109,7 @@ def main(argv: list[str] | None = None) -> int:
         cfg,
         ParquetIO(args.input_dir),
         args.sink_root,
-        run_id=args.run_id or f"run-{uuid.uuid4().hex[:8]}",
+        run_id=args.run_id,
         dims=dims,
         incremental=not args.full,
     )

@@ -11,14 +11,18 @@ sections for the pinned broadcast-join and per-sink-counts stages) so
 reference-style configs and test fixtures drop in unchanged. The input
 section names exactly one table, `[{"type": "table", "table": <name>}]`:
 the table a batch run reads its manifest-pending files from and a stream
-tails. The output section names at least one sink. Configs that break
-either rule raise ValueError at load, before any Spark job runs.
+tails. The output section names at least one sink. Every `when`
+predicate (sinks, drop filters) uses only the documented clause keys of
+functions/predicates.py. Configs that break any of these rules raise
+ValueError at load, before any Spark job runs.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
+
+from logspark.functions.predicates import check_predicate
 
 
 @dataclass
@@ -29,8 +33,8 @@ class PipelineConfig:
     output: list[dict] = field(default_factory=list)
     aggregate: dict = field(default_factory=lambda: {"bucket": "hour"})
     # write-layout knobs: {"files_per_sink": k} caps the routed write at
-    # ~k files per sink (see plans/pipeline.run for the 100 TB file-count
-    # math); default unset = shuffle-free dynamic-partition write
+    # ~k files per sink (see plans/pipeline.write_sinks for the 100 TB
+    # file-count math); default unset = shuffle-free dynamic-partition write
     write: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
@@ -46,6 +50,8 @@ class PipelineConfig:
                 raise ValueError(f"filter entry missing 'type': {e}")
         if not self.output:
             raise ValueError("output must name at least one sink")
+        for e in self.filter + self.output:
+            check_predicate(e.get("when"))
         names = [o.get("name") for o in self.output]
         if any(n is None for n in names):
             raise ValueError("every output needs a 'name'")

@@ -21,7 +21,24 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+PREDICATE_KEYS = frozenset(
+    {"tags_include", "tags_any", "tags_exclude", "field_equals", "field_in", "text_rlike", "expr"}
+)
+
+
+def check_predicate(cond: dict | None) -> None:
+    """Raise ValueError on a clause key outside the documented set: a
+    misspelt key (e.g. `tag_include`) would otherwise add no clause, so
+    the predicate would match every row."""
+    unknown = set(cond or ()) - PREDICATE_KEYS
+    if unknown:
+        raise ValueError(
+            f"unknown predicate keys {sorted(unknown)}; expected any of {sorted(PREDICATE_KEYS)}"
+        )
+
+
 def compile_predicate(cond: dict | None, tags_col: str = "tags") -> Column:
+    check_predicate(cond)
     if not cond:
         return F.lit(True)
     clauses: list[Column] = []

@@ -4,26 +4,31 @@ dedup family).
 
 Two agents share one crash-safe tick (`_tick`): `dedup_tick` (MinHash
 signatures in `sink_root/sigstore`) and `embed_dedup_tick` (IVF cell
-rows in the cell-partitioned `sink_root/vstore`). Each tick holds the
-sink_root's WriterLock, so a concurrent ad-hoc tick cannot race the
-manifest commit, and:
+rows in the cell-partitioned `sink_root/vstore`). A tick is one
+`pipeline.locked_run` step, the same locked step `pipeline.run` takes,
+so a concurrent ad-hoc tick or run cannot race the manifest commit:
 
-  1. list the table and take the manifest-pending files (same resume
-     seam as the parse→route pipeline); the run id is the agent's prefix
-     plus the md5 of the pending set, so a retry over the same files
-     overwrites the crashed tick's output;
-  2. split the pending files by the store's provenance
+  1. locked_run lists the table and takes the manifest-pending files;
+     the run id is the agent's prefix plus the md5 of the pending set,
+     so a retry over the same files overwrites the crashed tick's
+     output, and uncommitted runs/<id> directories are GC'd;
+  2. the step splits the pending files by the store's provenance
      (`committed_files()`): files already in the store (a crash after its
      commit) are replayed against it with run_id None and no second
      append; fresh files go through the incremental operator under the
      run id, which appends them to the store (the store commit) before
      the pairs are computed;
-  3. write the union of both pair sets under runs/<run_id>/pairs, counted
-     by an `Observation` on that write, then the manifest commit marks
-     the files processed (write-then-commit, like run()).
+  3. the step writes the union of both pair sets under
+     runs/<run_id>/pairs, counted by an `Observation` on that write, and
+     returns the RunRecord (metrics: `n_pairs`, `replayed_files`) that
+     locked_run commits to the manifest;
+  4. still under the lock, the store is compacted once it holds
+     `COMPACT_EVERY` runs, so a cron-driven agent compacts too.
 
-The crash sites are therefore one set for both agents: after the store
-append, after the pairs write, before the manifest commit.
+The crash sites are therefore one set for both agents and `run()`: after
+the store append, after the pairs write, before the manifest commit.
+`watch_dedup`/`watch_embed_dedup` run the tick on `pipeline.poll`, the
+loop `pipeline.watch` uses.
 
 Per agent: the MinHash tick verifies candidates against the texts of
 `pending ∪ ingested` files only (its batch reads reuse that corpus read's
@@ -40,7 +45,6 @@ other values against the same persistent store would break it.
 
 from __future__ import annotations
 
-import hashlib
 import os
 from typing import Callable
 
@@ -48,9 +52,16 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from logspark.operators.dedup import SignatureStore, incremental_near_dup_pairs
-from logspark.plans.pipeline import WriterLock
+from logspark.plans.pipeline import WriterLock, locked_run, poll
 from logspark.sources import manifest as mf
 from logspark.sources.tableio import ParquetIO
+
+# A tick folds the store's run directories into one once it holds this
+# many runs (`SignatureStore.compact`, the small-files defense: a year of
+# hourly ticks is ~10k directories whose listings start to dominate every
+# load). Compaction keeps the per-file provenance the replay key needs.
+COMPACT_EVERY = 64
+
 
 def _tick(
     spark: SparkSession,
@@ -61,20 +72,17 @@ def _tick(
     store_dir: str,
     prepare: Callable[[SignatureStore, list[str], list[str], set[str]], tuple[Callable, dict]],
 ) -> dict:
-    """The agent tick protocol both agents share (module docstring steps
-    1–3). `prepare(store, all_files, pending, ingested)` builds the
-    agent's per-tick inputs and returns its pairs function
-    `(files, run_id) -> pairs` (run_id None = replay) plus extra result
-    keys. Returns {run_id, new_files, n_pairs, replayed_files,
-    ...extra}; run_id is None when nothing is pending."""
-    with WriterLock(sink_root):
-        all_files = io.input_files(spark, table)
-        pending = mf.pending_files(all_files, mf.load_manifest(sink_root))
-        if not pending:
-            return {"run_id": None, "new_files": [], "n_pairs": 0}
-        rid = prefix + hashlib.md5("\n".join(sorted(pending)).encode()).hexdigest()[:12]
-        store = SignatureStore(os.path.join(sink_root, store_dir))
+    """The agent tick both agents share: one `locked_run` step (module
+    docstring steps 1–3), then store compaction under the same lock.
+    `prepare(store, listed, pending, ingested)` builds the agent's per-tick
+    inputs and returns its pairs function `(files, run_id) -> pairs`
+    (run_id None = replay) plus extra result keys. Returns {run_id,
+    new_files, n_pairs, replayed_files, ...extra}; run_id is None when
+    nothing is pending."""
+    store = SignatureStore(os.path.join(sink_root, store_dir))
+    out: dict = {}
 
+    def step(pending: list[str], rid: str, listed: list[str]) -> mf.RunRecord:
         # Crash replay is keyed PER FILE, not on the pending-set hash
         # (ADVICE r4 medium): a tick that died between the store commit and
         # the manifest commit leaves its files in store.committed_files()
@@ -86,19 +94,25 @@ def _tick(
         ingested = store.committed_files()
         already = sorted(f for f in pending if f in ingested)
         fresh = sorted(f for f in pending if f not in ingested)
-        pairs_of, extra = prepare(store, all_files, pending, ingested)
+        pairs_of, extra = prepare(store, listed, pending, ingested)
         parts = [pairs_of(already, None)] if already else []
         if fresh:
             parts.append(pairs_of(fresh, rid))
         n_pairs = _write_pairs(parts, os.path.join(sink_root, "runs", rid, "pairs"))
-        mf.commit_run(sink_root, mf.RunRecord(run_id=rid, input_files=pending))
-        return {
-            "run_id": rid,
-            "new_files": pending,
-            "n_pairs": n_pairs,
-            "replayed_files": already,
-            **extra,
-        }
+        out.update(n_pairs=n_pairs, replayed_files=already, **extra)
+        return mf.RunRecord(
+            run_id=rid,
+            input_files=pending,
+            metrics={"n_pairs": float(n_pairs), "replayed_files": float(len(already))},
+        )
+
+    with WriterLock(sink_root):
+        rec = locked_run(spark, io, table, sink_root, None, step, prefix)
+        if rec is None:
+            return {"run_id": None, "new_files": [], "n_pairs": 0}
+        if len(store.committed_runs()) >= COMPACT_EVERY:
+            store.compact(spark)
+    return {"run_id": rec.run_id, "new_files": rec.input_files, **out}
 
 
 def _write_pairs(parts: list[DataFrame], out: str) -> int:
@@ -124,14 +138,14 @@ def dedup_tick(
     first three, run_id None, when nothing is pending). Safe to call from
     a watch()-style loop."""
 
-    def prepare(store, all_files, pending, ingested):
+    def prepare(store, listed, pending, ingested):
         # Verify-stage texts: only files that can hold candidate-touched
         # docs — the pending set plus every store-member file (every store
         # run records its input files). Files that land in the table
         # concurrently (after the listing) are never scanned;
         # io.read(table) at action time would be.
         needed = set(pending) | ingested
-        corpus = io.read_files(spark, table, sorted(needed & set(all_files)))
+        corpus = io.read_files(spark, table, sorted(needed & set(listed)))
 
         def pairs_of(files: list[str], run_id: str | None) -> DataFrame:
             # the batch files are a subset of the corpus files: read them
@@ -187,7 +201,7 @@ def embed_dedup_tick(
     pinned centroids (the incremental guarantee)."""
     from logspark.operators.similarity import incremental_ivf_near_dups
 
-    def prepare(store, all_files, pending, ingested):
+    def prepare(store, listed, pending, ingested):
         cents = _pin_centroids(spark, sink_root, lambda: io.read_files(spark, table, pending))
 
         def pairs_of(files: list[str], run_id: str | None) -> DataFrame:
@@ -201,36 +215,6 @@ def embed_dedup_tick(
     return _tick(spark, io, table, sink_root, "e-", "vstore", prepare)
 
 
-def _watch(
-    tick,
-    store_dir: str,
-    spark: SparkSession,
-    io: ParquetIO,
-    table: str,
-    sink_root: str,
-    interval_s: float,
-    max_iterations: int | None,
-    compact_every: int | None,
-    threshold: float,
-) -> list[dict]:
-    """The shared agent loop: tick → compact the store under the
-    WriterLock once it holds `compact_every` runs → sleep."""
-    import time
-
-    results: list[dict] = []
-    i = 0
-    while max_iterations is None or i < max_iterations:
-        results.append(tick(spark, io, table, sink_root, threshold=threshold))
-        store = SignatureStore(os.path.join(sink_root, store_dir))
-        if compact_every is not None and len(store.committed_runs()) >= compact_every:
-            with WriterLock(sink_root):
-                store.compact(spark)
-        i += 1
-        if max_iterations is None or i < max_iterations:
-            time.sleep(interval_s)
-    return results
-
-
 def watch_dedup(
     spark: SparkSession,
     io: ParquetIO,
@@ -238,24 +222,16 @@ def watch_dedup(
     sink_root: str,
     interval_s: float = 30.0,
     max_iterations: int | None = None,
-    compact_every: int | None = 64,
     threshold: float = 0.5,
 ) -> list[dict]:
     """Continuous agent loop around `dedup_tick` — the dedup analogue of
-    plans.pipeline.watch: poll for new input files every `interval_s`,
-    ingest + pair + commit per tick. `max_iterations` bounds the loop for
-    tests; None tails forever like the reference agent.
-
-    `compact_every`: once the SignatureStore accumulates that many run
-    directories, fold them into one (`SignatureStore.compact` — the
-    small-files defense; a year of hourly ticks is ~10k directories whose
-    listings start to dominate every load). Compaction preserves the
-    per-file ingestion provenance the crash-replay key depends on, and
-    runs under the same WriterLock as ticks so it cannot race a commit.
-    None disables. `threshold` is each tick's Jaccard threshold."""
-    return _watch(
-        dedup_tick, "sigstore", spark, io, table, sink_root,
-        interval_s, max_iterations, compact_every, threshold,
+    plans.pipeline.watch, on the same `poll` loop: poll for new input
+    files every `interval_s`, ingest + pair + commit (+ compact) per tick.
+    `max_iterations` bounds the loop for tests; None tails forever like
+    the reference agent. `threshold` is each tick's Jaccard threshold."""
+    return poll(
+        lambda: dedup_tick(spark, io, table, sink_root, threshold=threshold),
+        interval_s, max_iterations,
     )
 
 
@@ -266,17 +242,15 @@ def watch_embed_dedup(
     sink_root: str,
     interval_s: float = 30.0,
     max_iterations: int | None = None,
-    compact_every: int | None = 64,
     threshold: float = 0.95,
 ) -> list[dict]:
     """Continuous loop around `embed_dedup_tick` — same contract as
-    `watch_dedup`, over the cell-partitioned vector store. Compaction
-    preserves the partitioned layout (store index carries partition_by)
-    and the per-file provenance, both under the writer lock. `threshold`
-    is each tick's cosine threshold."""
-    return _watch(
-        embed_dedup_tick, "vstore", spark, io, table, sink_root,
-        interval_s, max_iterations, compact_every, threshold,
+    `watch_dedup`, over the cell-partitioned vector store (compaction
+    keeps its partitioned layout). `threshold` is each tick's cosine
+    threshold."""
+    return poll(
+        lambda: embed_dedup_tick(spark, io, table, sink_root, threshold=threshold),
+        interval_s, max_iterations,
     )
 
 

@@ -12,6 +12,15 @@ feeds it each micro-batch and the scaling bench a whole table. All three
 write through write_sinks(), so a run, a micro-batch and a bench job
 execute the same plans.
 
+Resume runs share one locked step with the dedup agents' ticks
+(plans/dedup_agent.py): locked_run() takes the sink_root's WriterLock,
+lists the table and loads the manifest once each, names the run (given
+id, else prefix + md5 of the pending files), refuses a committed id over
+a different input set, GCs uncommitted runs/<id> directories, calls the
+caller's step to write under runs/<run_id> and commits the RunRecord it
+returns. run() is one such step; watch() and the agents' watch loops
+share one poll() loop.
+
 Scale notes (the 100 TB story):
 - Everything before the write/agg is a single narrow stage: parquet/Iceberg
   scan → Arrow-batched grok UDF → native patch/json/template exprs →
@@ -27,8 +36,13 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import os
+import shutil
+import time
 from dataclasses import dataclass, field as dc_field
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +55,8 @@ from logspark.operators.router import route
 from logspark.sources import manifest as mf
 from logspark.sources.tableio import ParquetIO
 
+T = TypeVar("T")
+
 
 @dataclass
 class BuiltPipeline:
@@ -52,7 +68,7 @@ class BuiltPipeline:
 
 @dataclass
 class RunResult:
-    run_id: str
+    run_id: str | None
     sink_rows: dict[str, int] = dc_field(default_factory=dict)
     metrics: dict[str, float] = dc_field(default_factory=dict)
     input_files: list[str] = dc_field(default_factory=list)
@@ -131,13 +147,14 @@ def write_sinks(
 class WriterLock:
     """Single-writer lock over a sink_root.
 
-    The orphan-run GC in `run()` deletes every runs/<id> directory absent
-    from the manifest — correct for crashed-run debris, but a CONCURRENT
-    in-flight run over the same sink_root (watch agent + ad-hoc run, or two
-    watchers) has not committed yet and would be reaped mid-write: silent
-    data loss (ADVICE r2). logspark therefore enforces one writer per
-    sink_root: `run()` acquires this lock for the write+GC+commit span and
-    REFUSES (clear error, no deletion) if another live process holds it.
+    The orphan-run GC in `locked_run()` deletes every runs/<id> directory
+    absent from the manifest — correct for crashed-run debris, but a
+    CONCURRENT in-flight run over the same sink_root (watch agent + ad-hoc
+    run, or two watchers) has not committed yet and would be reaped
+    mid-write: silent data loss (ADVICE r2). logspark therefore enforces one
+    writer per sink_root: `locked_run()` acquires this lock for the
+    listing+GC+write+commit span and REFUSES (clear error, no deletion) if
+    another live process holds it.
 
     Mechanics (ADVICE r3 hardening): the lock IS an `fcntl.flock` held on a
     persistently-open fd — not the file's existence. The kernel releases a
@@ -153,8 +170,9 @@ class WriterLock:
     cluster deployment swaps this seam for a lease in the metastore/catalog
     (Iceberg commits give this for free)."""
 
-    # path → holding instance in THIS process (re-entrant acquire: nested
-    # run() under a watch() tick must not deadlock on its own flock)
+    # path → holding instance in THIS process (re-entrant acquire: a dedup
+    # tick compacting under the lock its locked_run() step also takes must
+    # not deadlock on its own flock)
     _held: dict[str, "WriterLock"] = {}
 
     def __init__(self, sink_root: str):
@@ -219,6 +237,79 @@ class WriterLock:
                 self.acquired = False
 
 
+def locked_run(
+    spark: SparkSession,
+    io: ParquetIO,
+    table: str,
+    sink_root: str,
+    run_id: str | None,
+    step: Callable[[list[str], str, list[str]], mf.RunRecord],
+    prefix: str,
+    incremental: bool = True,
+) -> mf.RunRecord | None:
+    """The one crash-safe run protocol behind `run()` and both dedup
+    ticks. Under the sink_root's WriterLock it lists `table` and loads the
+    manifest once each, takes the pending files (all files when not
+    `incremental`), names the run (`run_id`, else `prefix` + md5 of the
+    file set, so a crashed run's retry over the same files reuses its id
+    and overwrites its output), GCs uncommitted runs/<id> directories,
+    calls `step(files, run_id, listed)` to write under runs/<run_id> and
+    commits the RunRecord it returns. Returns that record, or None when
+    nothing is pending.
+
+    The fault sites are therefore one set for every caller: inside
+    `step` (after any of its writes) and before the manifest commit."""
+    with WriterLock(sink_root):
+        listed = io.input_files(spark, table)
+        m = mf.load_manifest(sink_root)
+        files = mf.pending_files(listed, m) if incremental else listed
+        if not files:
+            return None  # nothing new — resume with no work
+        run_id = run_id or prefix + hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()[:12]
+
+        # A run_id already committed with a DIFFERENT input set must not be
+        # silently replaced: commit_run would drop the old record's
+        # input_files from the manifest and the overwrite would clobber its
+        # output.
+        prior = next((r for r in m.runs if r.run_id == run_id), None)
+        if prior is not None and set(prior.input_files) != set(files):
+            raise ValueError(
+                f"run_id {run_id!r} already committed over a different input set; "
+                "choose a fresh run_id (crashed-run retries reuse the SAME id)"
+            )
+        # GC orphan run directories: a crash after a write but before the
+        # manifest commit leaves runs/<id>/ with no manifest record; a retry
+        # under a NEW run_id would otherwise leave those rows double-counted
+        # on any recursive read of runs/.
+        runs_dir = os.path.join(sink_root, "runs")
+        committed = {r.run_id for r in m.runs}
+        if os.path.isdir(runs_dir):
+            for d in os.listdir(runs_dir):
+                if d not in committed and d != run_id:
+                    shutil.rmtree(os.path.join(runs_dir, d), ignore_errors=True)
+
+        record = step(files, run_id, listed)
+        mf.commit_run(sink_root, record)
+        return record
+
+
+def poll(tick: Callable[[], T | None], interval_s: float, max_iterations: int | None) -> list[T]:
+    """The agent loop shared by `watch` and the dedup agents: call `tick`,
+    keep its non-None results, sleep `interval_s` between ticks.
+    `max_iterations` bounds the loop for tests; None tails forever like
+    the reference agent."""
+    results: list[T] = []
+    i = 0
+    while max_iterations is None or i < max_iterations:
+        r = tick()
+        if r is not None:
+            results.append(r)
+        i += 1
+        if max_iterations is None or i < max_iterations:
+            time.sleep(interval_s)
+    return results
+
+
 def watch(
     spark: SparkSession,
     config_path: str,
@@ -230,20 +321,14 @@ def watch(
 ) -> list[RunResult]:
     """Continuous batch-agent mode — the Spark-native analogue of the
     reference's long-running agent with etcd-backed config reload
-    (SURVEY.md §3.1 entry 3): every iteration RE-LOADS the config file
-    (edits take effect on the next tick, no restart), runs one incremental
-    batch over manifest-pending input files, and sleeps. Each iteration's
-    run_id is derived from the pending file set, so a crash mid-iteration
-    retries under the SAME id (idempotent overwrite) instead of orphaning
-    a directory. `max_iterations` bounds the loop for tests; None tails
-    forever like the reference agent."""
-    import hashlib
-    import logging
-    import time
+    (SURVEY.md §3.1 entry 3): every tick RE-LOADS the config file (edits
+    take effect on the next tick, no restart) and runs one incremental
+    `run(run_id=None)`, whose id is derived from the pending file set, so
+    a crash mid-tick retries under the SAME id (idempotent overwrite)
+    instead of orphaning a directory. Returns the results of the ticks
+    that had pending files."""
 
-    results: list[RunResult] = []
-    i = 0
-    while max_iterations is None or i < max_iterations:
+    def tick() -> RunResult | None:
         try:
             cfg = PipelineConfig.load(config_path)  # hot reload, every tick
         except ValueError as e:
@@ -257,16 +342,11 @@ def watch(
                 config_path,
                 e,
             )
-        else:
-            table = cfg.input[0]["table"]
-            pending = mf.pending_files(io.input_files(spark, table), mf.load_manifest(sink_root))
-            if pending:
-                rid = "w-" + hashlib.md5("\n".join(sorted(pending)).encode()).hexdigest()[:12]
-                results.append(run(spark, cfg, io, sink_root, run_id=rid, dims=dims))
-        i += 1
-        if max_iterations is None or i < max_iterations:
-            time.sleep(interval_s)
-    return results
+            return None
+        res = run(spark, cfg, io, sink_root, run_id=None, dims=dims)
+        return res if res.input_files else None
+
+    return poll(tick, interval_s, max_iterations)
 
 
 def run(
@@ -274,76 +354,30 @@ def run(
     cfg: PipelineConfig,
     io: ParquetIO,
     sink_root: str,
-    run_id: str = "r0",
+    run_id: str | None = None,
     dims: dict[str, DataFrame] | None = None,
     incremental: bool = True,
 ) -> RunResult:
-    """Execute: resume-aware read → routed write (partitioned by sink) →
-    counts write → manifest commit with lineage + metrics.
-
-    Holds the sink_root WriterLock for the whole manifest-read → GC →
-    write → commit span: the orphan-run GC is only safe when no other
-    writer is in flight (single-writer invariant, see WriterLock)."""
-    with WriterLock(sink_root):
-        return _run_locked(spark, cfg, io, sink_root, run_id, dims, incremental)
-
-
-def _run_locked(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    io: ParquetIO,
-    sink_root: str,
-    run_id: str,
-    dims: dict[str, DataFrame] | None,
-    incremental: bool,
-) -> RunResult:
+    """One `locked_run` step: resume-aware read → routed write (partitioned
+    by sink) → counts write → manifest commit with lineage + metrics.
+    `run_id` None names the run "w-" + md5 of its pending files."""
     table = cfg.input[0]["table"]
-    all_files = io.input_files(spark, table)
-    m = mf.load_manifest(sink_root)
-    files = mf.pending_files(all_files, m) if incremental else all_files
-    result = RunResult(run_id=run_id, input_files=files)
-    if not files:
-        return result  # nothing new — resume with no work
 
-    # A run_id already committed with a DIFFERENT input set must not be
-    # silently replaced: commit_run would drop the old record's input_files
-    # from the manifest and the overwrite would clobber its sink data.
-    prior = next((r for r in m.runs if r.run_id == run_id), None)
-    if prior is not None and set(prior.input_files) != set(files):
-        raise ValueError(
-            f"run_id {run_id!r} already committed over a different input set; "
-            "choose a fresh run_id (crashed-run retries reuse the SAME id)"
-        )
-    # GC orphan run directories: a crash after the routed write but before
-    # manifest commit leaves runs/<id>/ with no manifest record; a retry
-    # under a NEW run_id would otherwise leave those rows double-counted on
-    # any recursive read of runs/.
-    runs_dir = os.path.join(sink_root, "runs")
-    committed = {r.run_id for r in m.runs}
-    if os.path.isdir(runs_dir):
-        import shutil
-
-        for d in os.listdir(runs_dir):
-            if d not in committed and d != run_id:
-                shutil.rmtree(os.path.join(runs_dir, d), ignore_errors=True)
-
-    bp = build(cfg, io.read_files(spark, table, files), dims)
-    routed_path = os.path.join(sink_root, "runs", run_id, "routed")
-    counts_path = os.path.join(sink_root, "runs", run_id, "sink_counts")
-    result.sink_rows = write_sinks(bp, cfg, routed_path, counts_path)
-    # an all-empty input observes sum() over no rows as None
-    result.metrics.update({k: float(v or 0) for k, v in bp.observation.get.items()})
-
-    mf.commit_run(
-        sink_root,
-        mf.RunRecord(
-            run_id=run_id,
+    def step(files: list[str], rid: str, listed: list[str]) -> mf.RunRecord:
+        bp = build(cfg, io.read_files(spark, table, files), dims)
+        routed_path = os.path.join(sink_root, "runs", rid, "routed")
+        counts_path = os.path.join(sink_root, "runs", rid, "sink_counts")
+        sink_rows = write_sinks(bp, cfg, routed_path, counts_path)
+        return mf.RunRecord(
+            run_id=rid,
             input_files=files,
-            sink_counts=result.sink_rows,
-            metrics=result.metrics,
-            partition_lineage={
-                s: os.path.join(routed_path, f"sink={s}") for s in result.sink_rows
-            },
-        ),
-    )
-    return result
+            sink_counts=sink_rows,
+            # an all-empty input observes sum() over no rows as None
+            metrics={k: float(v or 0) for k, v in bp.observation.get.items()},
+            partition_lineage={s: os.path.join(routed_path, f"sink={s}") for s in sink_rows},
+        )
+
+    rec = locked_run(spark, io, table, sink_root, run_id, step, "w-", incremental)
+    if rec is None:
+        return RunResult(run_id=run_id)
+    return RunResult(rec.run_id, rec.sink_counts, rec.metrics, rec.input_files)

@@ -26,7 +26,7 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.files.maxPartitionBytes": "32m",
     # guard rail for dynamic-partition writes: bound the worst-case file
-    # SIZE (file COUNT is bounded by write.files_per_sink, pipeline.run)
+    # SIZE (file COUNT is bounded by write.files_per_sink, pipeline.write_sinks)
     "spark.sql.files.maxRecordsPerFile": "5000000",
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.sql.session.timeZone": "UTC",

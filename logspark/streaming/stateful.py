@@ -146,43 +146,33 @@ NEAR_DUP_OUT_DDL = "a bigint, b bigint"
 NEAR_DUP_STATE_DDL = "ids array<bigint>, capped boolean"
 
 EMB_NEAR_DUP_OUT_DDL = "a bigint, b bigint, sim double"
-EMB_NEAR_DUP_STATE_DDL = (
-    "ids array<bigint>, vecs array<array<double>>, capped boolean"
-)
+EMB_NEAR_DUP_STATE_DDL = "ids array<bigint>, vecs array<array<double>>"
 
 
-def _make_emb_near_dup_fn(threshold: float, max_bucket: int | None):
+def _make_emb_near_dup_fn(threshold: float):
     def _fn(key, pdfs, state):
         """One IVF cell per call. Unlike the MinHash variant (candidates
         only — the stored doc's TEXT has left the stream), embedding state
         can carry the stored VECTORS, so pairs are VERIFIED in-stream:
         emit (a, b, sim) with sim ≥ threshold, new×stored + new×new, and
-        append the new vectors. max_bucket poisons degenerate cells (state
-        collapses to a boolean) exactly like the MinHash path."""
+        append the new vectors."""
         import numpy as np
         import pandas as pd
 
         from logspark.functions.rounding import round_half_up6
 
         if state.exists:
-            ids, vecs, capped = state.get
+            ids, vecs = state.get
             ids = list(ids)
             vecs = [list(v) for v in vecs]
         else:
-            ids, vecs, capped = [], [], False
-        if capped:
-            for _ in pdfs:
-                pass
-            return iter(())
+            ids, vecs = [], []
         new = pd.concat(list(pdfs), ignore_index=True)
         seen = set(ids)
         fresh = new.drop_duplicates("vec_id")
         fresh = fresh[~fresh["vec_id"].isin(seen)].sort_values("vec_id")
         new_ids = [int(i) for i in fresh["vec_id"]]
         new_vecs = [list(map(float, v)) for v in fresh["embedding"]]
-        if max_bucket is not None and len(ids) + len(new_ids) > max_bucket:
-            state.update(([], [], True))
-            return iter(())
         out = []
         if new_ids:
             N = np.array(new_vecs, dtype=np.float64)
@@ -211,7 +201,7 @@ def _make_emb_near_dup_fn(threshold: float, max_bucket: int | None):
                     s = round_half_up6(float(S2[i, j]))
                     if s >= threshold:
                         out.append((new_ids[i], new_ids[j], s))
-        state.update((ids + new_ids, vecs + new_vecs, False))
+        state.update((ids + new_ids, vecs + new_vecs))
         if not out:
             return iter(())
         return iter([pd.DataFrame(out, columns=["a", "b", "sim"])])
@@ -221,77 +211,40 @@ def _make_emb_near_dup_fn(threshold: float, max_bucket: int | None):
 
 def streaming_embedding_near_dups(
     stream: DataFrame,
-    centroids,
+    centroids: DataFrame,
     threshold: float = 0.95,
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Continuous embedding near-dup detection — the streaming form of the
     batch DEFAULT (multi-probe IVF, similarity.ivf_near_dups): each
-    arriving vector is assigned to its `nprobe` nearest cells against a
-    FIXED centroid table (train offline with train_ivf_centroids; a
-    drifting assignment would split buckets across time), and per-cell
-    state carries the cell's (id, vector) members, so emitted pairs are
-    already cosine-VERIFIED at `threshold`. A pair co-occurring in both
-    shared cells appears once per cell with an identical rounded sim —
-    distinct downstream, mirroring the batch path's distinct.
-
-    `centroids` is a batch DataFrame (cell, cvec) or a list of (cell,
-    vec) tuples. State per cell is O(members x dim) — bound it with
-    max_bucket (poisoned cells stop emitting, state drops to a boolean);
-    at production k (thousands of cells) buckets are small by
-    construction."""
+    arriving vector is assigned to its `nprobe` nearest cells by the batch
+    path's own fold-exact kernel (`similarity.ivf_assign_multi`, so cells
+    match bit for bit) against a FIXED (cell, cvec) centroid table (train
+    offline with train_ivf_centroids; a drifting assignment would split
+    buckets across time), and per-cell state carries the cell's (id,
+    vector) members, so emitted pairs are already cosine-VERIFIED at
+    `threshold`. A pair co-occurring in both shared cells appears once per
+    cell with an identical rounded sim — distinct downstream, mirroring the
+    batch path's distinct. State per cell is O(members x dim); at
+    production k (thousands of cells) cells are small by construction."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if hasattr(centroids, "collect"):
-        rows = centroids.orderBy("cell").collect()
-        cents = [(int(r["cell"]), list(map(float, r["cvec"]))) for r in rows]
-    else:
-        cents = [(int(c), list(map(float, v))) for c, v in centroids]
-    if not cents:
+    from logspark.operators.similarity import ivf_assign_multi
+
+    if centroids.isEmpty():
         raise ValueError("streaming_embedding_near_dups: empty centroid table")
-    import numpy as np
-
-    C = np.array([v for _, v in cents], dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
-    cell_ids = [c for c, _ in cents]
-    npb = min(nprobe, len(cents))
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-            S = Vn @ Cn.T
-            out_id, out_vec, out_cell = [], [], []
-            for i in range(len(pdf)):
-                # top-nprobe cells, ties to the lowest cell id — mirrors
-                # ivf_assign_multi's descending (sim, -cell) struct order
-                order = sorted(range(len(cell_ids)), key=lambda j: (-S[i, j], cell_ids[j]))[:npb]
-                vid = int(pdf["vec_id"].iloc[i])
-                vec = list(map(float, pdf["embedding"].iloc[i]))
-                for j in order:
-                    out_id.append(vid)
-                    out_vec.append(vec)
-                    out_cell.append(int(cell_ids[j]))
-            yield pd.DataFrame(
-                {"cell": pd.Series(out_cell, dtype="int32"),
-                 "vec_id": pd.Series(out_id, dtype="int64"),
-                 "embedding": pd.Series(out_vec, dtype="object")}
-            )
-
-    keyed = stream.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("embedding"),
-    ).mapInPandas(assign, "cell int, vec_id bigint, embedding array<double>")
+    keyed = ivf_assign_multi(
+        stream.select(
+            F.col(id_col).cast("long").alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("embedding"),
+        ),
+        centroids,
+        nprobe,
+    )
     return keyed.groupBy("cell").applyInPandasWithState(
-        _make_emb_near_dup_fn(threshold, max_bucket),
+        _make_emb_near_dup_fn(threshold),
         outputStructType=EMB_NEAR_DUP_OUT_DDL,
         stateStructType=EMB_NEAR_DUP_STATE_DDL,
         outputMode="append",

@@ -137,12 +137,23 @@ _TABLE = {"type": "table", "table": "transcripts"}
         {"input": [_TABLE, {"type": "table", "table": "other"}], "output": [{"name": "x"}]},
         {"input": [{"type": "memory"}], "output": [{"name": "x"}]},
         {"input": [{"type": "table"}], "output": [{"name": "x"}]},
+        {"input": [_TABLE], "output": [{"name": "x", "when": {"tag_include": ["parsed"]}}]},
+        {
+            "input": [_TABLE],
+            "filter": [{"type": "drop", "when": {"field_equal": {"status": "err"}}}],
+            "output": [{"name": "x"}],
+        },
     ],
-    ids=["empty-output", "two-tables", "memory-input", "missing-table-key"],
+    ids=[
+        "empty-output", "two-tables", "memory-input", "missing-table-key",
+        "misspelt-sink-predicate-key", "misspelt-drop-predicate-key",
+    ],
 )
 def test_config_rejects_what_the_pipeline_cannot_run(bad):
     """A config the pipeline cannot run fails at load, before any Spark
-    job: run() reads one table's pending files and writes >= 1 sink."""
+    job: run() reads one table's pending files and writes >= 1 sink, and
+    a misspelt predicate key would route every row to a sink (or drop
+    every row) instead of adding its clause."""
     with pytest.raises(ValueError):
         PipelineConfig.from_dict(bad)
 
@@ -415,7 +426,9 @@ def test_files_per_sink_caps_output_file_count(spark, tiny_pdf, tmp_path, dims):
 def test_watch_mode_hot_reloads_config(spark, tiny_pdf, tmp_path, dims):
     """Continuous batch-agent mode: each tick re-loads the config (hot
     reload, the reference's etcd-watch analogue) and processes only
-    manifest-pending files with a pending-set-derived run_id."""
+    manifest-pending files with a pending-set-derived run_id, listing the
+    table once per tick."""
+    import hashlib
     import json as _json
 
     from logspark.sources.tableio import ParquetIO
@@ -431,18 +444,27 @@ def test_watch_mode_hot_reloads_config(spark, tiny_pdf, tmp_path, dims):
         {"input": cfg.input, "filter": cfg.filter, "enrich": cfg.enrich,
          "output": cfg.output, "aggregate": cfg.aggregate}
     ))
-    io = ParquetIO(str(tmp_path / "in"))
+    listings = []
+
+    class CountingIO(ParquetIO):
+        def input_files(self, spark, table):
+            listings.append(table)
+            return super().input_files(spark, table)
+
+    io = CountingIO(str(tmp_path / "in"))
     sink_root = str(tmp_path / "out")
 
     r1 = pipeline.watch(spark, str(cfg_path), io, sink_root, dims=dims,
                         interval_s=0, max_iterations=1)
     assert len(r1) == 1 and r1[0].sink_rows["parsed"] > 0
-    assert r1[0].run_id.startswith("w-")
+    digest = hashlib.md5("\n".join(sorted(r1[0].input_files)).encode()).hexdigest()
+    assert r1[0].run_id == "w-" + digest[:12]
+    assert len(listings) == 1  # one table listing per tick
 
     # no new input → the next tick does nothing
     r2 = pipeline.watch(spark, str(cfg_path), io, sink_root, dims=dims,
                         interval_s=0, max_iterations=1)
-    assert r2 == []
+    assert r2 == [] and len(listings) == 2
 
     # config edit (new sink) + new input file: BOTH picked up on next tick
     cfg2 = _json.loads(cfg_path.read_text())
@@ -482,6 +504,7 @@ def test_watch_mode_hot_reloads_config(spark, tiny_pdf, tmp_path, dims):
     r5 = pipeline.watch(spark, str(cfg_path), io, sink_root, dims=dims,
                         interval_s=0, max_iterations=1)
     assert len(r5) == 1 and len(r5[0].input_files) == 1
+    assert len(listings) == 4  # the two skipped ticks listed nothing
 
 
 def test_json_filter_schema_with_failure_tag(spark):
@@ -566,8 +589,11 @@ def test_dedup_agent_replay_with_new_arrival(spark, tmp_path, monkeypatch, new_a
     and the manifest commit. If a NEW file arrives before the retry, the
     pending set (and rid) changes; if not, the retry derives the crashed
     tick's rid. Either way replay must be detected PER FILE so the
-    crashed file's signatures are never appended twice, and the union of
-    pairs still equals the one-shot whole-corpus set."""
+    crashed file's signatures are never appended twice, the union of
+    pairs still equals the one-shot whole-corpus set, and no uncommitted
+    run directory is left behind."""
+    import os
+
     import pandas as pd
 
     from logspark.operators import dedup
@@ -622,6 +648,11 @@ def test_dedup_agent_replay_with_new_arrival(spark, tmp_path, monkeypatch, new_a
         assert r3["replayed_files"] == r3["new_files"]
         assert store.committed_runs() == runs_after_crash
     assert dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)["run_id"] is None
+    # the crashed tick's uncommitted runs/<id> is GC'd once a retry runs
+    # under another id: runs/ holds exactly the committed ticks
+    assert sorted(os.listdir(os.path.join(sink, "runs"))) == sorted(
+        r.run_id for r in mf.load_manifest(sink).runs
+    )
 
     # the store must hold exactly ONE signature row per doc (no re-append)
     sigs = store.load(spark).groupBy("doc_id").count().collect()
@@ -690,7 +721,8 @@ def test_dedup_tick_checkpoints_candidates_once(spark, tmp_path, monkeypatch):
 def test_dedup_tick_pair_count_matches_written_pairs(spark, tmp_path, monkeypatch):
     """`n_pairs` is observed on the pairs write; it equals the rows of
     runs/<rid>/pairs on disk for a fresh tick and for a tick that replays
-    files a crashed tick had already committed to the store."""
+    files a crashed tick had already committed to the store, and the
+    manifest records it with the replayed-file count."""
     import pandas as pd
 
     from logspark.plans import dedup_agent
@@ -717,6 +749,12 @@ def test_dedup_tick_pair_count_matches_written_pairs(spark, tmp_path, monkeypatc
     replayed = dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)
     assert replayed["replayed_files"] == replayed["new_files"]
     assert replayed["n_pairs"] == _pairs_on_disk(spark, sink, replayed["run_id"]) >= 2
+    # the manifest records both ticks' pair and replay counts
+    metrics = {r.run_id: r.metrics for r in mf.load_manifest(sink).runs}
+    assert metrics == {
+        fresh["run_id"]: {"n_pairs": 1.0, "replayed_files": 0.0},
+        replayed["run_id"]: {"n_pairs": float(replayed["n_pairs"]), "replayed_files": 1.0},
+    }
 
 
 def test_parquet_io_listing_matches_parquet_read_without_a_job(spark, tmp_path):
@@ -782,8 +820,8 @@ def test_dedup_tick_verify_scan_pruned(spark, tmp_path):
     assert any("f2.parquet" in f for f in r2["corpus_files"])  # pending file scanned
 
 
-def test_watch_dedup_compaction_preserves_provenance(spark, tmp_path):
-    """watch_dedup's compact_every folds the store's run dirs into one
+def test_watch_dedup_compaction_preserves_provenance(spark, tmp_path, monkeypatch):
+    """The tick's COMPACT_EVERY folds the store's run dirs into one
     WITHOUT losing the per-file ingestion provenance — a post-compaction
     tick still sees earlier files as ingested (no duplicate signatures)
     and the cumulative pair set still equals the one-shot whole corpus."""
@@ -805,11 +843,10 @@ def test_watch_dedup_compaction_preserves_provenance(spark, tmp_path):
     tbl.mkdir(parents=True)
     io = ParquetIO(str(tmp_path / "in"))
     sink = str(tmp_path / "agent")
+    monkeypatch.setattr(dedup_agent, "COMPACT_EVERY", 2)
     for i, rows in enumerate(batches):
         pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(tbl / f"f{i}.parquet")
-        dedup_agent.watch_dedup(
-            spark, io, "docs", sink, interval_s=0.01, max_iterations=1, compact_every=2
-        )
+        dedup_agent.watch_dedup(spark, io, "docs", sink, interval_s=0.01, max_iterations=1)
     store = dedup.SignatureStore(os.path.join(sink, "sigstore"))
     assert len(store.committed_runs()) < 3  # compaction actually fired
     assert len(store.committed_files()) == 3  # provenance survived
@@ -830,7 +867,7 @@ def test_watch_dedup_compaction_preserves_provenance(spark, tmp_path):
 
 def test_watch_dedup_loop(spark, tmp_path):
     """watch_dedup polls and ticks: first iteration ingests the pending
-    file, second is a no-op (nothing new)."""
+    file, second is a no-op (nothing new); each tick lists the table once."""
     import pandas as pd
 
     from logspark.plans import dedup_agent
@@ -841,12 +878,20 @@ def test_watch_dedup_loop(spark, tmp_path):
     pd.DataFrame(
         [(1, "some words here"), (2, "other words there")], columns=["doc_id", "text"]
     ).to_parquet(tbl / "f1.parquet")
+    listings = []
+
+    class CountingIO(ParquetIO):
+        def input_files(self, spark, table):
+            listings.append(table)
+            return super().input_files(spark, table)
+
     res = dedup_agent.watch_dedup(
-        spark, ParquetIO(str(tmp_path / "in")), "docs", str(tmp_path / "agent"),
+        spark, CountingIO(str(tmp_path / "in")), "docs", str(tmp_path / "agent"),
         interval_s=0.01, max_iterations=2,
     )
     assert len(res) == 2
     assert res[0]["run_id"] is not None and res[1]["run_id"] is None
+    assert listings == ["docs", "docs"]
 
 
 def test_signature_store_partition_by_must_match_existing_layout(spark, tmp_path):

@@ -1084,7 +1084,7 @@ def test_embed_dedup_agent_ticks_equal_one_shot(spark, emb, tmp_path, monkeypatc
     assert got == one and one
 
 
-def test_watch_embed_dedup_with_compaction_and_pin_crash(spark, emb, tmp_path):
+def test_watch_embed_dedup_with_compaction_and_pin_crash(spark, emb, tmp_path, monkeypatch):
     """The embedding watch loop: per-file ticks with vstore compaction
     (partitioned layout + provenance survive), pinned centroids reused
     across ticks, and a CRASHED first-tick centroid pin (temp dir left
@@ -1107,11 +1107,11 @@ def test_watch_embed_dedup_with_compaction_and_pin_crash(spark, emb, tmp_path):
     # simulate a crash mid-pin BEFORE any tick: a stale tmp dir exists
     os.makedirs(os.path.join(sink, "centroids.tmp", "_temporary"), exist_ok=True)
 
+    monkeypatch.setattr(dedup_agent, "COMPACT_EVERY", 2)
     for i, lo in enumerate(range(0, n, n // 3 + 1)):
         pdf.iloc[lo : lo + n // 3 + 1].to_parquet(tbl / f"f{i}.parquet")
         dedup_agent.watch_embed_dedup(
-            spark, io, "vecs", sink,
-            interval_s=0.01, max_iterations=1, compact_every=2, threshold=0.35,
+            spark, io, "vecs", sink, interval_s=0.01, max_iterations=1, threshold=0.35,
         )
     assert os.path.isdir(os.path.join(sink, "centroids"))  # pin recovered
 
