@@ -1,6 +1,7 @@
 """Deduplication operators for training-data pipelines.
 
-Four families, all DataFrame-native (the only Python is plan construction):
+Four families, DataFrame plans with Arrow-batched pandas UDF kernels
+where per-row hashing beats interpreted Spark lambdas:
 
 - **exact**        hash-groupBy on normalized text → keep min-id doc
 - **MinHash+LSH**  shingle → n minhashes → band → bucket-join candidates
@@ -10,9 +11,9 @@ Four families, all DataFrame-native (the only Python is plan construction):
 
 Scale design (100 TB story):
 - Exact dedup is ONE shuffle on a 16-byte md5 — the minimum possible.
-- MinHash signatures come from a single explode + groupBy where ALL n
-  minhashes are computed as n aggregate expressions in one pass (one
-  shuffle keyed by doc, partial aggregation map-side). LSH banding then
+- MinHash signatures are a ZERO-shuffle narrow map: one pandas UDF kernel
+  shingles and hashes each Arrow batch of texts and emits all n minhashes
+  per doc (a doc's shingles live in its own row). LSH banding then
   self-joins on (band_idx, band_key) — candidates only, never all pairs.
 - The portable md5-based hash (textops.portable_hash60) keeps every step
   reproducible in DuckDB for the correctness oracle.
@@ -32,15 +33,12 @@ from logspark.operators.textops import portable_hash60
 
 MERSENNE_P = 2147483647  # 2^31 - 1; (p-1)^2 < 2^62 so a*h+b stays in int64
 
-# Cross-batch shingle/gram md5 memos (r6, ADVICE r5-style cache hoist):
-# Python workers are reused and this module is imported on executors, so a
-# module-level memo amortizes md5 work across batches AND tasks instead of
-# rebuilding per Arrow batch. Shingles repeat heavily across near-dup docs
-# (that is the premise of the whole pipeline); the cap bounds worst-case
-# memory (~100 B/entry → ~100 MB ceiling per worker before a reset).
-# Separate dicts because minhash stores the MOD-P value and winnowing the
-# raw 60-bit value.
-_MINHASH_MEMO: dict[str, int] = {}
+# Cross-batch k-gram md5 memo of the winnowing kernel: Python workers are
+# reused and this module is imported on executors, so a module-level memo
+# amortizes md5 work across batches AND tasks; repeated runs over a corpus
+# hit it (BENCH/NOTES.md "MinHash kernel without the per-worker memo").
+# ~146 B per entry, and the cap is checked only when a batch starts, so a
+# worker can hold the cap plus one batch's new grams before the reset.
 _WINNOW_MEMO: dict[str, int] = {}
 _MEMO_MAX = 1 << 20
 
@@ -130,48 +128,33 @@ def _make_minhash_kernel(coeffs: list[tuple[int, int]], k: int):
     """Arrow batch of text → one column per minhash (null if < k tokens).
 
     The whole shingle→hash→min pipeline runs here, Arrow-batched:
-    - k-gram shingling + dedup in plain Python (split/join — C-speed),
-      with a per-batch md5 memo (shingles repeat heavily across docs);
+    - k-gram shingling + per-doc dedup in plain Python (split/join —
+      C-speed) into one flat shingle list for the batch;
+    - `pd.factorize` (a C string hash table) maps that list to the
+      batch's distinct shingles, and only those are md5-hashed: the
+      60-bit value is the digest's first 8 bytes shifted right by 4
+      (== int(hexdigest()[:15], 16), the portable_hash60 form);
     - every (a*h + b) mod p affine map applied to the batch's flattened
       hash vector at once in numpy, segment-min per doc via
       np.minimum.reduceat. a, b, h < 2^31 so a*h + b < 2^62 — exact int64.
+
+    No state outlives the batch, and nothing is imported from logspark, so
+    the kernel runs on workers that cannot import the package (a per-worker
+    memo cost memory and time: BENCH/NOTES.md "MinHash kernel without the
+    per-worker memo").
 
     Doing shingling/md5 JVM-side was measured SLOWER: element-wise lambdas
     (transform / aggregate) are interpreted, not codegen'd, and the md5 →
     substring → conv chain per shingle costs ~6 µs interpreted vs ~1 µs
     here (BENCH/NOTES.md fix 7)."""
-    _task_memo: dict[str, int] = {}  # fallback when logspark isn't importable
 
     def kernel(s: pd.Series) -> pd.DataFrame:
-        import hashlib
+        from hashlib import md5
         import numpy as np
         import pandas as pd
 
-        # resolve the memo through the worker's own module import when the
-        # package is importable there (ensure_workers shipped the zip, or
-        # the worker inherited the repo cwd): the nested kernel is pickled
-        # by value, so a plain global reference would ship a per-task
-        # copy. Fall back to the closure dict — per-task, still amortized
-        # across every Arrow batch of the task — so the kernel never
-        # DEPENDS on worker-side importability (r6 review).
-        try:
-            from logspark.operators import dedup as _m
-
-            memo = _m._MINHASH_MEMO
-        except ImportError:
-            memo = _task_memo
         n = len(s)
-        if len(memo) > _MEMO_MAX:
-            memo.clear()
-
-        def h60(sh: str) -> int:
-            v = memo.get(sh)
-            if v is None:
-                v = int(hashlib.md5(sh.encode()).hexdigest()[:15], 16) % MERSENNE_P
-                memo[sh] = v
-            return v
-
-        flat: list[int] = []
+        flat: list[str] = []
         lengths = np.zeros(n, dtype=np.int64)
         for j, text in enumerate(s):
             if text is None:
@@ -181,7 +164,7 @@ def _make_minhash_kernel(coeffs: list[tuple[int, int]], k: int):
                 continue
             grams = {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
             lengths[j] = len(grams)
-            flat.extend(h60(g) for g in grams)
+            flat.extend(grams)
 
         nonempty = lengths > 0
         cols = {}
@@ -189,7 +172,13 @@ def _make_minhash_kernel(coeffs: list[tuple[int, int]], k: int):
             for i in range(len(coeffs)):
                 cols[f"mh_{i}"] = pd.Series([pd.NA] * n, dtype="Int64")
             return pd.DataFrame(cols)
-        fv = np.asarray(flat, dtype=np.int64)
+        codes, uniq = pd.factorize(np.asarray(flat, dtype=object))
+        uh = np.fromiter(
+            (int.from_bytes(md5(u.encode()).digest()[:8], "big") >> 4 for u in uniq),
+            dtype=np.int64,
+            count=len(uniq),
+        )
+        fv = (uh % MERSENNE_P)[codes]
         starts = np.concatenate(([0], np.cumsum(lengths)))[:-1][nonempty]
         for i, (a, b) in enumerate(coeffs):
             mins = np.minimum.reduceat((fv * a + b) % MERSENNE_P, starts)
@@ -404,7 +393,10 @@ def _make_winnow_kernel(k: int, w: int):
         import numpy as np
         import pandas as pd
 
-        try:  # per-worker shared memo; closure fallback (see minhash kernel)
+        # the kernel is pickled by value, so a global reference would ship
+        # a per-task copy: resolve the memo through the worker's import,
+        # falling back to the per-task closure dict when it cannot import
+        try:
             from logspark.operators import dedup as _m
 
             memo = _m._WINNOW_MEMO

@@ -753,7 +753,9 @@ def bpe_tokenize(col, merges: list[tuple[str, str]] | None = None):
 # documented Zipf amortization never actually happened). Keyed by a
 # deterministic digest of the merge table so two tables never share
 # counts; resolved through the worker's module import so reused workers
-# keep it across batches AND tasks. The cap bounds worst-case memory.
+# keep it across batches AND tasks (words repeat, merges are costly). The
+# cap is checked only when a batch starts, so a worker can hold the cap
+# plus one batch's new words (~80 B per short-word entry) before the reset.
 _BPE_COUNT_MEMOS: dict[str, dict[str, int]] = {}
 _BPE_MEMO_MAX = 1 << 20
 

@@ -239,6 +239,82 @@ def test_run_gc_orphans_and_run_id_safety(spark, tiny_pdf, tmp_path, dims):
     assert len(res2.input_files) == 1  # only the new file
 
 
+@pytest.mark.parametrize("crash_site", ["after_routed_write", "after_counts_write"])
+def test_run_crash_then_retry_equals_no_crash_run(spark, tiny_pdf, tmp_path, dims, monkeypatch, crash_site):
+    """A run dies after its routed write (the counts write raises) or after
+    its counts write (the manifest commit raises). The retry with
+    run_id=None takes the crashed run's "w-" + md5 id, returns the sink rows
+    and metrics of a run that never crashed, and leaves runs/ holding
+    exactly the manifest's run ids."""
+    import glob
+    import hashlib
+    import os
+
+    from logspark.sources import manifest as mf
+    from logspark.sources.tableio import ParquetIO
+
+    tbl_dir = tmp_path / "in" / "transcripts.parquet"
+    tbl_dir.mkdir(parents=True)
+
+    def land(name, rows):
+        tiny_pdf.iloc[rows].to_parquet(
+            tbl_dir / name, coerce_timestamps="us", allow_truncated_timestamps=True
+        )
+
+    io = ParquetIO(str(tmp_path / "in"))
+    cfg = canonical_config()
+    ref_root, sink_root = str(tmp_path / "ref"), str(tmp_path / "out")
+    land("part-0.parquet", slice(0, 500))
+    for root in (ref_root, sink_root):
+        pipeline.run(spark, cfg, io, root, run_id="r1", dims=dims)
+    land("part-1.parquet", slice(500, 900))
+    ref = pipeline.run(spark, cfg, io, ref_root, run_id=None, dims=dims)
+    assert ref.sink_rows and len(ref.input_files) == 1
+
+    def crash(*args, **kwargs):
+        raise RuntimeError(f"crash {crash_site}")
+
+    if crash_site == "after_routed_write":
+        # build() plans sink_counts too; only the call after the routed
+        # write, in write_sinks, crashes
+        real_counts = pipeline.sink_counts
+
+        def counts_or_crash(*args, **kwargs):
+            if glob.glob(os.path.join(sink_root, "runs", "w-*", "routed", "_SUCCESS")):
+                crash()
+            return real_counts(*args, **kwargs)
+
+        monkeypatch.setattr(pipeline, "sink_counts", counts_or_crash)
+    else:
+        monkeypatch.setattr(pipeline.mf, "commit_run", crash)
+    with pytest.raises(RuntimeError, match=f"crash {crash_site}"):
+        pipeline.run(spark, cfg, io, sink_root, run_id=None, dims=dims)
+    monkeypatch.undo()
+    crashed = [d for d in os.listdir(os.path.join(sink_root, "runs")) if d != "r1"]
+    assert len(crashed) == 1
+    assert [r.run_id for r in mf.load_manifest(sink_root).runs] == ["r1"]
+    crashed_dir = os.path.join(sink_root, "runs", crashed[0])
+    assert os.path.exists(os.path.join(crashed_dir, "routed", "_SUCCESS"))
+    counts_written = os.path.exists(os.path.join(crashed_dir, "sink_counts", "_SUCCESS"))
+    assert counts_written == (crash_site == "after_counts_write")
+
+    res = pipeline.run(spark, cfg, io, sink_root, run_id=None, dims=dims)
+    digest = hashlib.md5("\n".join(sorted(ref.input_files)).encode()).hexdigest()
+    assert res.run_id == crashed[0] == ref.run_id == "w-" + digest[:12]
+    assert res.input_files == ref.input_files
+    assert res.sink_rows == ref.sink_rows
+    assert res.metrics == ref.metrics
+    committed = [r.run_id for r in mf.load_manifest(sink_root).runs]
+    assert committed == ["r1", res.run_id]
+    assert sorted(os.listdir(os.path.join(sink_root, "runs"))) == sorted(committed)
+
+    def counts(root):
+        path = os.path.join(root, "runs", res.run_id, "sink_counts")
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    assert counts(sink_root) == counts(ref_root)
+
+
 def test_run_over_zero_row_file_commits(spark, tiny_pdf, tmp_path, dims):
     """A pending file with zero rows routes nothing: the run still writes
     readable (empty) sinks and commits the file, so the next run is a

@@ -225,6 +225,123 @@ def test_minhash_lsh_finds_planted_near_dup(spark, docs):
     assert len(hit) == 1 and hit[0]["jaccard"] > 0.8
 
 
+MH_COEFFS = dedup._minhash_coeffs(16)
+
+
+def _minhash_reference(texts, k=3):
+    """Per-doc MinHash rows in the portable_hash60 form
+    (int(hexdigest()[:15], 16)); None rows for docs with no k-shingle."""
+    import hashlib
+
+    rows = []
+    for t in texts:
+        toks = [] if t is None else t.split(" ")
+        grams = {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
+        if not grams:
+            rows.append([None] * len(MH_COEFFS))
+            continue
+        hs = [int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % dedup.MERSENNE_P for g in grams]
+        rows.append([min((a * h + b) % dedup.MERSENNE_P for h in hs) for a, b in MH_COEFFS])
+    return rows
+
+
+def _kernel_rows(out):
+    import pandas as pd
+
+    assert list(out.columns) == [f"mh_{i}" for i in range(len(MH_COEFFS))]
+    return [[None if pd.isna(v) else int(v) for v in row] for row in out.itertuples(index=False)]
+
+
+def _text_series(texts):
+    import pandas as pd
+
+    return pd.Series(texts, dtype=object)
+
+
+KERNEL_BATCHES = {
+    "repeats_nulls_short_unicode": [
+        "the quick brown fox jumps over the lazy dog",
+        None,
+        "the quick brown fox naps",  # shares shingles with doc 0
+        "too short",
+        "",
+        "the quick brown fox jumps over the lazy dog",  # exact repeat
+        "a b a b a b a b",  # shingles repeat inside the doc
+        "café naïve 日本語 テキスト ünïcode café naïve 日本語",
+        "x  y z",  # empty token from a double space
+    ],
+    "empty": [],
+    "all_none": [None, None, None],
+}
+
+
+@pytest.mark.parametrize("name", sorted(KERNEL_BATCHES))
+def test_minhash_kernel_matches_reference(name):
+    texts = KERNEL_BATCHES[name]
+    out = dedup._make_minhash_kernel(MH_COEFFS, 3)(_text_series(texts))
+    assert len(out) == len(texts)
+    assert _kernel_rows(out) == _minhash_reference(texts)
+
+
+def test_minhash_kernel_is_stateless():
+    """A batch's signatures do not depend on what the kernel saw before."""
+    a = KERNEL_BATCHES["repeats_nulls_short_unicode"]
+    b = ["the quick brown fox jumps over the lazy cat", "brand new words in this batch", None]
+    warm = dedup._make_minhash_kernel(MH_COEFFS, 3)
+    warm(_text_series(a))
+    fresh = dedup._make_minhash_kernel(MH_COEFFS, 3)
+    assert _kernel_rows(warm(_text_series(b))) == _kernel_rows(fresh(_text_series(b)))
+    assert _kernel_rows(fresh(_text_series(b))) == _minhash_reference(b)
+
+
+def test_minhash_kernel_equals_reference_hypothesis():
+    """Random batches over a small vocabulary (so shingles repeat across
+    and within docs), with None and short texts, match the reference."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    word = st.sampled_from(["a", "b", "c", "dé", "日本", ""])
+    text = st.one_of(st.none(), st.lists(word, max_size=12).map(" ".join))
+    kernel = dedup._make_minhash_kernel(MH_COEFFS, 3)
+
+    @settings(max_examples=200, deadline=None)
+    @given(st.lists(text, max_size=20))
+    def check(texts):
+        assert _kernel_rows(kernel(_text_series(texts))) == _minhash_reference(texts)
+
+    check()
+
+
+def test_minhash_kernel_runs_where_logspark_is_not_importable(tmp_path):
+    """The kernel ships to workers pickled by value: loaded in a Python
+    that cannot import logspark, it returns the same signatures."""
+    import pickle
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    texts = KERNEL_BATCHES["repeats_nulls_short_unicode"]
+    kernel = dedup._make_minhash_kernel(MH_COEFFS, 3)
+    payload = tmp_path / "kernel.pkl"
+    payload.write_bytes(cloudpickle.dumps((kernel, _text_series(texts))))
+    script = (
+        "import importlib.util, pickle, sys\n"
+        "assert importlib.util.find_spec('logspark') is None, sys.path\n"
+        "kernel, s = pickle.loads(open(sys.argv[1], 'rb').read())\n"
+        "sys.stdout.buffer.write(pickle.dumps(kernel(s)))\n"
+        "assert 'logspark' not in sys.modules\n"
+    )
+    # -I: no PYTHONPATH, no script or working directory on sys.path
+    proc = subprocess.run(
+        [sys.executable, "-I", "-c", script, str(payload)],
+        cwd=tmp_path,
+        capture_output=True,
+        check=True,
+    )
+    assert _kernel_rows(pickle.loads(proc.stdout)) == _kernel_rows(kernel(_text_series(texts)))
+
+
 def test_simhash_bands_integer_keys(spark):
     """Two simhashes agreeing on band 0 MUST pair — the guarantee breaks if
     band keys go through float division (60-bit values exceed double's
