@@ -7,7 +7,8 @@ where per-row hashing beats interpreted Spark lambdas:
 - **MinHash+LSH**  shingle → n minhashes → band → bucket-join candidates
 - **SimHash**      60-bit fingerprint (textops.with_simhash) → band on bit
                    chunks → hamming-verify candidates
-- **n-gram Jaccard** exact Jaccard over shingle sets for candidate pairs
+- **n-gram Jaccard** exact Jaccard over distinct 3-gram sets, candidate
+                   pairs only
 
 Scale design (100 TB story):
 - Exact dedup is ONE shuffle on a 16-byte md5 — the minimum possible.
@@ -18,7 +19,9 @@ Scale design (100 TB story):
 - The portable md5-based hash (textops.portable_hash60) keeps every step
   reproducible in DuckDB for the correctness oracle.
 - Verification (exact Jaccard) runs only on LSH candidates: |candidates| is
-  O(near-dups), not O(n^2).
+  O(near-dups), not O(n^2). Each candidate-touched doc is one row holding
+  its distinct 3-gram array, and a pair's intersection is one native
+  array_intersect — no (doc, shingle) rows are exploded or joined.
 """
 
 from __future__ import annotations
@@ -94,20 +97,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
             F.count(F.lit(1)).alias("n_dups"),
         )
     )
-
-
-def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3) -> DataFrame:
-    """Distinct word k-gram shingles per document: (id, shingle).
-
-    k-grams via transform over index sequence — no UDF; array_distinct
-    before explode keeps the exploded row count minimal."""
-    toks = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-    )
-    grams = F.when(F.size(toks) >= k, grams).otherwise(F.array())
-    return df.select(F.col(id_col), F.explode(F.array_distinct(grams)).alias("shingle"))
 
 
 def _minhash_coeffs(n_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -278,74 +267,51 @@ def lsh_candidates(
     return pairs
 
 
-def ngram_jaccard(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    threshold: float = 0.0,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Exact Jaccard over distinct k-gram sets: (a, b, jaccard).
+def ngram_jaccard(df: DataFrame, threshold: float = 0.0, *, candidates: DataFrame) -> DataFrame:
+    """Exact Jaccard over distinct word 3-gram sets for the candidate
+    pairs: (a, b, jaccard) for each (doc_id a, doc_id b) row of
+    `candidates` whose docs share at least one 3-gram. `df` holds
+    (doc_id, text); docs under 3 tokens, or with null text, have no
+    3-grams and so no pairs. Candidate rows must be distinct.
 
-    Without `candidates`, pairs = docs sharing ≥1 shingle (exact but
-    quadratic in bucket size); with LSH `candidates` (a,b) it verifies only
-    those — the scale path."""
-    if candidates is not None:
-        # Materialize the candidate pair list ONCE (r6): it is referenced
-        # three times below (both sides of the id-set union + the
-        # intersection join), and its lineage is the full signature →
-        # banding → self-join chain; ReusedExchange only dedups identical
-        # exchange subtrees, not the post-exchange work, and the three
-        # consumers sit above different projections. The pair list is
-        # O(near-dups) rows — tiny — so the checkpoint is cheap at any
-        # corpus size.
-        candidates = candidates.localCheckpoint(eager=True)
-        # Shingle ONLY candidate-touched docs: per-doc shingles are
-        # independent, so pruning the corpus to the (small) candidate id
-        # set first is semantics-free and removes the whole-corpus explode
-        # from the verify stage — measured 57.8 s → 3.9 s at the 500k-doc
-        # scale probe (bench/scale_probe.py). AQE turns the semi-join into a broadcast at runtime
-        # from the actual candidate size (no static-stats guess needed).
-        cand_ids = (
-            candidates.select(F.col("a").alias(id_col))
-            .union(candidates.select(F.col("b").alias(id_col)))
-            .distinct()
-        )
-        df = df.join(cand_ids, id_col, "leftsemi")
-    sh = shingles(df, id_col, text_col, k)
-    if candidates is not None:
-        # the pruned shingle set is O(candidate-touched docs x shingles/doc)
-        # — materialize it once (r6): it feeds `sizes` and both sides of
-        # the intersection join, and each reference otherwise re-runs the
-        # corpus semi-join scan + the shingling explode
-        sh = sh.localCheckpoint(eager=True)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    if candidates is not None:
-        # Candidates-driven intersection: attach each pair's a-side
-        # shingles, keep those the b-side shares. Cost is
-        # O(|candidates| x shingles/doc) — the quadratic shared-shingle
-        # pair space is never built (semi-joining it AFTER the self-join
-        # would still pay the full O(bucket²) shuffle first).
-        inter = (
-            candidates.join(sh.select(F.col(id_col).alias("a"), "shingle"), "a")
-            .join(sh.select(F.col(id_col).alias("b"), "shingle"), ["b", "shingle"])
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    else:
-        l, r = sh.alias("l"), sh.alias("r")
-        inter = (
-            l.join(r, "shingle")
-            .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-            .groupBy(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
+    Cost is O(candidate-touched docs x 3-grams/doc) and no pair space
+    beyond the candidates is built:
+    - the candidate list is checkpointed once (its lineage is the whole
+      signature → banding → self-join chain, and it feeds both the id set
+      and the pair joins);
+    - only candidate-touched docs are read: the corpus is semi-joined to
+      the candidate id set first (57.8 s → 3.9 s at the 500k-doc scale
+      probe, bench/scale_probe.py), and AQE broadcasts that id set from
+      its runtime size;
+    - each touched doc becomes ONE row holding its `array_distinct` 3-gram
+      array, the pairs join those rows twice on doc id (both joins read
+      one exchange of the sets, so the corpus is scanned once), and the
+      native `array_intersect` sizes the intersection per pair. A (doc, 3-gram)
+      row per element, joined on (pair, 3-gram), lost to this set form
+      (HERO, SIGMOD 2024: intersect sets, do not join their elements;
+      BENCH/NOTES.md "One Jaccard verify")."""
+    candidates = candidates.localCheckpoint(eager=True)
+    cand_ids = (
+        candidates.select(F.col("a").alias("doc_id"))
+        .union(candidates.select(F.col("b").alias("doc_id")))
+        .distinct()
+    )
+    toks = F.split(F.col("text"), " ")
+    grams = F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size(toks) - 3, F.lit(0))),
+        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
+    )
+    sets = df.join(cand_ids, "doc_id", "leftsemi").select(
+        "doc_id", F.array_distinct(F.when(F.size(toks) >= 3, grams).otherwise(F.array())).alias("sh")
+    )
+    inter = F.size(F.array_intersect("sa", "sb"))
+    # arrays_overlap keeps exactly the pairs with a shared 3-gram, before
+    # any division: a pair of empty sets would divide by zero
     out = (
-        inter.join(sizes.withColumnRenamed(id_col, "a").withColumnRenamed("sz", "sz_a"), "a")
-        .join(sizes.withColumnRenamed(id_col, "b").withColumnRenamed("sz", "sz_b"), "b")
-        .withColumn("jaccard", F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6))
-        .select("a", "b", "jaccard")
+        candidates.join(sets.select(F.col("doc_id").alias("a"), F.col("sh").alias("sa")), "a")
+        .join(sets.select(F.col("doc_id").alias("b"), F.col("sh").alias("sb")), "b")
+        .filter(F.arrays_overlap("sa", "sb"))
+        .select("a", "b", F.round(inter / (F.size("sa") + F.size("sb") - inter), 6).alias("jaccard"))
     )
     if threshold > 0:
         out = out.filter(F.col("jaccard") >= threshold)
@@ -683,7 +649,6 @@ def dedup_apply(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    broadcast_drop: bool = True,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The deduplicated corpus: every near-dup cluster keeps exactly its
@@ -694,14 +659,10 @@ def dedup_apply(
     Shape: the drop list is |cluster members| - |clusters| rows — id-only,
     a small fraction of the corpus — and is broadcast EXPLICITLY: the
     statistics-blind static plan otherwise picks a SortMergeJoin that
-    shuffles+sorts the whole corpus to drop <1% of it (plan-tested).
-    `broadcast_drop=False` for the degenerate mostly-duplicates corpus
-    where the drop list rivals the corpus."""
+    shuffles+sorts the whole corpus to drop <1% of it (plan-tested)."""
     clusters = dedup_clusters(pairs, id_col, checkpoint_dir=checkpoint_dir)
     drop = clusters.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
-    if broadcast_drop:
-        drop = F.broadcast(drop)
-    return df.join(drop, id_col, "left_anti")
+    return df.join(F.broadcast(drop), id_col, "left_anti")
 
 
 def winnow_candidates(
@@ -993,8 +954,10 @@ def incremental_near_dup_pairs(
       so it is never the smaller one. A batch over the threshold (a first
       tick over a large table) gets a shuffle join;
     - Jaccard verification (`ngram_jaccard(candidates=)`) checkpoints the
-      candidate list and re-reads texts ONLY for candidate-touched docs
-      (semi-join prune on the corpus), O(|candidates| · shingles/doc).
+      candidate list, re-reads texts ONLY for candidate-touched docs
+      (semi-join prune on the corpus) as one distinct 3-gram array each,
+      and intersects the two arrays of each pair, O(|candidates| ·
+      3-grams/doc); the lazy pairs then run in the caller's write.
 
     Crash safety: a crash after the append leaves the batch's files in
     `store.committed_files()`, so the retry takes `replay=True` — nothing
@@ -1008,10 +971,11 @@ def incremental_near_dup_pairs(
     (`SignatureStore.append`): the dedup agent passes the batch's source
     files; in-memory batches with no source files leave it empty.
 
-    Docs are (doc_id, text) rows, and signatures, bands and shingles are
-    the one-shot defaults of `minhash_signatures`, `band_signatures` and
-    `ngram_jaccard` (16 hashes, 4 bands, k=3): a persistent store mixing
-    two parameterisations would silently break union-of-runs == one-shot.
+    Docs are (doc_id, text) rows, and signatures and bands are the
+    one-shot defaults of `minhash_signatures` and `band_signatures` (16
+    hashes, 4 bands, k=3; `ngram_jaccard` always verifies on 3-grams): a
+    persistent store mixing two parameterisations would silently break
+    union-of-runs == one-shot.
     """
     spark = new_docs.sparkSession
     sigs = minhash_signatures(new_docs)

@@ -790,7 +790,6 @@ def with_bpe_token_count(
     import hashlib as _hl
 
     table_key = _hl.md5(repr(m).encode()).hexdigest()
-    _task_memo: dict[str, int] = {}  # fallback when logspark isn't importable
 
     @pandas_udf("struct<n_pretokens:bigint,n_tokens_bpe:bigint>")
     def _counts(s):
@@ -798,12 +797,11 @@ def with_bpe_token_count(
 
         import pandas as pd
 
-        try:  # per-worker shared memo; per-task closure fallback
-            from logspark.operators import textops as _m
+        # per-worker shared memo, through the worker's module import (the
+        # kernel is pickled by value, so a global would ship a per-task copy)
+        from logspark.operators import textops as _m
 
-            cache = _m._BPE_COUNT_MEMOS.setdefault(table_key, {})
-        except ImportError:
-            cache = _task_memo
+        cache = _m._BPE_COUNT_MEMOS.setdefault(table_key, {})
         tok_re = re.compile(BPE_TOKEN_RE)
         alpha = re.compile(r"[A-Za-z]+\Z")
         if len(cache) > _BPE_MEMO_MAX:

@@ -461,12 +461,19 @@ def q_incremental_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     each run computes signatures for its own batch only and LSH-joins new
     vs (store ∪ new). The unioned per-run pair sets must hash-equal the
     one-shot whole-corpus pair set (the oracle), proving incremental
-    ingestion loses and invents nothing."""
+    ingestion loses and invents nothing.
+
+    The store lives in the driver's SparkFiles directory, which Spark
+    deletes when the context stops or the JVM exits: the lazy pairs read
+    its runs for as long as the session can run them, and no call leaves a
+    store behind."""
     import tempfile
+
+    from pyspark import SparkFiles
 
     ensure_workers(spark)
     docs = _t(spark, sf_dir, "documents")
-    store = dedup.SignatureStore(tempfile.mkdtemp(prefix="sigstore_"))
+    store = dedup.SignatureStore(tempfile.mkdtemp(prefix="sigstore_", dir=SparkFiles.getRootDirectory()))
     batch_a = docs.filter(F.col("doc_id") % 2 == 0)
     batch_b = docs.filter(F.col("doc_id") % 2 == 1)
     pa = dedup.incremental_near_dup_pairs(store, batch_a, docs, run_id="inc-a", threshold=0.5)

@@ -77,3 +77,23 @@ def test_rows_only_queries_run(spark):
     for name, q in entry_mod.queries().items():
         if name not in entry_mod.oracle_sql():
             assert q(spark, SF_DIR).count() >= 0, name
+
+
+def test_incremental_dedup_pairs_store_lives_with_the_session(spark, tmp_path, monkeypatch):
+    """The query's signature store is made under the driver's SparkFiles
+    directory (deleted by Spark when the context stops), never in the
+    system temp dir: repeated calls leave nothing there, and the returned
+    lazy pairs still read the store's runs."""
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    root = SparkFiles.getRootDirectory()
+    before = {p for p in os.listdir(root) if p.startswith("sigstore_")}
+    q = entry_mod.queries()["incremental_dedup_pairs"]
+    first, second = (_normalize(q(spark, SF_DIR).toPandas()) for _ in range(2))
+    assert list(tmp_path.iterdir()) == []
+    assert len({p for p in os.listdir(root) if p.startswith("sigstore_")} - before) == 2
+    assert len(first) > 0
+    pd.testing.assert_frame_equal(first, second)

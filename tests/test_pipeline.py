@@ -765,9 +765,9 @@ def _pairs_on_disk(spark, sink, rid):
 
 def test_dedup_tick_checkpoints_candidates_once(spark, tmp_path, monkeypatch):
     """A steady-state tick checkpoints its candidate pair list exactly
-    once (inside the verify) and its shingle set once — no separate
-    checkpoint of the batch signatures or of the candidates before the
-    verify."""
+    once (inside the verify) and nothing else — no checkpoint of the
+    batch signatures, of the candidates before the verify, or of the
+    verify's 3-gram sets."""
     import pandas as pd
 
     from logspark.plans import dedup_agent
@@ -791,7 +791,7 @@ def test_dedup_tick_checkpoints_candidates_once(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(cls, "localCheckpoint", counted)
     r = dedup_agent.dedup_tick(spark, io, "docs", sink, threshold=0.5)
     assert r["n_pairs"] >= 1
-    assert calls == [["a", "b"], ["doc_id", "shingle"]]
+    assert calls == [["a", "b"]]
 
 
 def test_dedup_tick_pair_count_matches_written_pairs(spark, tmp_path, monkeypatch):

@@ -401,10 +401,56 @@ def test_winnowing_shared_substring_guarantee(spark):
     assert len(by_doc[1]) < n_grams
 
 
-def test_ngram_jaccard_bounds(docs):
-    out = dedup.ngram_jaccard(docs.limit(40))
+def test_ngram_jaccard_bounds(spark, docs):
+    """Every a < b pair of 40 docs as candidates: pairs sharing no 3-gram
+    are dropped (no jaccard of 0) and no score exceeds 1."""
+    ids = [r["doc_id"] for r in docs.limit(40).select("doc_id").collect()]
+    cand = spark.createDataFrame([(a, b) for a in ids for b in ids if a < b], "a bigint, b bigint")
+    out = dedup.ngram_jaccard(docs, candidates=cand)
     bad = out.filter((F.col("jaccard") <= 0) | (F.col("jaccard") > 1)).count()
     assert bad == 0
+
+
+def test_ngram_jaccard_equals_python_reference(spark):
+    """dedup.ngram_jaccard vs a pure-Python distinct-3-gram Jaccard on
+    hypothesis-drawn corpora: a 3-word vocabulary repeats 3-grams inside
+    a doc, and the inputs hold docs under 3 tokens, None text, candidate
+    pairs sharing no 3-gram and candidates naming no corpus doc."""
+    from hypothesis import HealthCheck, example, given, settings
+    from hypothesis import strategies as st
+
+    from logspark.functions.rounding import round_half_up6
+
+    def grams(text):
+        toks = [] if text is None else text.split(" ")
+        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+    texts = st.one_of(st.none(), st.lists(st.sampled_from("xyz"), max_size=9).map(" ".join))
+    pairs = st.lists(st.tuples(st.integers(0, 9), st.integers(0, 9)).filter(lambda t: t[0] < t[1]), max_size=25)
+
+    @given(st.lists(texts, min_size=1, max_size=8), pairs, st.sampled_from([0.0, 0.5]))
+    @example(
+        ["x y z x y z x y", "x y z", "y z x y", "x y", None, "z z z", ""],
+        [(0, 1), (0, 2), (1, 2), (1, 5), (0, 3), (3, 4), (4, 5), (5, 6), (0, 9)],
+        0.0,
+    )
+    @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+    def check(corpus, cand, threshold):
+        cand = sorted(set(cand))
+        want = {}
+        for a, b in cand:
+            if b < len(corpus):
+                ga, gb = grams(corpus[a]), grams(corpus[b])
+                inter = len(ga & gb)
+                j = round_half_up6(inter / (len(ga) + len(gb) - inter)) if inter else 0.0
+                if inter and j >= threshold:
+                    want[(a, b)] = j
+        df = spark.createDataFrame(list(enumerate(corpus)), "doc_id bigint, text string")
+        c = spark.createDataFrame(cand, "a bigint, b bigint")
+        got = {(r["a"], r["b"]): r["jaccard"] for r in dedup.ngram_jaccard(df, threshold, candidates=c).collect()}
+        assert got == want
+
+    check()
 
 
 def test_connected_components_equals_union_find(spark):
