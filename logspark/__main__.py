@@ -79,11 +79,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.stream:
         from logspark.streaming import stream_pipeline
 
-        table = cfg.input[0]["table"]
         q = stream_pipeline(
             spark,
             cfg,
-            input_dir=f"{args.input_dir}/{table}.parquet",
+            input_dir=ParquetIO(args.input_dir).path(cfg.input[0]["table"]),
             sink_root=args.sink_root,
             checkpoint_dir=f"{args.sink_root}/_checkpoint",
             dims=dims,

@@ -281,8 +281,10 @@ def ngram_jaccard(df: DataFrame, threshold: float = 0.0, *, candidates: DataFram
       and the pair joins);
     - only candidate-touched docs are read: the corpus is semi-joined to
       the candidate id set first (57.8 s → 3.9 s at the 500k-doc scale
-      probe, bench/scale_probe.py), and AQE broadcasts that id set from
-      its runtime size;
+      probe, bench/scale_probe.py). The id set (both ids of every
+      candidate, 2 x |candidates| longs) is broadcast, so the corpus
+      streams through the semi-join; a shuffle join would exchange the
+      whole corpus every tick (CAMEL, EDBT 2026: build on the small side);
     - each touched doc becomes ONE row holding its `array_distinct` 3-gram
       array, the pairs join those rows twice on doc id (both joins read
       one exchange of the sets, so the corpus is scanned once), and the
@@ -291,17 +293,17 @@ def ngram_jaccard(df: DataFrame, threshold: float = 0.0, *, candidates: DataFram
       (HERO, SIGMOD 2024: intersect sets, do not join their elements;
       BENCH/NOTES.md "One Jaccard verify")."""
     candidates = candidates.localCheckpoint(eager=True)
-    cand_ids = (
-        candidates.select(F.col("a").alias("doc_id"))
-        .union(candidates.select(F.col("b").alias("doc_id")))
-        .distinct()
+    # no distinct: a semi-join ignores repeated build keys, and a distinct
+    # would shuffle before the broadcast
+    cand_ids = candidates.select(F.col("a").alias("doc_id")).union(
+        candidates.select(F.col("b").alias("doc_id"))
     )
     toks = F.split(F.col("text"), " ")
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(toks) - 3, F.lit(0))),
         lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
     )
-    sets = df.join(cand_ids, "doc_id", "leftsemi").select(
+    sets = df.join(F.broadcast(cand_ids), "doc_id", "leftsemi").select(
         "doc_id", F.array_distinct(F.when(F.size(toks) >= 3, grams).otherwise(F.array())).alias("sh")
     )
     inter = F.size(F.array_intersect("sa", "sb"))
@@ -872,16 +874,27 @@ class SignatureStore:
         dfs = [reader.parquet(self._run_path(r)) for r in runs]
         return functools.reduce(lambda a, b: a.unionByName(b), dfs)
 
-    def require_committed(self, run_id: str | None) -> None:
-        """The replay precondition of both incremental operators: the
-        store holds at least one run, and `run_id` (when given) is one of
-        them. run_id=None means the caller established from
-        `committed_files()` that the batch's files are already ingested."""
-        runs = self.committed_runs()
-        if not runs or (run_id is not None and run_id not in runs):
-            raise ValueError(
-                f"replay=True but run {run_id!r} is not committed in the store"
-            )
+    def ingest(
+        self,
+        rows: DataFrame,
+        run_id: str | None,
+        input_files: list[str] | None,
+        partition_by: list[str] | None = None,
+    ) -> DataFrame:
+        """The store step both incremental operators take before pairing:
+        the batch's rows as a plain scan. With a run id, `rows` is appended
+        as that run (`append`) and the run is read back with `rows.schema`
+        (no footer-inference job), so the batch side is a file scan the
+        planner can size and broadcast. With run_id None (a replay: the
+        caller found every batch file in `committed_files()`), nothing is
+        appended and `rows` comes back unchanged; the store must then hold
+        at least one run."""
+        if run_id is None:
+            if not self.committed_runs():
+                raise ValueError(f"replay against the empty signature store {self.root!r}")
+            return rows
+        self.append(rows, run_id, input_files=input_files, partition_by=partition_by)
+        return rows.sparkSession.read.schema(rows.schema).parquet(self._run_path(run_id))
 
     def compact(self, spark) -> None:
         """Fold every committed run into ONE compacted run — the
@@ -928,11 +941,10 @@ def incremental_near_dup_pairs(
     corpus: DataFrame,
     run_id: str | None,
     threshold: float = 0.5,
-    replay: bool = False,
     input_files: list[str] | None = None,
 ) -> DataFrame:
     """Verified near-dup pairs INVOLVING the new batch: new-vs-new plus
-    new-vs-already-ingested. The new signatures are appended to the store
+    new-vs-already-ingested. `store.ingest` appends the new signatures
     first, so the store commit precedes the candidate join.
 
     Guarantee: unioning each run's pairs over a sequence of incremental
@@ -945,7 +957,8 @@ def incremental_near_dup_pairs(
 
     Scale shape per run (N = corpus so far, B = new batch, B << N):
     - signatures computed for B only, once, inside the store append (the
-      store holds the rest); the batch side reads the appended run back;
+      store holds the rest); the batch side is the appended run read back
+      (`SignatureStore.ingest`);
     - the candidate join is band(new) ⋈ band(store): the store — which now
       includes the batch — is scanned and banded once, and the banded
       batch (B x bands rows) is the side the planner picks to broadcast
@@ -960,12 +973,10 @@ def incremental_near_dup_pairs(
       3-grams/doc); the lazy pairs then run in the caller's write.
 
     Crash safety: a crash after the append leaves the batch's files in
-    `store.committed_files()`, so the retry takes `replay=True` — nothing
-    is appended, and the recomputed batch signatures feed only the build
-    side; the pair set is identical (signatures are deterministic).
-    run_id=None with replay means "the caller established from
-    committed_files() that every new_docs source file is already
-    ingested" (the per-file replay key, ADVICE r4).
+    `store.committed_files()`, so the caller retries them with run_id
+    None (the per-file replay key, ADVICE r4): `ingest` appends nothing,
+    and the recomputed batch signatures feed only the build side; the
+    pair set is identical (signatures are deterministic).
 
     `input_files` becomes the appended run's provenance entry
     (`SignatureStore.append`): the dedup agent passes the batch's source
@@ -977,16 +988,9 @@ def incremental_near_dup_pairs(
     persistent store mixing two parameterisations would silently break
     union-of-runs == one-shot.
     """
-    spark = new_docs.sparkSession
     sigs = minhash_signatures(new_docs)
-    if replay:
-        store.require_committed(run_id)
-        new_sigs = sigs
-    else:
-        store.append(sigs, run_id, input_files=input_files)
-        new_sigs = spark.read.schema(sigs.schema).parquet(store._run_path(run_id))
-    l = band_signatures(new_sigs).alias("l")
-    r = band_signatures(store.load(spark, sigs.schema)).alias("r")
+    l = band_signatures(store.ingest(sigs, run_id, input_files)).alias("l")
+    r = band_signatures(store.load(new_docs.sparkSession, sigs.schema)).alias("r")
     pairs = (
         l.join(r, ["band", "key"])
         .filter(F.col("l.doc_id") != F.col("r.doc_id"))

@@ -14,6 +14,12 @@ At 100 TB: the corpus side stays partitioned; queries/centroids are
 broadcast; assignment is one narrow Arrow pass, and the cell id is a
 partition key for storage layout too (`write_ivf_index`), so a probe
 becomes a static partition filter.
+
+Near-dup pairs of a cell are scored by ONE fold-exact scorer
+(`make_cell_scorer`) in all three forms: the one-shot `ivf_near_dups`,
+the store-backed `incremental_ivf_near_dups` (an agent tick) and the
+streaming state function (`streaming.streaming_embedding_near_dups`), so
+their sims are bit-identical.
 """
 
 from __future__ import annotations
@@ -53,6 +59,81 @@ def _norm(a):
 # ---------------------------------------------------------------------------
 
 
+def make_cell_scorer(threshold: float):
+    """The one cosine near-dup scorer of an IVF cell, shared by the batch
+    kernel (`_pair_scores_grouped`, behind `ivf_near_dups` and
+    `incremental_ivf_near_dups`) and the streaming state function
+    (`streaming.stateful`). Returns `score(ids, vecs, flags=None)` → an
+    (a, b, sim) pandas frame of the pairs whose ROUNDED cosine meets
+    `threshold`, a = the lower id.
+
+    `flags` marks the rows that must take part: a pair needs at least one
+    flagged member and is emitted ONCE. Without `flags` every row is
+    flagged, which gives every a < b pair of the cell. The streaming
+    function flags a micro-batch's fresh rows against the cell's stored
+    (unflagged) ones; the incremental operator flags the batch's rows
+    among the store's.
+
+    Exactness: sims via the inlined fold-exact accumulation, bit-identical
+    to the JVM fold and the DuckDB oracle; the threshold is applied to the
+    HALF_UP 6dp rounding F.round performs, via a two-stage cut (np.round
+    prefilter with 1e-6 slack, exact HALF_UP re-round of the survivors —
+    see cosine_topk_batch; the algorithm of functions/rounding.py is
+    inlined). Vectors are never NULL: cell assignment drops them.
+
+    Memory: one cell's vectors plus a row-blocked score matrix (<= ~64 MB
+    per block); degenerate cells are the caller's concern. The scorer
+    imports nothing from logspark, so it is pickled by value and runs on
+    workers that cannot import the package."""
+
+    def score(ids, vecs, flags=None):
+        from decimal import ROUND_HALF_UP, Decimal
+
+        import numpy as np
+        import pandas as pd
+
+        q6 = Decimal("0.000001")
+        out_a, out_b, out_s = [], [], []
+        ids = np.asarray(ids, dtype=np.int64)
+        m = len(ids)
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        flagged = np.ones(m, dtype=bool) if flags is None else np.asarray(flags, dtype=bool)[order]
+        rows = np.nonzero(flagged)[0]
+        if m >= 2 and len(rows):
+            V = np.stack([np.asarray(vecs[k], dtype=np.float64) for k in order])
+            nr = np.zeros(m)  # fold-exact norms: sqrt(((0+v0*v0)+v1*v1)+...)
+            for i in range(V.shape[1]):
+                nr += V[:, i] * V[:, i]
+            nr = np.sqrt(nr)
+            blk = max(1, 8_000_000 // m)  # <= ~64 MB of doubles per block
+            col_idx = np.arange(m)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                for s in range(0, len(rows), blk):
+                    r_idx = rows[s : s + blk]
+                    # fold-exact cosine block (see the module header note)
+                    S = np.zeros((len(r_idx), m))
+                    for i in range(V.shape[1]):
+                        S += V[r_idx, i][:, None] * V[:, i][None, :]
+                    S /= nr[r_idx][:, None] * nr[None, :]
+                    # a flagged row pairs with every unflagged row, and with
+                    # the flagged rows after it (so each pair once)
+                    mask = (col_idx[None, :] > r_idx[:, None]) | ~flagged[None, :]
+                    mask &= np.round(S, 6) >= threshold - 1e-6
+                    for ri, ci in zip(*np.nonzero(mask)):
+                        e = float(Decimal(repr(float(S[ri, ci]))).quantize(q6, rounding=ROUND_HALF_UP))
+                        if e >= threshold:
+                            lo, hi = sorted((r_idx[ri], ci))
+                            out_a.append(int(ids[lo]))
+                            out_b.append(int(ids[hi]))
+                            out_s.append(e)
+        return pd.DataFrame({"a": pd.Series(out_a, dtype="int64"),
+                             "b": pd.Series(out_b, dtype="int64"),
+                             "sim": pd.Series(out_s, dtype="float64")})
+
+    return score
+
+
 def _pair_scores_grouped(
     df: DataFrame,
     keys: tuple[str, ...],
@@ -63,92 +144,15 @@ def _pair_scores_grouped(
 ) -> DataFrame:
     """(a, b, sim) pairs within each `keys` group whose ROUNDED cosine
     meets `threshold` — the bucketed-self-join scoring stage as ONE
-    applyInPandas kernel per bucket instead of a join whose condition
-    re-interprets three array folds per candidate pair.
-
-    Without `flag_col`: all a < b pairs of the group (the self-join
-    form). With `flag_col` (boolean): pairs with at least one flagged
-    member, emitted as (least, greatest) — both-flagged pairs surface in
-    both orientations with bit-identical sims (per-element IEEE multiply
-    commutes), exactly like the old new-side x all-side join, and the
-    caller's distinct() collapses them.
-
-    Exactness: sims via the inlined fold-exact accumulation; the threshold is
-    applied to the HALF_UP 6dp rounding F.round performs, via the proven
-    two-stage cut (np.round prefilter with 1e-6 slack, exact re-round of
-    survivors — see cosine_topk_batch). Rows with NULL vectors drop (their
-    fold sims were NULL and never passed the threshold).
-
-    Memory: the kernel holds one group's vectors plus a row-blocked score
-    matrix (<= ~64 MB per block); degenerate buckets are the caller's
-    `max_bucket` cap's job, exactly as with the join form."""
+    applyInPandas call of `make_cell_scorer` per bucket instead of a join
+    whose condition re-interprets three array folds per candidate pair.
+    With `flag_col` (boolean), only pairs with a flagged member."""
     id_t = df.schema[id_col].dataType.simpleString()
+    scorer = make_cell_scorer(threshold)
 
     def score(pdf):
-        # self-contained on purpose: a module-function reference would be
-        # pickled by-reference and break workers without the logspark zip
-        # (ensure_workers); the runtime import below has an inline fallback
-        import numpy as np
-        import pandas as pd
-
-        try:
-            from logspark.functions.rounding import round_half_up6
-        except ImportError:
-            from decimal import ROUND_HALF_UP, Decimal
-
-            _q6 = Decimal("0.000001")
-
-            def round_half_up6(x):  # same algorithm as functions/rounding.py
-                return float(Decimal(repr(float(x))).quantize(_q6, rounding=ROUND_HALF_UP))
-
-        empty = pd.DataFrame({"a": pd.Series([], dtype="int64"),
-                              "b": pd.Series([], dtype="int64"),
-                              "sim": pd.Series([], dtype="float64")})
-        pdf = pdf[pdf[vec_col].notna()]
-        m = len(pdf)
-        if m < 2:
-            return empty
-        pdf = pdf.sort_values(id_col)
-        ids = pdf[id_col].to_numpy()
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        nr = np.zeros(m)  # fold-exact norms: sqrt(((0+v0*v0)+v1*v1)+...)
-        for i in range(V.shape[1]):
-            nr += V[:, i] * V[:, i]
-        nr = np.sqrt(nr)
-        rows = (
-            np.nonzero(pdf[flag_col].to_numpy())[0]
-            if flag_col is not None
-            else np.arange(m)
-        )
-        if len(rows) == 0:
-            return empty
-        out_a, out_b, out_s = [], [], []
-        blk = max(1, 8_000_000 // m)  # <= ~64 MB of doubles per block
-        col_idx = np.arange(m)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            for s in range(0, len(rows), blk):
-                r_idx = rows[s : s + blk]
-                # fold-exact cosine block (see the module header note)
-                S = np.zeros((len(r_idx), m))
-                for i in range(V.shape[1]):
-                    S += V[r_idx, i][:, None] * V[:, i][None, :]
-                S /= nr[r_idx][:, None] * nr[None, :]
-                if flag_col is None:
-                    mask = col_idx[None, :] > r_idx[:, None]  # a < b, once
-                else:
-                    mask = col_idx[None, :] != r_idx[:, None]  # any partner
-                mask &= np.round(S, 6) >= threshold - 1e-6
-                for ri, ci in zip(*np.nonzero(mask)):
-                    e = round_half_up6(S[ri, ci])
-                    if e >= threshold:
-                        i, j = r_idx[ri], ci
-                        a, b = (i, j) if ids[i] < ids[j] else (j, i)
-                        out_a.append(int(ids[a]))
-                        out_b.append(int(ids[b]))
-                        out_s.append(e)
-        return pd.DataFrame({"a": pd.Series(out_a, dtype="int64"),
-                             "b": pd.Series(out_b, dtype="int64"),
-                             "sim": pd.Series(out_s, dtype="float64")})
+        flags = None if flag_col is None else pdf[flag_col].to_numpy()
+        return scorer(pdf[id_col].to_numpy(), pdf[vec_col].to_numpy(), flags)
 
     cols = [id_col, vec_col, *keys] + ([flag_col] if flag_col else [])
     return (
@@ -335,7 +339,7 @@ def _assign_cells(
 
     def gen(batches):
         # self-contained (no module-function refs): works without the
-        # logspark zip on workers — see the note in _pair_scores_grouped
+        # logspark zip on workers — see the note in make_cell_scorer
         import numpy as np
         import pandas as pd
 
@@ -603,18 +607,25 @@ def incremental_ivf_near_dups(
     run_id: str | None,
     threshold: float = 0.95,
     input_files: list[str] | None = None,
-    replay: bool = False,
 ) -> DataFrame:
     """Verified embedding near-dup pairs INVOLVING the new batch, against
     a persistent CELL-PARTITIONED vector store — the embedding sibling of
-    `dedup.incremental_near_dup_pairs`, with storage-level pruning: the
-    store scan is filtered to the cells the new batch touches, so each
-    incremental run reads O(|batch| x nprobe x cell-size) bytes off the
-    store, not the whole history (PartitionFilters asserted in pytest).
+    `dedup.incremental_near_dup_pairs`, in the same shape:
 
-    `store` is a `dedup.SignatureStore` holding multi-probe (id, vec,
-    cell) rows appended with `partition_by=['cell']`. Centroids must be
-    FIXED across the store's lifetime (same discipline as
+    1. `store.ingest` appends the batch's multi-probe (id, vec, cell)
+       rows, partitioned by cell, and returns the run read back (a
+       replay, run_id None, appends nothing and returns the rows);
+    2. the cells come from those rows;
+    3. the store is loaded with the batch schema (no footer-inference
+       job per run) and pruned to those cells: each run reads
+       O(|batch| x nprobe x cell-size) bytes off the store, not the whole
+       history (PartitionFilters asserted in pytest). HERO (SIGMOD 2024):
+       the cells partition the set space, so a probe touches only its own;
+    4. the batch's ids are flagged by a join, and each cell is scored by
+       `_pair_scores_grouped` (pairs with >= 1 flagged member).
+
+    `store` is a `dedup.SignatureStore`. Centroids must be FIXED across
+    the store's lifetime (same discipline as
     `streaming_embedding_near_dups` — a drifting assignment splits cells
     across time; re-training means a new store generation).
 
@@ -624,47 +635,23 @@ def incremental_ivf_near_dups(
     (the dot fold is operand-order symmetric). Cells are never capped
     here: a cap evaluated per run on partial cells would break that
     equality. `input_files` becomes the appended run's provenance entry
-    (empty for in-memory batches).
-    `replay=True` (with the caller holding per-file provenance,
-    run_id=None) recomputes a crashed run's pairs without re-appending.
+    (empty for in-memory batches). A crashed run's files are replayed with
+    run_id None: same pairs, nothing re-appended.
     Vectors are (vec_id, embedding) rows probed into `ivf_near_dups`'
     default nprobe=2 cells: a persistent store mixing two probe counts
     would silently break union-of-runs == one-shot."""
-    spark = new_vecs.sparkSession
-    id_col, vec_col = "vec_id", "embedding"
-    m_new = ivf_assign_multi(new_vecs, centroids).localCheckpoint(eager=True)
-    cells = [r["cell"] for r in m_new.select("cell").distinct().collect()]
-    old = store.load(spark)
-
-    # r6: pair scoring is the per-cell applyInPandas kernel
-    # (_pair_scores_grouped, flagged form) instead of the new x all join
-    # whose condition re-interpreted the folds per pair. The flagged rows
-    # are the new batch's; pairs need >= 1 flagged member — exactly the
-    # old l(new) x r(all) join semantics, with bit-identical sims
-    # (per-element multiply commutes, so the old orient-by-id when() was
-    # already orientation-independent bitwise).
-    if replay:
-        store.require_committed(run_id)
-        new_ids = m_new.select(F.col(id_col)).distinct().withColumn("_new", F.lit(True))
-        all_m = (
-            old.filter(F.col("cell").isin(cells))
-            .join(new_ids, id_col, "left")
-            .withColumn("_new", F.coalesce(F.col("_new"), F.lit(False)))
-        )
-    else:
-        old_pruned = None if old is None else old.filter(F.col("cell").isin(cells))
-        tagged_new = m_new.withColumn("_new", F.lit(True))
-        all_m = (
-            tagged_new
-            if old_pruned is None
-            else old_pruned.withColumn("_new", F.lit(False)).unionByName(tagged_new)
-        )
-    pairs = _pair_scores_grouped(
-        all_m, ("cell",), threshold, id_col, vec_col, flag_col="_new"
+    m_new = ivf_assign_multi(new_vecs, centroids)
+    batch = store.ingest(m_new, run_id, input_files, partition_by=["cell"])
+    cells = [r["cell"] for r in batch.select("cell").distinct().collect()]
+    flagged = (
+        store.load(new_vecs.sparkSession, m_new.schema)
+        .filter(F.col("cell").isin(cells))
+        .join(batch.select("vec_id").distinct().withColumn("_new", F.lit(True)), "vec_id", "left")
+        .withColumn("_new", F.coalesce(F.col("_new"), F.lit(False)))
+    )
+    return _pair_scores_grouped(
+        flagged, ("cell",), threshold, "vec_id", "embedding", flag_col="_new"
     ).distinct()
-    if not replay:
-        store.append(m_new, run_id, input_files=input_files, partition_by=["cell"])
-    return pairs
 
 
 def ivf_assign_multi(

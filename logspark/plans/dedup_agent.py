@@ -14,10 +14,11 @@ so a concurrent ad-hoc tick or run cannot race the manifest commit:
      output, and uncommitted runs/<id> directories are GC'd;
   2. the step splits the pending files by the store's provenance
      (`committed_files()`): files already in the store (a crash after its
-     commit) are replayed against it with run_id None and no second
-     append; fresh files go through the incremental operator under the
-     run id, which appends them to the store (the store commit) before
-     the pairs are computed;
+     commit) are replayed against it with run_id None; fresh files go
+     through the incremental operator under the run id. Both operators
+     take one store step, `SignatureStore.ingest`: with the run id it
+     appends the batch (the store commit) and reads it back before the
+     pairs are computed; with None it appends nothing;
   3. the step writes the union of both pair sets under
      runs/<run_id>/pairs, counted by an `Observation` on that write, and
      returns the RunRecord (metrics: `n_pairs`, `replayed_files`) that
@@ -33,7 +34,9 @@ loop `pipeline.watch` uses.
 Per agent: the MinHash tick verifies candidates against the texts of
 `pending ∪ ingested` files only (its batch reads reuse that corpus read's
 schema); the embedding tick needs no corpus re-read (the store carries
-the vectors) and scores against centroids pinned by its first tick.
+the vectors), scores against centroids pinned by its first tick, and
+loads only the batch's cells of the store, with the batch schema, so its
+job count does not grow with the store's runs.
 
 Union-of-ticks == one-shot uncapped whole-corpus pairs (the incremental
 guarantee), so a corpus ingested file-by-file over days yields exactly
@@ -153,8 +156,7 @@ def dedup_tick(
             # footer-inference job
             batch = spark.read.schema(corpus.schema).parquet(*files)
             return incremental_near_dup_pairs(
-                store, batch, corpus, run_id, threshold=threshold,
-                replay=run_id is None, input_files=files,
+                store, batch, corpus, run_id, threshold=threshold, input_files=files
             )
 
         return pairs_of, {"corpus_files": sorted(corpus.inputFiles())}
@@ -207,7 +209,7 @@ def embed_dedup_tick(
         def pairs_of(files: list[str], run_id: str | None) -> DataFrame:
             return incremental_ivf_near_dups(
                 store, io.read_files(spark, table, files), cents, run_id,
-                threshold=threshold, input_files=files, replay=run_id is None,
+                threshold=threshold, input_files=files,
             )
 
         return pairs_of, {}

@@ -62,7 +62,6 @@ T = TypeVar("T")
 class BuiltPipeline:
     parsed: DataFrame  # after filter chain + enrich (pre-router, all events)
     routed: DataFrame  # one row per (event, sink)
-    counts: DataFrame  # (sink, conv_id, bucket, n)
     observation: Observation  # exact parse metrics: rows_in, parse_failures
 
 
@@ -94,9 +93,7 @@ def build(
         ).alias("parse_failures"),
     )
 
-    routed = route(parsed, cfg.output)
-    counts = sink_counts(routed, bucket=cfg.aggregate.get("bucket", "hour"))
-    return BuiltPipeline(parsed=parsed, routed=routed, counts=counts, observation=obs)
+    return BuiltPipeline(parsed=parsed, routed=route(parsed, cfg.output), observation=obs)
 
 
 def write_sinks(

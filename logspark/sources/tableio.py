@@ -33,7 +33,8 @@ class ParquetIO:
 
     base_dir: str
 
-    def _path(self, table: str) -> str:
+    def path(self, table: str) -> str:
+        """The table's directory or file: `<name>.parquet` if present, else `<name>`."""
         p = os.path.join(self.base_dir, f"{table}.parquet")
         return p if os.path.exists(p) else os.path.join(self.base_dir, table)
 
@@ -44,7 +45,7 @@ class ParquetIO:
         # listed through the schema-free binaryFile source: the same file
         # index as a parquet read (hidden files skipped, partition dirs
         # walked) without the footer job a schema-less parquet read runs
-        return sorted(spark.read.format("binaryFile").load(self._path(table)).inputFiles())
+        return sorted(spark.read.format("binaryFile").load(self.path(table)).inputFiles())
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
         w = df.write.mode(mode)

@@ -34,10 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from logspark.config import PipelineConfig
 from logspark.plans.pipeline import build, write_sinks
-
-TRANSCRIPTS_DDL = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-)
+from logspark.streaming.sources import stream_source
 
 
 def make_batch_processor(
@@ -75,17 +72,11 @@ def stream_pipeline(
     drains everything currently available and stops — the testable mode;
     False tails forever like the reference agent. `source` accepts any
     streaming DataFrame in the transcripts shape (see streaming.sources for
-    the socket/rate push-input builders); default is the file source over
-    `input_dir` — the tailed-directory case."""
-    if source is not None:
-        src = source
-    else:
-        src = (
-            spark.readStream.schema(TRANSCRIPTS_DDL)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(input_dir)
-        )
-
+    the socket/rate push-input builders); default is `stream_source`'s
+    file source over `input_dir` — the tailed-directory case."""
+    src = source if source is not None else stream_source(
+        spark, {"type": "file", "path": input_dir, "max_files_per_trigger": max_files_per_trigger}
+    )
     writer = src.writeStream.foreachBatch(
         make_batch_processor(cfg, sink_root, dims)
     ).option("checkpointLocation", checkpoint_dir)

@@ -24,9 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TRANSCRIPTS_DDL = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-)
+from logspark.datagen import TRANSCRIPTS_DDL
 
 
 def lines_to_transcripts(lines: DataFrame, codec: str = "json") -> DataFrame:

@@ -150,16 +150,19 @@ EMB_NEAR_DUP_STATE_DDL = "ids array<bigint>, vecs array<array<double>>"
 
 
 def _make_emb_near_dup_fn(threshold: float):
+    from logspark.operators.similarity import make_cell_scorer
+
+    score = make_cell_scorer(threshold)
+
     def _fn(key, pdfs, state):
         """One IVF cell per call. Unlike the MinHash variant (candidates
         only — the stored doc's TEXT has left the stream), embedding state
-        can carry the stored VECTORS, so pairs are VERIFIED in-stream:
-        emit (a, b, sim) with sim ≥ threshold, new×stored + new×new, and
-        append the new vectors."""
-        import numpy as np
+        can carry the stored VECTORS, so pairs are VERIFIED in-stream by
+        the batch path's own cell scorer: the stored rows go in unflagged
+        and the micro-batch's fresh rows flagged, so it emits (a, b, sim)
+        with sim ≥ threshold for new×stored + new×new, each pair once;
+        then the new vectors are appended to the state."""
         import pandas as pd
-
-        from logspark.functions.rounding import round_half_up6
 
         if state.exists:
             ids, vecs = state.get
@@ -168,43 +171,13 @@ def _make_emb_near_dup_fn(threshold: float):
         else:
             ids, vecs = [], []
         new = pd.concat(list(pdfs), ignore_index=True)
-        seen = set(ids)
         fresh = new.drop_duplicates("vec_id")
-        fresh = fresh[~fresh["vec_id"].isin(seen)].sort_values("vec_id")
+        fresh = fresh[~fresh["vec_id"].isin(set(ids))]
         new_ids = [int(i) for i in fresh["vec_id"]]
         new_vecs = [list(map(float, v)) for v in fresh["embedding"]]
-        out = []
-        if new_ids:
-            N = np.array(new_vecs, dtype=np.float64)
-            Nn = N / np.maximum(np.linalg.norm(N, axis=1, keepdims=True), 1e-300)
-            if ids:
-                O = np.array(vecs, dtype=np.float64)
-                On = O / np.maximum(np.linalg.norm(O, axis=1, keepdims=True), 1e-300)
-                S = Nn @ On.T
-                # HALF_UP like the batch path's F.round — then threshold
-                # on the ROUNDED value, mirroring ivf_near_dups' order of
-                # operations, so a sim at a rounding/threshold boundary
-                # lands on the same side in both paths (ADVICE r4). BLAS
-                # accumulation may still differ from the batch left fold
-                # by an ulp BEFORE rounding; only a sim whose shortest
-                # repr straddles a 6dp boundary within that ulp could
-                # diverge — documented, not observed in the equivalence
-                # property tests.
-                for i, nid in enumerate(new_ids):
-                    for j, oid in enumerate(ids):
-                        s = round_half_up6(float(S[i, j]))
-                        if s >= threshold:
-                            out.append((min(nid, oid), max(nid, oid), s))
-            S2 = Nn @ Nn.T
-            for i in range(len(new_ids)):
-                for j in range(i + 1, len(new_ids)):
-                    s = round_half_up6(float(S2[i, j]))
-                    if s >= threshold:
-                        out.append((new_ids[i], new_ids[j], s))
+        out = score(ids + new_ids, vecs + new_vecs, [False] * len(ids) + [True] * len(new_ids))
         state.update((ids + new_ids, vecs + new_vecs))
-        if not out:
-            return iter(())
-        return iter([pd.DataFrame(out, columns=["a", "b", "sim"])])
+        return iter([out] if len(out) else ())
 
     return _fn
 
@@ -225,10 +198,12 @@ def streaming_embedding_near_dups(
     offline with train_ivf_centroids; a drifting assignment would split
     buckets across time), and per-cell state carries the cell's (id,
     vector) members, so emitted pairs are already cosine-VERIFIED at
-    `threshold`. A pair co-occurring in both shared cells appears once per
-    cell with an identical rounded sim — distinct downstream, mirroring the
-    batch path's distinct. State per cell is O(members x dim); at
-    production k (thousands of cells) cells are small by construction."""
+    `threshold` by the batch path's scorer (`similarity.make_cell_scorer`),
+    sims bit-identical to `ivf_near_dups`. A pair co-occurring in both
+    shared cells appears once per cell with an identical sim — distinct
+    downstream, mirroring the batch path's distinct. State per cell is
+    O(members x dim); at production k (thousands of cells) cells are small
+    by construction."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from logspark.operators.similarity import ivf_assign_multi

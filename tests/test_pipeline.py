@@ -101,8 +101,10 @@ def test_json_codec_rows(run):
 
 
 def test_sink_counts_match_routed(run):
+    from logspark.operators.aggregates import sink_counts
+
     bp, routed = run
-    total_from_counts = {r["sink"]: r["total"] for r in bp.counts.groupBy("sink").agg(F.sum("n").alias("total")).collect()}
+    total_from_counts = {r["sink"]: r["total"] for r in sink_counts(bp.routed).groupBy("sink").agg(F.sum("n").alias("total")).collect()}
     total_from_routed = {r["sink"]: r["n"] for r in routed.groupBy("sink").agg(F.count("*").alias("n")).collect()}
     assert total_from_counts == total_from_routed
 
@@ -246,7 +248,6 @@ def test_run_crash_then_retry_equals_no_crash_run(spark, tiny_pdf, tmp_path, dim
     run_id=None takes the crashed run's "w-" + md5 id, returns the sink rows
     and metrics of a run that never crashed, and leaves runs/ holding
     exactly the manifest's run ids."""
-    import glob
     import hashlib
     import os
 
@@ -275,16 +276,8 @@ def test_run_crash_then_retry_equals_no_crash_run(spark, tiny_pdf, tmp_path, dim
         raise RuntimeError(f"crash {crash_site}")
 
     if crash_site == "after_routed_write":
-        # build() plans sink_counts too; only the call after the routed
-        # write, in write_sinks, crashes
-        real_counts = pipeline.sink_counts
-
-        def counts_or_crash(*args, **kwargs):
-            if glob.glob(os.path.join(sink_root, "runs", "w-*", "routed", "_SUCCESS")):
-                crash()
-            return real_counts(*args, **kwargs)
-
-        monkeypatch.setattr(pipeline, "sink_counts", counts_or_crash)
+        # write_sinks plans the counts only after the routed write
+        monkeypatch.setattr(pipeline, "sink_counts", crash)
     else:
         monkeypatch.setattr(pipeline.mf, "commit_run", crash)
     with pytest.raises(RuntimeError, match=f"crash {crash_site}"):

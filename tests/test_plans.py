@@ -385,3 +385,28 @@ def test_incremental_candidate_join_broadcasts_batch_streams_store(spark, tmp_pa
     assert streamed.count("FileScan") == 1 and "InMemoryFileIndex(2 paths)" in streamed, streamed
     assert "Exchange" not in streamed and "QueryStage" not in streamed, streamed
     assert plan.split("== Initial Plan ==")[0].count("FileScan") == 2, plan
+
+
+def test_verify_semi_join_broadcasts_candidate_ids_never_shuffles_corpus(spark, tmp_path):
+    """The Jaccard verify of an incremental run prunes the corpus to the
+    candidate-touched docs with the candidate id set broadcast: the corpus
+    scan streams straight into the semi-join, with no Exchange or
+    ShuffleQueryStage over it (a sort-merge plan shuffled the whole corpus
+    every tick before AQE turned it into a broadcast)."""
+    from logspark.operators import dedup
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    store = dedup.SignatureStore(str(tmp_path / "store"))
+    dedup.incremental_near_dup_pairs(store, docs.filter(F.col("doc_id") % 2 == 0), docs, run_id="r-0")
+    out = dedup.incremental_near_dup_pairs(store, docs.filter(F.col("doc_id") % 2 == 1), docs, run_id="r-1")
+    out.collect()  # runs the plan read below
+    plan = _plan(out)
+    assert not [ln for ln in plan.splitlines() if "SortMergeJoin" in ln and "LeftSemi" in ln], plan
+    semis = [j for j in _subtrees(plan, "BroadcastHashJoin") if "LeftSemi" in j[0]]
+    assert len(semis) == 1, plan
+    line, (streamed, build) = semis[0]
+    assert "BuildRight" in line, line
+    assert "BroadcastQueryStage" in build, build
+    # the corpus scan (the plan string truncates its path)
+    assert "ReadSchema: struct<doc_id:bigint,text:string>" in streamed, streamed
+    assert "Exchange" not in streamed and "QueryStage" not in streamed, streamed

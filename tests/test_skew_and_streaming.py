@@ -330,6 +330,37 @@ def test_cli_end_to_end(tmp_path):
     assert out["metrics"]["rows_in"] == n
 
 
+def test_cli_stream_reads_table_without_parquet_suffix(spark, tmp_path):
+    """`--stream` resolves the input table the way batch runs and
+    `--watch` do: a table stored as `<input_dir>/transcripts/` (no
+    `.parquet` suffix) streams through and lands in the routed sinks."""
+    n = 600
+    tbl = tmp_path / "in" / "transcripts"
+    tbl.mkdir(parents=True)
+    synth_transcripts(np.arange(n), n).to_parquet(
+        tbl / "part-0.parquet", coerce_timestamps="us", allow_truncated_timestamps=True,
+    )
+    cfg_path = tmp_path / "pipeline.json"
+    cfg = canonical_config()
+    cfg_path.write_text(json.dumps(
+        {"input": cfg.input, "filter": cfg.filter, "enrich": cfg.enrich,
+         "output": cfg.output, "aggregate": cfg.aggregate}
+    ))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, SPARK_GRAFT_CPUS="4")
+    proc = subprocess.run(
+        [sys.executable, "-m", "logspark", "--config", str(cfg_path),
+         "--input-dir", str(tmp_path / "in"), "--sink-root", str(tmp_path / "out"),
+         "--stream"],
+        capture_output=True, text=True, env=env, cwd=root, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == {"mode": "stream", "status": "drained"}
+    routed = spark.read.parquet(str(tmp_path / "out" / "routed"))
+    assert {r["sink"] for r in routed.select("sink").distinct().collect()} == {"parsed", "errors", "raw"}
+    assert routed.filter(F.col("sink") != "errors").count() == n
+
+
 def test_streaming_sessionize_matches_batch(spark, tmp_path):
     """Native session_window sessionization over a stream == the batch
     lag+running-sum form (operators/aggregates.sessionize) on the same

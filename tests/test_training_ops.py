@@ -312,24 +312,47 @@ def test_minhash_kernel_equals_reference_hypothesis():
     check()
 
 
-def test_minhash_kernel_runs_where_logspark_is_not_importable(tmp_path):
-    """The kernel ships to workers pickled by value: loaded in a Python
-    that cannot import logspark, it returns the same signatures."""
+def _cell_scorer_case():
+    """The cell scorer with a mixed-flag cell: ids out of order, a scaled
+    copy (cosine 1.0) and a close neighbour planted, flags on every third."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    vecs = [rng.standard_normal(8) for _ in range(30)]
+    vecs += [vecs[3] * 2.0, vecs[4] + 1e-3 * rng.standard_normal(8)]
+    ids = list(range(len(vecs)))[::-1]
+    flags = [i % 3 == 0 for i in ids]
+    return similarity.make_cell_scorer(0.2), (ids, vecs, flags)
+
+
+WORKER_KERNELS = {
+    "minhash_kernel": lambda: (
+        dedup._make_minhash_kernel(MH_COEFFS, 3),
+        (_text_series(KERNEL_BATCHES["repeats_nulls_short_unicode"]),),
+    ),
+    "cell_scorer": _cell_scorer_case,
+}
+
+
+@pytest.mark.parametrize("name", sorted(WORKER_KERNELS))
+def test_kernel_runs_where_logspark_is_not_importable(tmp_path, name):
+    """Each worker kernel ships to workers pickled by value: loaded in a
+    Python that cannot import logspark, it returns the same frame."""
     import pickle
     import subprocess
     import sys
 
+    import pandas as pd
     from pyspark import cloudpickle
 
-    texts = KERNEL_BATCHES["repeats_nulls_short_unicode"]
-    kernel = dedup._make_minhash_kernel(MH_COEFFS, 3)
+    kernel, args = WORKER_KERNELS[name]()
     payload = tmp_path / "kernel.pkl"
-    payload.write_bytes(cloudpickle.dumps((kernel, _text_series(texts))))
+    payload.write_bytes(cloudpickle.dumps((kernel, args)))
     script = (
         "import importlib.util, pickle, sys\n"
         "assert importlib.util.find_spec('logspark') is None, sys.path\n"
-        "kernel, s = pickle.loads(open(sys.argv[1], 'rb').read())\n"
-        "sys.stdout.buffer.write(pickle.dumps(kernel(s)))\n"
+        "kernel, args = pickle.loads(open(sys.argv[1], 'rb').read())\n"
+        "sys.stdout.buffer.write(pickle.dumps(kernel(*args)))\n"
         "assert 'logspark' not in sys.modules\n"
     )
     # -I: no PYTHONPATH, no script or working directory on sys.path
@@ -339,7 +362,24 @@ def test_minhash_kernel_runs_where_logspark_is_not_importable(tmp_path):
         capture_output=True,
         check=True,
     )
-    assert _kernel_rows(pickle.loads(proc.stdout)) == _kernel_rows(kernel(_text_series(texts)))
+    want = kernel(*args)
+    assert len(want)
+    pd.testing.assert_frame_equal(pickle.loads(proc.stdout), want)
+
+
+def test_cell_scorer_flags_select_pairs_with_a_flagged_member_once():
+    """With flags, the scorer emits exactly the unflagged run's pairs that
+    have a flagged member, each once; without, every a < b pair once."""
+    scorer, (ids, vecs, flags) = _cell_scorer_case()
+    every = list(scorer(ids, vecs).itertuples(index=False, name=None))
+    flagged_ids = {i for i, f in zip(ids, flags) if f}
+    got = list(scorer(ids, vecs, flags).itertuples(index=False, name=None))
+    want = [t for t in every if t[0] in flagged_ids or t[1] in flagged_ids]
+    assert sorted(got) == sorted(want) and want
+    assert len(set(got)) == len(got)
+    assert all(a < b for a, b, _ in every) and len({(a, b) for a, b, _ in every}) == len(every)
+    assert (1, 28, 1.0) in every  # vecs[30] (id 1) is 2 x vecs[3] (id 28)
+    assert not list(scorer(ids, vecs, [False] * len(ids)).itertuples())
 
 
 def test_simhash_bands_integer_keys(spark):
@@ -1136,8 +1176,9 @@ def test_incremental_ivf_near_dups_equals_one_shot(spark, emb, tmp_path):
     ingested batch-by-batch into a cell-partitioned store yield, as the
     union of per-run pairs, EXACTLY the one-shot ivf_near_dups pair set
     (same fixed centroids, sims bit-identical); the store scan is pruned
-    to the new batch's cells (PartitionFilters in the plan); replay
-    recomputes a run's pairs without re-appending."""
+    to the new batch's cells (PartitionFilters in the plan); a replay
+    (run_id None) recomputes a run's pairs without re-appending, and a
+    replay against an empty store is refused."""
     from logspark.operators.dedup import SignatureStore
 
     C = similarity.head_centroids(emb, 6).localCheckpoint(eager=True)
@@ -1174,16 +1215,20 @@ def test_incremental_ivf_near_dups_equals_one_shot(spark, emb, tmp_path):
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"PartitionFilters: \[cell#\d+ IN \(0,1\)\]", plan)) == 3
 
-    # crash replay: same pairs, no duplicate vectors in the store
+    # crash replay (run_id None): same pairs, no duplicate vectors in the store
     p2 = {
         (r["a"], r["b"], r["sim"])
         for r in similarity.incremental_ivf_near_dups(
-            store, batches[2], C, run_id="r2", replay=True, threshold=0.35
+            store, batches[2], C, run_id=None, threshold=0.35
         ).collect()
     }
     assert p2 == per_run[2]
     rows = store.load(spark).groupBy("vec_id", "cell").count().collect()
     assert all(r["count"] == 1 for r in rows)
+    with pytest.raises(ValueError, match="empty signature store"):
+        similarity.incremental_ivf_near_dups(
+            SignatureStore(str(tmp_path / "empty")), batches[0], C, run_id=None
+        )
 
 
 def test_embed_dedup_agent_ticks_equal_one_shot(spark, emb, tmp_path, monkeypatch):
@@ -1245,6 +1290,36 @@ def test_embed_dedup_agent_ticks_equal_one_shot(spark, emb, tmp_path, monkeypatc
     }
     got = {(r["a"], r["b"]) for r in dedup_agent.all_pairs(spark, sink).collect()}
     assert got == one and one
+
+
+def test_embed_dedup_tick_jobs_do_not_grow_with_store_runs(spark, emb, tmp_path):
+    """An embedding tick loads the store with the batch's schema, so it
+    runs as many Spark jobs against a 4-run store as against a 1-run one
+    (a schema-less load of a partitioned store ran one footer-inference
+    job per run)."""
+    from logspark.operators.dedup import SignatureStore
+    from logspark.plans import dedup_agent
+    from logspark.sources.tableio import ParquetIO
+
+    pdf = emb.toPandas().sort_values("vec_id").reset_index(drop=True)
+    n, k = len(pdf), 5
+    tbl = tmp_path / "in" / "vecs"
+    tbl.mkdir(parents=True)
+    io = ParquetIO(str(tmp_path / "in"))
+    sink = str(tmp_path / "eagent")
+    sc = spark.sparkContext
+    jobs = []
+    for i in range(k):
+        pdf.iloc[i * n // k : (i + 1) * n // k].to_parquet(tbl / f"f{i}.parquet")
+        group = f"embed-tick-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            assert dedup_agent.embed_dedup_tick(spark, io, "vecs", sink, threshold=0.35)["run_id"]
+        finally:
+            sc.setJobGroup(None, None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert len(SignatureStore(f"{sink}/vstore").committed_runs()) == k
+    assert jobs[1] == jobs[-1], jobs  # ticks against stores of 1 and 4 runs
 
 
 def test_watch_embed_dedup_with_compaction_and_pin_crash(spark, emb, tmp_path, monkeypatch):
